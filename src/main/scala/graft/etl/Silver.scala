@@ -138,11 +138,14 @@ object Silver {
       }
     val grand =
       if (present.size == cfg.likertColumns.size)
-        Map("5DW Score: Everything" ->
+        Seq("5DW Score: Everything" ->
           round(present.map(col).reduce(_ + _) / lit(present.size), 2))
-      else Map.empty[String, org.apache.spark.sql.Column]
+      else Nil
+    // ListMap appends the columns in the config's declaration order; a
+    // Map past four entries is a HashMap, whose order is arbitrary
     val all = domains ++ grand
-    if (all.isEmpty) scored else scored.withColumns(all.toMap)
+    if (all.isEmpty) scored
+    else scored.withColumns(scala.collection.immutable.ListMap(all: _*))
   }
 
   /** Categorical recodes (ref transform_alchemer_data.py:80-196) as ONE

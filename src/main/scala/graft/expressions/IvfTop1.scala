@@ -96,12 +96,13 @@ case class IvfTop1(first: Expression, second: Expression, third: Expression)
   * identical (negsim, cent_id) ordering, head always == top-1) as
   * `array<bigint>`, with the same serialized-index artifact, the same
   * O(1)-in-k plan size, and the same group pruning generalized to a
-  * P-deep candidate set. Built for the two-level semantic branch's L1
-  * multi-probe (the r17 nd-fixture probes attributed its recall loss to
-  * L1 hard assignment); the naive alternative — sort_array over k
-  * literal cell structs — is what made the first multi-probe frontier
-  * measurement 13× instead of ~4×. `p` is a literal constructor
-  * parameter (the CellPairs pattern), so codegen stays branch-free. */
+  * P-deep candidate set. Every IVF probe side assigns its cells with it
+  * (ivfTopK, ivfPqTopK, probeIvfIndexTopK, the two-level L1
+  * multi-probe); the naive alternative — sort_array over k literal cell
+  * structs — generated code that grows with k × dims, and made the
+  * first multi-probe frontier measurement 13× instead of ~4×. `p` is a
+  * literal constructor parameter (the CellPairs pattern), so codegen
+  * stays branch-free. */
 case class IvfTopP(first: Expression, second: Expression, third: Expression,
     p: Int) extends TernaryExpression {
 

@@ -211,7 +211,7 @@ object Similarity {
     * Deterministic and engine-replayable by construction, so an external
     * SQL oracle can replay training exactly:
     *  - init = the first `centroids` vectors by id (no RNG);
-    *  - assignment = the same narrow broadcast-literal argmax
+    *  - assignment = the same narrow argmax kernel
     *    [[ivfTopK]] uses (cosine desc, ties cent_id asc), a map-only stage;
     *  - the new centroid mean is computed in FIXED POINT: per dimension,
     *    sum(floor(x·2^20)) as long → exact, order-independent — then one
@@ -273,22 +273,6 @@ object Similarity {
     cb
   }
 
-  /** IVF-style approximate top-k: vectors partition into coarse cells
-    * (nearest centroid by cosine), probes search only their `nprobe`
-    * closest cells. The codebook (`centroids` vectors) is tiny — pulled to
-    * the driver once and inlined as literals, so cell assignment is a
-    * NARROW per-row expression: build `array<struct<negsim, cent_id>>`,
-    * `sort_array` (ascending negsim = cosine desc, ties cent_id asc — the
-    * exact ordering the oracle's row_number replays), `slice` the best
-    * `keep`, `explode`. No row amplification, no argmax shuffle; the only
-    * exchange in the whole job is above the probe join. At 100 TB that is
-    * the difference between a map stage and shuffling a 16×-amplified
-    * corpus. Centroids default to the first `centroids` vectors; pass
-    * [[trainCodebook]]'s output for a k-means codebook — the plan shape is
-    * identical either way. */
-  /** Default coarse codebook: the first `centroids` vectors by id — one
-    * tiny driver fetch (centroids × dims doubles), a model artifact, not
-    * data; same role as the literal hyperplanes in LSH. */
   /** Public form of [[coarseCodebook]] for callers that manage a
     * persisted index lifecycle (freeze at build, reuse on append/probe). */
   def coarseCodebookOf(
@@ -296,6 +280,9 @@ object Similarity {
       centroids: Int = 16): Array[(Long, Seq[Double], Double)] =
     coarseCodebook(withNorm(emb, vecCol), idCol, centroids)
 
+  /** Default coarse codebook: the first `centroids` vectors by id — one
+    * tiny driver fetch (centroids × dims doubles), a model artifact, not
+    * data; same role as the literal hyperplanes in LSH. */
   private def coarseCodebook(
       base: DataFrame, idCol: String, centroids: Int): Array[(Long, Seq[Double], Double)] =
     base.filter(col(idCol) < centroids)
@@ -304,22 +291,9 @@ object Similarity {
       .map(r => (r.getLong(0), r.getSeq[Double](1), r.getDouble(2)))
       .sortBy(_._1)
 
-  /** Ranked-cells column: `array<struct<negsim, cent_id>>` sorted
-    * ascending (= cosine desc, ties cent_id asc — the exact ordering the
-    * oracle's row_number replays). A narrow per-row expression over the
-    * broadcast-literal codebook — cell assignment never shuffles. */
-  private def cellStructs(codebook: Array[(Long, Seq[Double], Double)]): Array[Column] =
-    codebook.map {
-      case (cid, vec, nrm) =>
-        val sim = dot(col("__vd"), typedlit(vec)) / (col("__norm") * lit(nrm))
-        struct((-sim).as("negsim"), lit(cid).as("cent_id"))
-    }
-
-  private def cellsRankedCol(codebook: Array[(Long, Seq[Double], Double)]): Column =
-    sort_array(array(cellStructs(codebook): _*))
-
-  /** Top-1 cell struct via [[graft.expressions.IvfTop1]] — bit-identical
-    * to `array_min` over [[cellStructs]] (same dot fold, same norm
+  /** Top-1 cell struct `struct<negsim, cent_id>` via
+    * [[graft.expressions.IvfTop1]] — bit-identical to `array_min` over one
+    * `struct(-cosine, cent_id)` per cell (same dot fold, same norm
     * product, same nan-safe (negsim, cent_id) ordering; pinned by
     * IvfTop1Spec), but ONE expression holding the codebook as a
     * serialized primitive-array artifact instead of k literal subtrees:
@@ -337,17 +311,39 @@ object Similarity {
       col("__vd"), col("__norm"))
   }
 
-  /** Top-P cent_ids (best first; head == [[cellTop1Col]]'s cent_id) via
-    * the same pruned-index artifact — the multi-probe assignment column
-    * (see [[graft.expressions.IvfTopP]]). */
+  /** Top-`p` cent_ids, best first, as `array<bigint>` via
+    * [[graft.expressions.IvfTopP]] — the multi-probe assignment column
+    * every IVF probe side uses. Same artifact and ordering as
+    * [[cellTop1Col]] (the head is its cent_id); equal to the first `p`
+    * of `sort_array` over every cell's (negsim, cent_id) struct, pinned
+    * by IvfTopPSpec. `probeGroups = 0` is the exact path. */
   private def cellTopPCol(codebook: Array[(Long, Seq[Double], Double)],
-      probeGroups: Int, p: Int): Column = {
+      p: Int, probeGroups: Int = 0): Column = {
     val idx = graft.expressions.IvfPrunedIndex.build(codebook, probeGroups)
     call_function("graft_ivf_topp",
       lit(graft.expressions.IvfPrunedIndex.serialize(idx)),
       col("__vd"), col("__norm"), lit(p))
   }
 
+  /** IVF-style approximate top-k: vectors partition into coarse cells
+    * (nearest centroid by cosine), probes search only their `nprobe`
+    * closest cells. The codebook (`centroids` vectors) is tiny — pulled to
+    * the driver once and shipped as one serialized index literal, so cell
+    * assignment is a NARROW per-row kernel call ([[cellTopPCol]]: the best
+    * `keep` cells by cosine desc, ties cent_id asc — the exact ordering
+    * the oracle's row_number replays), then `explode`. No row
+    * amplification, no argmax shuffle; the only exchange in the whole job
+    * is above the probe join. At 100 TB that is the difference between a
+    * map stage and shuffling a 16×-amplified corpus. Centroids default to
+    * the first `centroids` vectors; pass [[trainCodebook]]'s output for a
+    * k-means codebook — the plan shape is identical either way.
+    *
+    * Zero vectors: cell assignment follows the kernel's contract — a
+    * zero (or NaN) norm gives NaN sims for every cell, so the vector
+    * lands in the lowest cent_id(s). The sorted literal-tree form this
+    * replaced raised DIVIDE_BY_ZERO under ANSI instead. Exact scoring
+    * still divides by both norms, so a zero-vector probe, or a zero
+    * vector inside a probed cell, still fails under ANSI. */
   def ivfTopK(
       emb: DataFrame, idCol: String, vecCol: String,
       probePred: Column, k: Int, centroids: Int = 16, nprobe: Int = 4,
@@ -355,17 +351,14 @@ object Similarity {
     val base = withNorm(emb, vecCol)
     val codebook = codebookOpt.getOrElse(coarseCodebook(base, idCol, centroids))
     require(codebook.nonEmpty, "ivfTopK: empty codebook")
-    val cellsRanked = cellsRankedCol(codebook)
     def cellAssign(df: DataFrame, keep: Int): DataFrame =
-      df.withColumn("__cand", explode(slice(cellsRanked, 1, keep)))
-        .withColumn("cent_id", col("__cand.cent_id"))
-        .drop("__cand")
+      df.withColumn("cent_id", explode(cellTopPCol(codebook, keep)))
     // docs side keeps the keep=1 Generate BARRIER (not an inlined
     // cellTop1Col): without it CollapseProject re-evaluates the argmax in
     // the pushed isnotnull filter and the join key — measured 1.4-2x on
-    // sim_topk_ivf*. The sort is trivial at the fixed 16 cells here; the
-    // corpus-scaled callers (knnGraph, semanticClustered, writeIvfIndex)
-    // use cellTop1Col because an exchange/write barrier follows anyway.
+    // sim_topk_ivf*. The corpus-scaled callers (knnGraph,
+    // semanticClustered, writeIvfIndex) use cellTop1Col because an
+    // exchange/write barrier follows anyway.
     val assigned = cellAssign(base, 1)
       .select(col(idCol), col("cent_id"), col("__vd"), col("__norm"))
     val probes = cellAssign(base.filter(probePred), nprobe).select(
@@ -567,7 +560,7 @@ object Similarity {
     require(cb.head.nonEmpty,
       s"pqTopK: empty sub-codebook — no ids < $cents in $idCol")
     // Generate barrier (explode of a 1-element array): without it,
-    // CollapseProject inlines the sort_array encode into every per-PAIR
+    // CollapseProject inlines the PQ encode into every per-PAIR
     // lookup below the cross join — per-doc work amplified to per-pair
     // (measured 4×). The barrier materializes codes once per doc.
     val encoded = base
@@ -586,15 +579,15 @@ object Similarity {
 
   /** IVF-gated PQ — the standard production ANN stack at 100 TB, composed
     * from the two halves above UNCHANGED: [[ivfTopK]]'s narrow
-    * broadcast-literal cell routing bounds the candidate set to the
+    * cell-assignment kernel bounds the candidate set to the
     * probe's `nprobe` cells, and [[pqTopK]]'s code/LUT columns score those
     * candidates by asymmetric distance (codes instead of floats). You
     * quantize because n is huge — and then you must not scan all n per
     * probe; this removes [[pqTopK]]'s all-docs candidate set.
     *
     * Plan shape: the doc side is ONE Generate barrier materializing
-    * (cell id, PQ codes) per doc — both the cell argmax and the encode
-    * are narrow broadcast-literal expressions, so below the probe join
+    * (cell id, PQ codes) per doc — the cell argmax and the encode are
+    * narrow kernel calls over literal model artifacts, so below the probe join
     * the job is a pure map of the scan. Probes broadcast with their
     * per-row LUTs; the join is a broadcast HASH join on cent_id (never a
     * nested loop over the corpus — pinned in PlanSpec). Per (probe, doc)
@@ -620,7 +613,6 @@ object Similarity {
     val base = withNorm(emb, vecCol)
     val codebook = codebookOpt.getOrElse(coarseCodebook(base, idCol, centroids))
     require(codebook.nonEmpty, "ivfPqTopK: empty coarse codebook")
-    val cellsRanked = cellsRankedCol(codebook)
     val d0 = if (dims > 0) dims else embeddingDims(emb, vecCol)
     require(d0 > 0 && d0 % subspaces == 0,
       s"ivfPqTopK: dims $d0 not divisible into $subspaces subspaces (empty input?)")
@@ -644,10 +636,8 @@ object Similarity {
     // BELOW the Generate (computed once per probe, replicated per cell)
     val probes = base.filter(probePred).select(
       (col(idCol).as("probe_id") +:
-        explode(slice(cellsRanked, 1, nprobe)).as("__cand") +:
+        explode(cellTopPCol(codebook, nprobe)).as("cent_id") +:
         (0 until subspaces).map(s => pqLutCol(cb, s, width).as(s"lut$s"))): _*)
-      .select((col("probe_id") +: col("__cand.cent_id").as("cent_id") +:
-        (0 until subspaces).map(s => col(s"lut$s"))): _*)
     encoded.join(broadcast(probes), Seq("cent_id"))
       .filter(col("probe_id") =!= col(idCol))
       .withColumn("score_r", round(pqApproxDot(subspaces), 6))
@@ -753,9 +743,8 @@ object Similarity {
       codebook: Array[(Long, Seq[Double], Double)], nprobe: Int = 4): DataFrame = {
     val spark = probeSrc.sparkSession
     val probes = withNorm(probeSrc, vecCol).filter(probePred)
-      .withColumn("__cand", explode(slice(cellsRankedCol(codebook), 1, nprobe)))
-      .select(col(idCol).as("probe_id"),
-        col("__cand.cent_id").cast("int").as("cent_id"),
+      .withColumn("cent_id", explode(cellTopPCol(codebook, nprobe)))
+      .select(col(idCol).as("probe_id"), col("cent_id").cast("int").as("cent_id"),
         col("__vd").as("__pd"), col("__norm").as("__pn"))
     val probedCells = probes.select("cent_id").distinct()
       .collect().map(_.getInt(0)).sorted
@@ -1011,7 +1000,7 @@ object Similarity {
       if (l1Probes <= 1) base
       else withNorm(emb, vecCol)
         .withColumn("__l1",
-          explode(cellTopPCol(l1Codebook, probeGroups, l1Probes)))
+          explode(cellTopPCol(l1Codebook, l1Probes, probeGroups)))
         .select(col(idCol), col(vecCol), col("__l1"), col("__vd"),
           col("__norm"))
     assignOn(finalRows, cents)

@@ -46,21 +46,6 @@ object TextOps {
   def shingles(words: Column, k: Int): Column =
     array_distinct(allShingles(words, k))
 
-  /** One minhash signature: lexicographic min of seed-salted md5 over the
-    * shingle set. String-min is portable across engines (ASCII hex). */
-  def minhashSig(shingleCol: Column, seed: Int): Column =
-    array_min(transform(shingleCol, s => md5(concat(lit(s"h$seed:"), s))))
-
-  /** LSH band keys: md5 of the concatenated signature rows in each band.
-    * numHashes must be divisible by bands. */
-  def bandKeys(sigs: Seq[Column], bands: Int): Column = {
-    require(sigs.size % bands == 0, "numHashes must divide into bands")
-    val rows = sigs.size / bands
-    array((0 until bands).map { b =>
-      md5(concat_ws("|", sigs.slice(b * rows, (b + 1) * rows): _*))
-    }: _*)
-  }
-
   /** Non-distinct k-word shingles — frequencies matter here, unlike
     * [[shingles]]: repetition scoring needs every occurrence. Native
     * kernel ([[graft.expressions.AllShingles]]): the composable

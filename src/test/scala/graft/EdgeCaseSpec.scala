@@ -117,6 +117,37 @@ class EdgeCaseSpec extends SparkSpec {
     }
   }
 
+  test("IVF zero vectors take the kernel's NaN contract (lowest cent_ids), " +
+    "not ANSI DIVIDE_BY_ZERO in cell assignment") {
+    import graft.operators.Similarity
+    // three clusters along dims 0, 2, 4; ids 0-2 seed the codebook (one
+    // per cluster, cent_id = id) and id 99 is the zero vector
+    val vecs = (0L until 12L).map { id =>
+      val c = (id % 3).toInt
+      (id, Array.tabulate(8)(i =>
+        if (i == 2 * c) 10f + id else if (i == 7) 1f else 0f))
+    }
+    val emb = (vecs :+ ((99L, Array.fill(8)(0f)))).toDF("vec_id", "embedding")
+    // ivfTopK: the zero doc lands in cell 0, which no probe visits here
+    // (nprobe = 1, probes sit in cells 1 and 2), so results are exactly
+    // those of the corpus without it
+    def ivf(df: org.apache.spark.sql.DataFrame) =
+      Similarity.ivfTopK(df, "vec_id", "embedding",
+        col("vec_id").isin(1L, 2L), 3, centroids = 3, nprobe = 1)
+        .orderBy("probe_id", "rank").collect().toSeq
+    val withZero = ivf(emb)
+    assert(withZero.nonEmpty)
+    assert(withZero == ivf(vecs.toDF("vec_id", "embedding")))
+    // ivfPqTopK: the zero PROBE gets NaN sims for every cell, so it
+    // probes the two lowest cent_ids (cells 0 and 1); every ADC score is
+    // 0.0 and ties rank id asc
+    val pq = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
+      col("vec_id") === 99L, 3, centroids = 3, nprobe = 2,
+      subspaces = 4, cents = 4)
+      .orderBy("rank").as[(Long, Long, Int, Double)].collect().toSeq
+    assert(pq == Seq((99L, 0L, 1, 0.0), (99L, 1L, 2, 0.0), (99L, 3L, 3, 0.0)))
+  }
+
   test("scd2: empty change set leaves every key a single open version") {
     import graft.operators.Scd
     val target = Seq((1L, "a", 1.0), (2L, "b", 2.0)).toDF("id", "name", "bal")

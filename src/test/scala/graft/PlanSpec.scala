@@ -360,4 +360,31 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     assert(!pq.contains("array_min"),
       "sim_topk_pq regressed to the array_min struct-tree encode")
   }
+
+  test("IVF cell assignment stays fused: one kernel call, never a sorted " +
+    "tree of per-centroid literal structs") {
+    // the pre-fusion form built sort_array(array(struct(negsim, cent_id)))
+    // over one 64-double literal per centroid; its generated class grew
+    // with k × dims (48.8 KB for sim_topk_ivf_trained's stage)
+    val cellTree = "sort_array\\(array\\(named_struct\\(negsim".r
+    Seq("sim_topk_ivf", "sim_topk_ivf_trained", "sim_topk_ivfpq",
+      "sim_topk_ivfpq_refined", "sim_topk_ivf_pruned").foreach { q =>
+      val plan = planOf(q).toString
+      assert(plan.contains("graft_ivf_topp"), s"$q: fused IVF kernel missing")
+      assert(cellTree.findFirstIn(plan).isEmpty,
+        s"$q regressed to the sort_array cell-struct tree")
+    }
+    val df = SparkEntry.queries("sim_topk_ivf_trained")(spark, d)
+    df.collect()
+    val stages = collectWithSubqueries(df.queryExecution.executedPlan) {
+      case w: org.apache.spark.sql.execution.WholeStageCodegenExec => w
+    }
+    assert(stages.nonEmpty, "expected whole-stage codegen stages")
+    stages.foreach { w =>
+      val chars = w.doCodeGen()._2.body.length
+      assert(chars < 16 * 1024,
+        s"sim_topk_ivf_trained codegen stage ${w.codegenStageId} is " +
+          s"$chars chars of source")
+    }
+  }
 }

@@ -210,6 +210,19 @@ class SurveyPipelineSpec extends SparkSpec {
     assert(!out.columns.contains("Is_Invalid")) // validity inputs absent
   }
 
+  test("5DW score columns append in the config's declaration order") {
+    import org.apache.spark.sql.types.{StringType, StructField, StructType}
+    val kingston = SurveyConfig.kingston
+    val likert = kingston.likertColumns
+    val row = spark.createDataFrame(
+      java.util.List.of(Row.fromSeq("1" +: likert.map(_ => "A little better"))),
+      StructType(("Response ID" +: likert).map(StructField(_, StringType))))
+    val out = Silver.transform(row, kingston)
+    val expected = kingston.likertColumnsDict.map(_._1) :+ "5DW Score: Everything"
+    assert(out.columns.filter(_.startsWith("5DW Score: ")).toSeq == expected)
+    assert(out.select(expected.map(col): _*).head().toSeq.forall(_ == 1.0))
+  }
+
   test("export discovers and writes city tables as single json+csv files") {
     val dir = java.nio.file.Files.createTempDirectory("gold").toString
     Seq(("Gender", "Male", 2L)).toDF("Demographic", "Category", "n")

@@ -27,12 +27,52 @@ Flags, mirroring the in-bench gate (Bench.scala):
 
 Exit code 1 when any REGRESSION or GONE exists (NEW alone is fine —
 a freshly added query simply has no baseline yet).
+
+Per-step mode: python3 tools/bench_diff.py --steps A.json B.json
+
+Reads `stamp.step_median_s` from two perfbench result files
+(.bench_build/results/<workload>-seed<n>-trace<t>.json), prints each
+step's median wall time in A and B with the delta, then step_p50_s
+(the median over steps) on each side with the step(s) that set it, so
+a step_p50_s move names the step behind it. Always exits 0.
 """
 import json
+import statistics
 import sys
 
 
+def median_steps(medians: dict) -> list:
+    """The step(s) whose median wall time is step_p50_s: one for an odd
+    step count, the two middle ones for an even count."""
+    order = sorted(medians, key=medians.get)
+    mid = len(order) // 2
+    return order[mid:mid + 1] if len(order) % 2 else order[mid - 1:mid + 1]
+
+
+def steps_diff(a_path: str, b_path: str) -> int:
+    a = json.load(open(a_path))["stamp"]["step_median_s"]
+    b = json.load(open(b_path))["stamp"]["step_median_s"]
+    names = list(a) + [n for n in b if n not in a]
+    width = max(len(n) for n in names)
+    print(f"{'step':<{width}}  {'A (s)':>8}  {'B (s)':>8}  {'delta (s)':>9}")
+    for name in names:
+        ta, tb = a.get(name), b.get(name)
+        cells = ["-" if t is None else f"{t:.3f}" for t in (ta, tb)]
+        delta = (f"{tb - ta:+.3f}" if ta is not None and tb is not None
+                 else f"only in {'A' if tb is None else 'B'}")
+        print(f"{name:<{width}}  {cells[0]:>8}  {cells[1]:>8}  {delta:>9}")
+    for label, m in (("A", a), ("B", b)):
+        print(f"step_p50_s {label}: {statistics.median(m.values()):.3f}s "
+              f"(set by {', '.join(median_steps(m))})")
+    return 0
+
+
 def main() -> int:
+    if len(sys.argv) > 1 and sys.argv[1] == "--steps":
+        if len(sys.argv) != 4:
+            print("usage: bench_diff.py --steps A.json B.json", file=sys.stderr)
+            return 2
+        return steps_diff(sys.argv[2], sys.argv[3])
     run_path = sys.argv[1] if len(sys.argv) > 1 else "BENCH_LOCAL.json"
     base_path = sys.argv[2] if len(sys.argv) > 2 else "BENCH_BASELINE_PERQ.json"
     run = json.load(open(run_path))
