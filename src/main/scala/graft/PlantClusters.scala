@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Near-dup-structured embeddings fixture (r16 verdict item 3): the
@@ -88,14 +88,7 @@ object PlantClusters {
     val perTier = args.lift(3).map(_.toInt).getOrElse(32)
     val members = args.lift(4).map(_.toInt).getOrElse(8)
     require(members <= PlantStride, s"members must fit the id stride")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     val emb = spark.read.parquet(s"$srcDir/embeddings.parquet")
     val dim = emb.select(size(col("embedding"))).head().getInt(0)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic scale-up of the driver's test fixtures: tiles each fact
@@ -114,14 +114,7 @@ object ScaleUp {
     val perms = Lower +: (1 until factor).map(permuted)
     require(perms.distinct.size == factor,
       s"letter-permutation collision within factor=$factor")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
 
     def sel(t: String): Boolean = only.forall(_.contains(t))
     def read(t: String): DataFrame = spark.read.parquet(s"$srcDir/$t.parquet")

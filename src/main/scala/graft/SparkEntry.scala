@@ -22,6 +22,19 @@ object SparkEntry {
       graft.queries.EtlQueries.queries ++ graft.queries.Analytics.queries ++
       graft.queries.TimeSeriesQueries.queries ++ graft.queries.Extended.queries ++
       graft.queries.CurationOps.queries ++ graft.queries.StreamingQueries.queries
+  /** The queries whose names the regex `filter` finds (`findFirstIn`, so
+    * anchor it to pick exact names), or all of them, sorted by name:
+    * `queries` is a hash map, and iterating it unordered let *which*
+    * query inherits a contaminated session vary between JVMs (r7/r9).
+    * Throws when nothing matches, so a mistyped filter cannot pass as
+    * an empty run. */
+  def select(filter: Option[String]): Seq[(String, (SparkSession, String) => DataFrame)] = {
+    val re = filter.map(_.r)
+    val picked = queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => re.forall(_.findFirstIn(name).isDefined) }
+    require(picked.nonEmpty, s"query filter matched nothing: ${filter.getOrElse("")}")
+    picked
+  }
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,32 +7,21 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: regex over query names — local iteration only
     // (the driver always passes exactly two args → full battery)
-    val nameFilter = args.lift(2).map(_.r)
-    def selected(name: String): Boolean =
-      nameFilter.forall(_.findFirstIn(name).isDefined)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val selected = SparkEntry.select(args.lift(2))
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (selected(name)) {
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        }
-        // scratch barrier: operators that persist (registered scratch —
-        // dedup pair tables, basketPairs' eager output) would otherwise
-        // accumulate blocks across the 200+ query battery; each query's
-        // result is fully written by here, so dropping is always safe
-        // (plain persists recompute from live lineage).
-        graft.operators.Dedup.releaseScratch(spark)
+    selected.foreach { case (name, fn) =>
+      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+      catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
+      // scratch barrier: operators that persist (registered scratch —
+      // dedup pair tables, basketPairs' eager output) would otherwise
+      // accumulate blocks across the 200+ query battery; each query's
+      // result is fully written by here, so dropping is always safe
+      // (plain persists recompute from live lineage).
+      graft.operators.Dedup.releaseScratch(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -47,9 +35,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => selected(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val oracle = SparkEntry.oracleSql
+    val json = selected.flatMap { case (k, _) => oracle.get(k).map(v => s"${q(k)}: ${q(v)}") }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

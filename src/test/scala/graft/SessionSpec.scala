@@ -1,0 +1,63 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+
+/** The one session factory, the single-query probe that runs on it, and
+  * the guard that keeps session building in one place. */
+class SessionSpec extends SparkSpec {
+
+  private val Sf = "/root/testdata/sf0.001"
+
+  test("the shared test session is built through Session") {
+    val conf = spark.sparkContext.getConf
+    assert(conf.get("spark.master") == "local[2]")
+    assert(spark.conf.get("spark.sql.session.timeZone") == "UTC")
+    assert(conf.get("spark.ui.enabled") == "false")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") == "2")
+    assert(conf.get("spark.cleaner.periodicGC.interval") == "2min")
+  }
+
+  test("only graft/Session.scala builds a SparkSession in src/main") {
+    val root = Paths.get("src/main/scala")
+    val builders = Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder"))
+      .map(root.relativize(_).toString).toSeq
+    assert(builders == Seq("graft/Session.scala"))
+  }
+
+  test("Probe bench-one, profile and explain run on a given session and leave it running") {
+    assume(new java.io.File(s"$Sf/customer.parquet").exists())
+    val rows = SparkEntry.queries("a1_group_count")(spark, Sf).count()
+    val bench = Probe.run(spark, "bench-one", "a1_group_count", 1, Sf)
+    assert(bench.startsWith("""{"query":"a1_group_count","samples":["""), bench)
+    assert(bench.contains(""""construct":[""") && bench.contains(""""execute":["""), bench)
+    assert(bench.contains(s""""rows":$rows,"""), bench)
+    val profile = Probe.run(spark, "profile", "a1_group_count", 1, Sf)
+    assert(profile.contains(s", $rows rows, "), profile)
+    assert(profile.contains("driver gap"), profile)
+    val plan = Probe.run(spark, "explain", "a1_group_count", 1, Sf)
+    assert(plan.contains("== Physical Plan =="), plan)
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("Probe rejects a bad mode, query or sample count before building a session") {
+    assert(!spark.sparkContext.isStopped) // a session Probe.main would reuse and stop
+    Seq(Array.empty[String], Array("nope", "a1_group_count"),
+      Array("bench-one", "no_such_query"), Array("profile"),
+      Array("bench-one", "a1_group_count", "0")).foreach { args =>
+      val e = intercept[IllegalArgumentException](Probe.main(args))
+      assert(e.getMessage.contains(Probe.Usage))
+    }
+    assert(!spark.sparkContext.isStopped)
+  }
+
+  test("Verify rejects a filter that matches nothing before writing anything") {
+    val out = Files.createTempDirectory("graft-verify").resolve("out")
+    intercept[IllegalArgumentException](
+      Verify.main(Array(Sf, out.toString, "^no_such_query$")))
+    assert(!Files.exists(out))
+    assert(!spark.sparkContext.isStopped)
+  }
+}

@@ -20,6 +20,15 @@ class SparkEntrySpec extends SparkSpec {
     assert(unoracled.isEmpty, s"unexpected unoracled: $unoracled")
   }
 
+  test("select sorts by name, filters by regex and rejects an empty match") {
+    val all = SparkEntry.select(None).map(_._1)
+    assert(all == SparkEntry.queries.keys.toSeq.sorted)
+    assert(SparkEntry.select(Some("^sim_")).map(_._1) == all.filter(_.startsWith("sim_")))
+    assert(SparkEntry.select(Some("^dd_phash$")).map(_._1) == Seq("dd_phash"))
+    val e = intercept[IllegalArgumentException](SparkEntry.select(Some("^no_such_query$")))
+    assert(e.getMessage.contains("matched nothing"))
+  }
+
   test("COVERAGE.md names every query (docs cannot drift from the contract)") {
     val coverage = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get("COVERAGE.md")), "UTF-8")
