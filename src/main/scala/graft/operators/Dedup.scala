@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 
 /** Deduplication operators for training-data pipelines: exact keep-first,
   * hash-group dedup, minhash+LSH banded near-dup, and n-gram Jaccard
@@ -62,15 +63,14 @@ object Dedup {
     * consumer recomputes. Checkpointed results (e.g. a
     * [[connectedComponents]] frame a caller still holds) are untouched;
     * the session-barrier variant that would invalidate them is
-    * [[releaseAllCaches]]. */
-  def releaseScratch(spark: SparkSession): Unit = {
-    var df = scratch.poll()
-    while (df != null) {
-      try df.unpersist(blocking = true)
-      catch { case _: Throwable => () /* stopped session: nothing to free */ }
-      df = scratch.poll()
+    * [[releaseAllCaches]]. Only frames persisted through `spark` are
+    * dropped: one session never evicts another's scratch. */
+  def releaseScratch(spark: SparkSession): Unit =
+    scratch.asScala.filter(_.sparkSession eq spark).foreach { df =>
+      if (scratch.remove(df))
+        try df.unpersist(blocking = true)
+        catch { case _: Throwable => () /* stopped session: nothing to free */ }
     }
-  }
 
   /** Session-level cache BARRIER: unpersists EVERY persistent RDD in the
     * session — operator scratch, surviving final checkpoints of iterative
@@ -486,13 +486,12 @@ object Dedup {
     * present) is reused, not rebuilt — that is the operator's entire
     * point (the corpus index amortizes over every ingest batch; callers
     * indexing a different corpus must use a different `indexPath`, which
-    * the query layer does by keying the path on the fixture dir). Pass
-    * `rebuild = true` to force. */
+    * the query layer does by keying the path on the fixture's content). */
   def buildBandIndex(
       corpus: DataFrame, idCol: String, textCol: String, indexPath: String,
-      k: Int = 3, numHashes: Int = 8, rebuild: Boolean = false): Unit = {
+      k: Int = 3, numHashes: Int = 8): Unit = {
     val done = new java.io.File(indexPath, "_SUCCESS")
-    if (rebuild || !done.isFile) {
+    if (!done.isFile) {
       withShinglesAndSigs(corpus, idCol, textCol, k, numHashes)
         .select(col(idCol),
           posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))

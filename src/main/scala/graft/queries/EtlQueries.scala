@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{IntegerType, StringType, StructField, StructType}
+import graft.Artifacts
 import graft.etl.{Bronze, Export, Gold, Silver, SurveyConfig, SurveyFixture}
 import graft.sources.TableSink
 
@@ -129,8 +130,7 @@ object EtlQueries {
     // introspection, the name filter, and the sink artifacts are all on
     // the oracle's hash path, not just the individual sinks.
     "etl_export" -> ((s, d) => {
-      val dir = java.nio.file.Paths
-        .get(sys.props("java.io.tmpdir"), "graft_etl_export").toString
+      val dir = Artifacts.runDir(s, "etl_export")
       // Idempotence across SESSIONS: a previous run's warehouse dir
       // would fail a bare saveAsTable with LOCATION_ALREADY_EXISTS
       // (swallowed by TableSink, per reference semantics) — purge first.
@@ -293,8 +293,7 @@ object EtlQueries {
     // oracle aggregates the raw table directly: partial-then-merge must
     // equal single-pass exactly.
     "etl_incr_agg" -> ((s, d) => {
-      val out = java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-        s"graft_incr_agg_${s.sparkContext.applicationId}").toString
+      val out = Artifacts.runDir(s, "incr_agg")
       orders(s, d).select(
         date_format(col("o_orderdate"), "yyyy-MM").as("month"),
         date_format(col("o_orderdate"), "yyyy-MM-dd").as("day"),

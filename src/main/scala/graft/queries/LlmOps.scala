@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.Artifacts
 import graft.operators.{Dedup, Multimodal, Similarity, TextOps}
 
 /** LLM training-data pipeline operators as oracle-checked queries:
@@ -19,16 +20,11 @@ object LlmOps {
 
   private val stop = TextOps.EnglishStopwords
 
-  /** Trained codebooks are MODEL ARTIFACTS: deterministic functions of
-    * the fixture + hyperparameters, trained once and served many times.
-    * Memoized per (params, fixture dir) within the JVM so repeat
-    * invocations — the bench's sampled runs, the three queries sharing
-    * the 16×2 coarse codebook — pay scan+score, not retraining. The
-    * oracle still replays the training math against the memoized result
-    * on every Verify run, so a stale or wrong cache cannot pass. */
-  private val cbMemo = new java.util.concurrent.ConcurrentHashMap[String, AnyRef]
-  private def memo[T <: AnyRef](key: String)(f: => T): T =
-    cbMemo.computeIfAbsent(key, _ => f).asInstanceOf[T]
+  // Trained codebooks are MODEL ARTIFACTS, memoized per (params, fixture
+  // content) by Artifacts.fixtureMemo so repeat invocations — the bench's
+  // sampled runs, the three queries sharing the 16×2 coarse codebook —
+  // pay scan+score, not retraining. The oracle still replays the training
+  // math on every Verify run, so a wrong cache cannot pass.
 
   /** SemDeDup's blocking codebook, cells sized to the corpus: k =
     * max(16, ⌈n/128⌉) bounds cells to ~128 vectors so within-cell
@@ -51,7 +47,7 @@ object LlmOps {
     // included: probing changes the trained artifact whenever k >= 32,
     // so a probed codebook must never alias an exact-path one trained
     // at the same k (inert at k = 16, but the key must not rely on that)
-    emb -> memo(s"cb${k}x2p8:$d") {
+    emb -> Artifacts.fixtureMemo(d, s"cb${k}x2p8") {
       Similarity.trainCodebook(emb, "vec_id", "embedding", k, 2,
         probeGroups = 8) }
   }
@@ -68,7 +64,7 @@ object LlmOps {
     if (k > Similarity.MaxDriverCells) {
       val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
       val m2 = math.ceil(k.toDouble / k1).toInt
-      val l1 = memo(s"cb2l${k1}x2p8:$d") {
+      val l1 = Artifacts.fixtureMemo(d, s"cb2l${k1}x2p8") {
         Similarity.trainCodebook(emb, "vec_id", "embedding", k1, 2,
           probeGroups = 8) }
       // L1 multi-probe P=2 + (a, b) dedup — the r17 recall fix (planted-
@@ -279,9 +275,9 @@ object LlmOps {
       // standalone query's exact parameterization (and memoized model
       // artifacts), so a recall regression in any index family, trained
       // or not, refined or not, hash-mismatches at every gate scale
-      val cb = memo(s"cb16x2:$d") {
+      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
         Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      val pq = memo(s"pq4x16x2:$d") {
+      val pq = Artifacts.fixtureMemo(d, "pq4x16x2") {
         Similarity.trainSubCodebooks(emb, "vec_id", "embedding",
           subspaces = 4, cents = 16, iters = 2, dims = 64) }
       val variants: Seq[(String, DataFrame)] = Seq(
@@ -375,7 +371,7 @@ object LlmOps {
     "sim_probed_assign" -> ((s, d) => {
       val emb = embeddings(s, d)
       val k = math.max(72, math.ceil(emb.count() / 64.0).toInt)
-      val cb = memo(s"cbc${k}:$d") {
+      val cb = Artifacts.fixtureMemo(d, s"cbc${k}") {
         Similarity.coarseCodebookOf(emb, "vec_id", "embedding", k) }
       Similarity.semanticClustered(emb, "vec_id", "embedding", cb,
           probeGroups = 8)
@@ -395,7 +391,7 @@ object LlmOps {
     // composite cell l1·8 + l2 — term-for-term in SQL.
     "sim_twolevel_assign" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val cb1 = memo(s"cbc8:$d") {
+      val cb1 = Artifacts.fixtureMemo(d, "cbc8") {
         Similarity.coarseCodebookOf(emb, "vec_id", "embedding", 8) }
       Similarity.twoLevelClustered(emb, "vec_id", "embedding", cb1,
           m2 = 8, iters = 2)
@@ -410,7 +406,7 @@ object LlmOps {
     // unrolled and the probe search on the resulting codebook.
     "sim_topk_ivf_trained" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val cb = memo(s"cb16x2:$d") {
+      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
         Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
       Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
         codebookOpt = Some(cb))
@@ -443,7 +439,7 @@ object LlmOps {
     // DuckDB replays both training iterations AND the PQ reconstruction.
     "sim_topk_ivfpq_trained" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val cb = memo(s"cb16x2:$d") {
+      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
         Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
       Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
         dims = 64, codebookOpt = Some(cb))
@@ -456,9 +452,9 @@ object LlmOps {
     // iterations AND all four subspaces' training iterations unrolled.
     "sim_topk_ivfpq_trained_pq" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val cb = memo(s"cb16x2:$d") {
+      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
         Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      val pq = memo(s"pq4x16x2:$d") {
+      val pq = Artifacts.fixtureMemo(d, "pq4x16x2") {
         Similarity.trainSubCodebooks(emb, "vec_id", "embedding",
           subspaces = 4, cents = 16, iters = 2, dims = 64) }
       Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
@@ -484,11 +480,7 @@ object LlmOps {
     "sim_topk_ivf_pruned" -> ((s, d) =>
       Similarity.ivfPartitionedTopK(
         embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5,
-        // applicationId-scoped: two JVMs on one host (Bench ∥ Verify in
-        // CI) must not overwrite each other's index mid-scan
-        indexPath = java.nio.file.Paths.get(
-          sys.props("java.io.tmpdir"),
-          s"graft_ivf_index_${s.sparkContext.applicationId}").toString)
+        indexPath = Artifacts.runDir(s, "ivf_index"))
         .orderBy("probe_id", "rank")),
 
     // INCREMENTAL index maintenance — the ingest path a production ANN
@@ -502,9 +494,7 @@ object LlmOps {
     "sim_topk_ivf_append" -> ((s, d) => {
       val emb = embeddings(s, d)
       val isBatch = col("vec_id") % 5 === 0 && col("vec_id") >= 16
-      val idx = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        s"graft_ivf_incr_${s.sparkContext.applicationId}").toString
+      val idx = Artifacts.runDir(s, "ivf_incr")
       val cb = Similarity.coarseCodebookOf(
         emb.filter(!isBatch), "vec_id", "embedding")
       Similarity.writeIvfIndex(
@@ -651,9 +641,9 @@ object LlmOps {
     // formula summed directly in SQL, never touching the bytes — is
     // independent ground truth for a real compressed-image round trip.
     "mm_png_decode" -> ((s, d) =>
-      // assets staged to parquet once per fixture (see phashAssets/
-      // staged): the measured work is the DECODE, as in a real pipeline
-      // reading stored images
+      // assets staged to parquet once per fixture content (phashAssets,
+      // Artifacts.fixtureDir): the measured work is the DECODE, as in a
+      // real pipeline reading stored images
       Multimodal.imageChannelSums(phashAssets(s, d)).toDF()
         .orderBy("doc_id")),
 
@@ -678,7 +668,7 @@ object LlmOps {
     // decoded DIMENSIONS and sniffed format are. The payload really is
     // a JPEG (JDK writer) and really is parsed back (JDK reader).
     "mm_jpeg_dims" -> ((s, d) =>
-      staged(s, d, "jpeg_assets") {
+      s.read.parquet(Artifacts.fixtureDir(s, d, "jpeg_assets") {
         import s.implicits._
         documents(s, d).select(col("doc_id").cast("long")).as[Long]
           .mapPartitions(_.map { id =>
@@ -689,7 +679,7 @@ object LlmOps {
               ((id * 2 + 5L * x + 11L * y) % 256).toInt,
               ((id * 3 + 3L * x + 17L * y) % 256).toInt)))
           }).toDF("doc_id", "content")
-      }
+      })
         .transform(df => Multimodal.imageChannelSums(df).toDF())
         .select("doc_id", "format", "width", "height")
         .orderBy("doc_id")),
@@ -821,7 +811,7 @@ object LlmOps {
     // in SQL — independent ground truth for 1-to-N frame extraction
     // through a real palette-indexed codec.
     "mm_gif_frames" -> ((s, d) =>
-      staged(s, d, "gif_assets") {
+      s.read.parquet(Artifacts.fixtureDir(s, d, "gif_assets") {
         import s.implicits._
         documents(s, d).select(col("doc_id").cast("long")).as[Long]
           .mapPartitions(_.map { id =>
@@ -831,7 +821,7 @@ object LlmOps {
             (id, Multimodal.encodeGifFrames(w, h, nf, (f, x, y) =>
               ((id * 5 + 50L * f + 7L * x + 13L * y) % 256).toInt))
           }).toDF("doc_id", "content")
-      }
+      })
         .transform(df => Multimodal.gifFrameSums(df).toDF())
         .orderBy("doc_id", "frame_idx")),
 
@@ -859,13 +849,7 @@ object LlmOps {
     "dd_incremental_indexed" -> ((s, d) => {
       val docs = documents(s, d)
       val corpus = docs.filter(col("doc_id") % 5 =!= 0)
-      val indexPath = java.nio.file.Paths.get(
-        sys.props("java.io.tmpdir"),
-        // applicationId-scoped: Bench ∥ Verify JVMs must not clobber
-        // each other's index mid-scan; fixture-dir-keyed: one index per
-        // corpus, per the build-once contract
-        s"graft_band_index_${new java.io.File(d).getName}_" +
-          s.sparkContext.applicationId).toString
+      val indexPath = bandIndexPath(s, d)
       Dedup.buildBandIndex(corpus, "doc_id", "text", indexPath)
       Dedup.indexedIncrementalMinhashPairs(
         corpus, docs.filter(col("doc_id") % 5 === 0),
@@ -1018,32 +1002,24 @@ object LlmOps {
       "CAST(sum(CASE WHEN j < 32 THEN b * (CAST(1 AS BIGINT) << j) ELSE 0 END) AS BIGINT) AS lo64 " +
       "FROM bits GROUP BY doc_id)"
 
-  /** Materialize a deterministic fixture frame to parquet ONCE per
-    * (fixture dir, name) and read the stored bytes thereafter. The mm
-    * batteries' slope was jstack-triaged to fixture PNG/GIF *encode*
-    * (one Deflater/LZW pass per image per query per sample), not to the
-    * decode operators under test — staging moves synthesis out of the
-    * measured time the way real pipelines read stored assets, and the
-    * batteries now measure DECODE. Content is a pure function of
-    * doc_id, so staged bytes are identical to inline-built ones and
-    * every oracle is untouched. Keyed by the fixture path so ladder
-    * scales never alias; `_SUCCESS` gates readability (a crashed stage
-    * rebuilds). */
-  private def staged(s: SparkSession, d: String, name: String)(
-      build: => DataFrame): DataFrame = {
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_assets_${java.lang.Integer.toHexString(d.hashCode)}/$name")
-    if (!new java.io.File(dir, "_SUCCESS").isFile)
-      build.write.mode("overwrite").parquet(dir.toString)
-    s.read.parquet(dir.toString)
-  }
+  /** dd_incremental_indexed's band index: per session, and per fixture
+    * content, so a rewritten corpus never reuses a completed index. */
+  private[graft] def bandIndexPath(s: SparkSession, d: String): String =
+    Artifacts.runDir(s, s"band_index_${Artifacts.fixtureKey(d)}")
 
   /** The mm_png_decode fixture shared by the image queries:
     * deterministic formula images carried as REAL compressed PNGs,
-    * staged to parquet once per fixture (see [[staged]]). */
+    * staged to parquet once per fixture content
+    * ([[Artifacts.fixtureDir]]) and read as stored bytes thereafter, like
+    * the JPEG and GIF assets. The mm batteries' slope was jstack-triaged
+    * to fixture PNG/GIF *encode* (one Deflater/LZW pass per image per
+    * query per sample), not to the decode operators under test — staging
+    * moves synthesis out of the measured time the way real pipelines
+    * read stored assets, and the batteries now measure DECODE. Content
+    * is a pure function of doc_id, so staged bytes are identical to
+    * inline-built ones and every oracle is untouched. */
   private def phashAssets(s: SparkSession, d: String): DataFrame =
-    staged(s, d, "png_assets") {
+    s.read.parquet(Artifacts.fixtureDir(s, d, "png_assets") {
       import s.implicits._
       documents(s, d).select(col("doc_id").cast("long")).as[Long]
         .mapPartitions(_.map { id =>
@@ -1054,7 +1030,7 @@ object LlmOps {
             ((id * 2 + 5L * x + 11L * y) % 256).toInt,
             ((id * 3 + 3L * x + 17L * y) % 256).toInt)))
         }).toDF("doc_id", "content")
-    }
+    })
 
   private val FloodText =
     "boilerplate template header footer nav boilerplate template header footer nav"

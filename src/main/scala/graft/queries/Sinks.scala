@@ -3,31 +3,23 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.Artifacts
 import graft.sources.SingleFileSink
-import java.nio.file.Paths
 
 /** Source/sink round-trips S1/S5/S6/S7 (SURVEY.md §2.1): each query writes
-  * through the engine sink under test into the JVM temp dir, reads the
-  * artifact back, and returns it for the DuckDB oracle compare — so the
-  * sink's on-disk bytes, not just the in-memory plan, are what gets
-  * verified. Read-back schemas are explicit where inference would widen or
-  * narrow types (CSV int32 vs int64).
+  * through the engine sink under test into the session's run directory
+  * (`Artifacts.runDir`), reads the artifact back, and returns it for the
+  * DuckDB oracle compare — so the sink's on-disk bytes, not just the
+  * in-memory plan, are what gets verified. Read-back schemas are explicit
+  * where inference would widen or narrow types (CSV int32 vs int64).
   */
 object Sinks {
   import Tables._
 
-  /** applicationId-scoped like StreamingQueries.tmp: Bench and Verify run
-    * as concurrent JVMs in CI, and two writers overwriting/reading the same
-    * ~30 part files in one shared dir can race.
-    */
-  private def tmp(s: SparkSession, name: String): String =
-    Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_sink_${name}_${s.sparkContext.applicationId}").toString
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S1 — CSV source with header + inferSchema (ref extract_alchemer_data.py:8-9)
     "s1_csv_roundtrip" -> ((s, d) => {
-      val out = tmp(s, "s1_dir")
+      val out = Artifacts.runDir(s, "s1_dir")
       region(s, d).coalesce(1).write.mode("overwrite")
         .option("header", "true").csv(out)
       s.read.option("header", "true").option("inferSchema", "true").csv(out)
@@ -37,7 +29,7 @@ object Sinks {
     // S5 — overwrite-mode table sink (ref utils.py:124-142). Parquet stands
     // in for Delta; overwrite + schema-on-write semantics are what matter.
     "s5_parquet_sink" -> ((s, d) => {
-      val out = tmp(s, "s5_dir")
+      val out = Artifacts.runDir(s, "s5_dir")
       orders(s, d).filter(col("o_custkey") < 100)
         .write.mode("overwrite").parquet(out)
       s.read.parquet(out).orderBy("o_orderkey")
@@ -45,7 +37,7 @@ object Sinks {
 
     // S6 — single-file JSON export with part-file move (ref utils.py:226-252)
     "s6_json_single_file" -> ((s, d) => {
-      val dest = tmp(s, "s6.json")
+      val dest = Artifacts.runDir(s, "s6.json")
       SingleFileSink.json(
         nation(s, d).select("n_nationkey", "n_name"), dest)
       s.read.schema(StructType(Seq(
@@ -59,7 +51,7 @@ object Sinks {
     // column is null for old files) — how a long-lived table absorbs
     // schema growth without rewriting history.
     "s8_schema_merge" -> ((s, d) => {
-      val out = tmp(s, "s8_dir")
+      val out = Artifacts.runDir(s, "s8_dir")
       val r = region(s, d)
       r.select("r_regionkey", "r_name")
         .write.mode("overwrite").parquet(s"$out/gen=1")
@@ -76,7 +68,7 @@ object Sinks {
     // in the scan, pinned by PlanSpec) — the layout that turns a 100 TB
     // scan into a directory listing.
     "s9_partition_prune" -> ((s, d) => {
-      val out = tmp(s, "s9_dir")
+      val out = Artifacts.runDir(s, "s9_dir")
       orders(s, d).filter(col("o_custkey") < 200)
         .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out)
@@ -95,7 +87,7 @@ object Sinks {
     // re-running a failed daily backfill must do at 100 TB. The oracle
     // states the post-backfill table directly.
     "s11_dynamic_overwrite" -> ((s, d) => {
-      val out = tmp(s, "s11_dyn")
+      val out = Artifacts.runDir(s, "s11_dyn")
       val base = orders(s, d).filter(col("o_custkey") < 200)
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice") * 100).cast("long").as("price_cents"))
@@ -125,7 +117,7 @@ object Sinks {
     // plain filter; the skipping selectivity itself is measured in
     // ZOrderSpec against a linear layout.
     "s10_zorder" -> ((s, d) => {
-      val out = tmp(s, "s10_zorder")
+      val out = Artifacts.runDir(s, "s10_zorder")
       graft.sources.ZOrder.writeZOrdered(
         lineitem(s, d).select(
           "l_orderkey", "l_partkey", "l_quantity", "l_extendedprice"),
@@ -145,7 +137,7 @@ object Sinks {
     // the swap — the read-side contract that makes overwrite-while-read
     // safe and gives bounded time travel on plain parquet.
     "s11_time_travel" -> ((s, d) => {
-      val base = tmp(s, "s11_tt")
+      val base = Artifacts.runDir(s, "s11_tt")
       val r = region(s, d).select("r_regionkey", "r_name")
       val vPrev = graft.sources.TableSink.overwriteViaSwap(
         r, "graft_tt_region", base)
@@ -165,7 +157,7 @@ object Sinks {
     // failing the job — the ingest posture a 100 TB crawl feed needs
     // (FAILFAST on petabyte inputs means one bad byte kills the run).
     "s12_corrupt_json" -> ((s, d) => {
-      val dir = tmp(s, "s12_jsonl")
+      val dir = Artifacts.runDir(s, "s12_jsonl")
       nation(s, d).select(
         when(col("n_nationkey") % 7 === 0,
           concat(lit("{corrupt "), col("n_name")))
@@ -191,7 +183,7 @@ object Sinks {
     // 100 TB codec choice is a first-class knob (storage cost vs scan
     // CPU); this pins that every tier round-trips bit-identically.
     "s13_codec" -> ((s, d) => {
-      val base = tmp(s, "s13_codec")
+      val base = Artifacts.runDir(s, "s13_codec")
       val src = supplier(s, d).select("s_suppkey", "s_name", "s_acctbal")
       Seq("snappy", "zstd", "gzip").map { c =>
         src.write.mode("overwrite").option("compression", c).parquet(s"$base/$c")
@@ -207,7 +199,7 @@ object Sinks {
     // against the parquet ground truth — proving the engine round-trips
     // decimals, dates and strings through a second columnar codec path.
     "s14_orc_roundtrip" -> ((s, d) => {
-      val out = tmp(s, "s14_orc")
+      val out = Artifacts.runDir(s, "s14_orc")
       orders(s, d)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
           "o_orderdate")
@@ -227,7 +219,7 @@ object Sinks {
     // actually land in the footer and answer membership is pinned in
     // ParquetBloomSpec.
     "s17_parquet_bloom" -> ((s, d) => {
-      val out = tmp(s, "s17_bloom")
+      val out = Artifacts.runDir(s, "s17_bloom")
       lineitem(s, d)
         .select("l_orderkey", "l_partkey", "l_quantity", "l_extendedprice")
         .write.mode("overwrite")
@@ -288,7 +280,7 @@ object Sinks {
 
     // S7 — single-file CSV export with header (ref write_to_volume.py:15-16)
     "s7_csv_single_file" -> ((s, d) => {
-      val dest = tmp(s, "s7.csv")
+      val dest = Artifacts.runDir(s, "s7.csv")
       SingleFileSink.csv(
         supplier(s, d).select("s_suppkey", "s_name"), dest)
       s.read.schema(StructType(Seq(

@@ -3,6 +3,8 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
+import graft.Artifacts
+import graft.operators.Parallelism
 import graft.streaming.EventStream
 
 /** Streaming operators on the CORRECTNESS path (§2.9 extension): the
@@ -14,19 +16,16 @@ import graft.streaming.EventStream
   */
 object StreamingQueries {
 
-  /** applicationId-scoped: two JVMs on one host (Bench ∥ Verify in CI)
-    * must not share source/checkpoint/output directories — interleaved
-    * checkpoints corrupt both runs. */
-  private def tmp(s: org.apache.spark.sql.SparkSession, name: String): String =
-    java.nio.file.Paths.get(sys.props("java.io.tmpdir"),
-      s"graft_stream_${name}_${s.sparkContext.applicationId}").toString
-
-  private def rmrf(path: String): Unit = {
-    def rec(f: java.io.File): Unit = {
-      Option(f.listFiles).iterator.flatten.foreach(rec)
+  /** [[Artifacts.runDir]] `name`, emptied: every invocation reprocesses
+    * its input from a fresh drop directory, checkpoint and sink. */
+  private def freshDir(s: SparkSession, name: String): String = {
+    val dir = Artifacts.runDir(s, name)
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).iterator.flatten.foreach(rm)
       f.delete(); ()
     }
-    rec(new java.io.File(path))
+    rm(new java.io.File(dir))
+    dir
   }
 
   /** Stage a parquet fixture into a file-stream drop directory. The
@@ -37,7 +36,15 @@ object StreamingQueries {
     * entry, which silently yields a ZERO-BATCH stream (the query
     * "succeeds" over no data; r11 found all file-source st_* queries
     * dead at sf1 this way). A file is copied as `<name>.parquet`; a
-    * directory's part files land as `<name>_partN.parquet`. */
+    * directory's part files land as `<name>_partN.parquet`.
+    *
+    * Also stages the deterministic stream inputs — the sentinel row, CDC
+    * change sets, re-delivery halves. These are pure functions of the
+    * fixture (an ingest INPUT a real pipeline receives, not computes),
+    * so they are synthesized once per fixture content
+    * ([[Artifacts.fixtureDir]], as the mm assets are) and copied into
+    * each run's drop directory: fixture synthesis is not the operator
+    * under test, and the streamed computation stays fully measured. */
   private def stageFixture(path: String, destDir: String, name: String): Unit = {
     val src = new java.io.File(path)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(destDir))
@@ -58,14 +65,15 @@ object StreamingQueries {
 
   /** A stateful streaming query fixes its state-store partition count
     * from `spark.sql.shuffle.partitions` at FIRST start (it's baked into
-    * the checkpoint). Every partition carries a state store with real
-    * per-micro-batch overhead (provider init, snapshot, commit), so the
-    * count must be sized to the stream's key cardinality, not inherited
-    * from the batch default — 32 stores for a fixture-sized stream is
-    * pure fixed cost. Fresh checkpoints here make the re-size safe; at
-    * production volume this knob goes UP, and the queries are unchanged.
-    */
-  /** Stream-state width from the staged input's on-disk bytes:
+    * the checkpoint), so each st_* query starts its stream inside
+    * `Parallelism.withShufflePartitions`. Every partition carries a
+    * state store with real per-micro-batch overhead (provider init,
+    * snapshot, commit), so the count must be sized to the stream's
+    * input, not inherited from the batch default — 32 stores for a
+    * fixture-sized stream is pure fixed cost. Fresh checkpoints here
+    * make the re-size safe.
+    *
+    * Stream-state width from the staged input's on-disk bytes:
     * ceil(bytes / 32 MB), floored at the fixture-scale 8. The r16
     * SessionProbe term-split measured the st_sessions growth term to be
     * the STREAM phase under the fixed 8-partition state shuffle
@@ -74,10 +82,9 @@ object StreamingQueries {
     * applied to streaming state: a stateful shuffle whose width ignores
     * input volume accumulates per-task state linearly until spill. The
     * floor keeps fixture-scale runs on the historical 8 stores (state
-    * stores carry real per-micro-batch fixed cost — see
-    * [[withStatePartitions]]); the width only rises when the data
-    * outgrows them, which is the cluster regime. Unreadable paths
-    * contribute 0 and land on the floor — LOUDLY: a transient
+    * stores carry real per-micro-batch fixed cost); the width only rises
+    * when the data outgrows them, which is the cluster regime. Unreadable
+    * paths contribute 0 and land on the floor — LOUDLY: a transient
     * filesystem error at 1000× that silently railed the width to 8
     * would reproduce the exact per-task state blowup this derivation
     * exists to prevent, so the fallback prints the failure to stderr
@@ -98,44 +105,6 @@ object StreamingQueries {
     math.max(8L, (bytes + (32L << 20) - 1) / (32L << 20)).toInt
   }
 
-  private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
-
-  /** Fixture-keyed ONE-TIME staging of deterministic stream inputs — the
-    * sentinel row, CDC change sets, re-delivery halves. These are pure
-    * functions of the fixture (an ingest INPUT a real pipeline receives,
-    * not computes), so they are synthesized to parquet once per fixture
-    * dir and copied into each run's drop directory thereafter — the mm
-    * family's `staged` precedent: fixture synthesis is not the operator
-    * under test, and the streamed computation itself stays fully
-    * measured. `_SUCCESS` gates readability (a crashed build rebuilds);
-    * keyed by the fixture path so ladder scales never alias. */
-  private def stagedInput(d: String, name: String)(
-      build: String => Unit): String = {
-    val dir = new java.io.File(
-      sys.props("java.io.tmpdir"),
-      s"graft_stream_fix_${java.lang.Integer.toHexString(d.hashCode)}/$name")
-    if (!new java.io.File(dir, "_SUCCESS").isFile) build(dir.toString)
-    dir.toString
-  }
-
-  /** Copy a staged parquet dir's part files into a drop directory under
-    * deterministic names (the stageFixture convention). */
-  private def copyStagedParts(stagedDir: String, destDir: String,
-      name: String): Unit = {
-    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(destDir))
-    new java.io.File(stagedDir).listFiles.toSeq
-      .filter(f => f.isFile && f.getName.startsWith("part-"))
-      .sortBy(_.getName).zipWithIndex.foreach { case (f, i) =>
-        java.nio.file.Files.copy(f.toPath,
-          java.nio.file.Paths.get(destDir, s"${name}_$i.parquet"),
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-      }
-  }
-
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Windowed event-type counts, executed AS A STREAM: the fixture file
     // arrives through the file source, the watermarked tumbling-window
@@ -150,24 +119,20 @@ object StreamingQueries {
     "st_window_counts" -> ((s, d) => {
       // same nanos-as-long handling as Tables.events, but the stream
       // needs the RAW schema up front (readStream requires one)
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
+      val (path, rawSchema) = Tables.rawEvents(s, d)
       // the file stream source monitors DIRECTORIES; stage the fixture
       // into one (the "files landing in a drop directory" shape a
       // streaming ingest actually has)
-      val srcDir = tmp(s, "win_src")
-      rmrf(srcDir)
+      val srcDir = freshDir(s, "win_src")
       stageFixture(path, srcDir, "events")
       val stream = Tables.normalizeEventTs(
         s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = tmp(s, "win_out")
-      val ckDir = tmp(s, "win_ck")
-      rmrf(ckDir) // fresh checkpoint: each invocation reprocesses the file
+      val outDir = freshDir(s, "win_out")
+      val ckDir = freshDir(s, "win_ck")
       // derived state width (stateWidthFor — the st_sessions lesson
       // applied to every stateful st_* query): sized from the staged
       // drop directory, i.e. exactly the bytes the stream will read
-      withStatePartitions(s, stateWidthFor(s, srcDir)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
         val q = EventStream.windowedTypeCounts(stream, "10 minutes", "1 hour")
           .writeStream
           .outputMode("complete")
@@ -196,22 +161,17 @@ object StreamingQueries {
     // the sink converges to exactly one row per event — which is what
     // the batch oracle asserts.
     "st_dedup" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
-      val srcDir = tmp(s, "dedup_src")
-      rmrf(srcDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val srcDir = freshDir(s, "dedup_src")
       Seq("events_a", "events_b").foreach(stageFixture(path, srcDir, _))
       val stream = Tables.normalizeEventTs(
         s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = tmp(s, "dedup_out")
-      val ckDir = tmp(s, "dedup_ck")
-      rmrf(ckDir)
-      rmrf(outDir)
+      val outDir = freshDir(s, "dedup_out")
+      val ckDir = freshDir(s, "dedup_ck")
       // derived width over the STAGED directory: the fixture lands
       // twice (re-delivery), so the dedup state's input volume — and
       // therefore the width — is automatically the doubled bytes
-      withStatePartitions(s, stateWidthFor(s, srcDir)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
         val q = EventStream.dedupWithinWatermark(stream, "10 minutes")
           .writeStream
           .outputMode("append")
@@ -241,22 +201,19 @@ object StreamingQueries {
     // read-back filters the sentinel user. Session bounds compare as
     // epoch-micros integers (formatting to seconds could tie rows).
     "st_sessions" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val raw = s.read.parquet(path)
-      val rawSchema = raw.schema
-      val srcDir = tmp(s, "sess_src")
-      rmrf(srcDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val raw = s.read.schema(rawSchema).parquet(path)
+      val srcDir = freshDir(s, "sess_src")
       stageFixture(path, srcDir, "events")
       // sentinel ts must match the fixture's physical ts type (long
       // nanos on legacy data, timestamp on current) or the file-source
       // schema check rejects the staged file. The sentinel is a pure
       // function of the fixture, so it is synthesized ONCE per fixture
-      // dir (stagedInput) and only copied per run — the max(ts) probe
-      // and the 1-row write no longer run inside the measured time.
-      val sentDir = stagedInput(d, "sess_sentinel") { dir =>
+      // content (Artifacts.fixtureDir) and only copied per run — the
+      // max(ts) probe and the 1-row write run outside the measured time.
+      val sentDir = Artifacts.fixtureDir(s, d, "sess_sentinel") {
         import org.apache.spark.sql.types.{LongType, TimestampType}
-        val sentTs = raw.schema("ts").dataType match {
+        val sentTs = rawSchema("ts").dataType match {
           case LongType =>
             val maxTs = raw.agg(max("ts")).head.getLong(0)
             lit(maxTs + 172800L * 1000000000L) // +2 days, in nanos
@@ -271,24 +228,18 @@ object StreamingQueries {
           sentTs.as("ts"), // +2 days past every real session's end
           lit(-1L).as("user_id"), lit("flush").as("event_type"),
           lit(0.0).as("value"), lit("").as("props"))
-          .coalesce(1).write.mode("overwrite").parquet(dir)
+          .coalesce(1)
       }
-      val part = new java.io.File(sentDir).listFiles
-        .filter(_.getName.startsWith("part-")).head
-      java.nio.file.Files.copy(part.toPath,
-        java.nio.file.Paths.get(srcDir, "sentinel.parquet"),
-        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      stageFixture(sentDir, srcDir, "sentinel")
       val stream = Tables.normalizeEventTs(
         s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = tmp(s, "sess_out")
-      val ckDir = tmp(s, "sess_ck")
-      rmrf(ckDir)
-      rmrf(outDir)
+      val outDir = freshDir(s, "sess_out")
+      val ckDir = freshDir(s, "sess_ck")
       // derived state width (see stateWidthFor): the SessionProbe split
       // pinned the st_sessions 300×→1000× growth to the stream phase at
       // the fixed width — 8 at fixture scale (identical plans), tracks
       // input bytes above it
-      withStatePartitions(s, stateWidthFor(s, path)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, path)) {
         val q = EventStream.sessionCounts(stream, "30 minutes", "10 minutes")
           .writeStream
           .outputMode("append")
@@ -317,27 +268,22 @@ object StreamingQueries {
     // AvailableNow over the fixture the emitted set IS the batch join —
     // which is exactly the oracle.
     "st_join" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
-      val srcDir = tmp(s, "join_src")
-      rmrf(srcDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val srcDir = freshDir(s, "join_src")
       stageFixture(path, srcDir, "events")
       def side(eventType: String): DataFrame =
         Tables.normalizeEventTs(
           s.readStream.schema(rawSchema).parquet(srcDir))
           .filter(col("event_type") === eventType)
-      val outDir = tmp(s, "join_out")
-      val ckDir = tmp(s, "join_ck")
-      rmrf(ckDir)
-      rmrf(outDir)
+      val outDir = freshDir(s, "join_out")
+      val ckDir = freshDir(s, "join_ck")
       // derived width for the stream-stream join (r16 verdict item):
       // both sides' state stores share the same shuffle partitions, but
       // each input event lands in AT MOST one side's buffer (it is a
       // purchase or a view, never both), so the staged directory's bytes
       // bound the total buffered state and size the width directly —
       // same derivation as the single-store queries
-      withStatePartitions(s, stateWidthFor(s, srcDir)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
         val q = EventStream.joinWithinWindow(
           side("purchase"), side("view"), "10 minutes", "30 minutes")
           .writeStream
@@ -368,19 +314,17 @@ object StreamingQueries {
     // count, and either fails the hash compare. (EventStreamSpec pins
     // the same property for the append-mode file sink.)
     "st_resume" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
-      val srcDir = tmp(s, "resume_src")
-      val outDir = tmp(s, "resume_out")
-      val ckDir = tmp(s, "resume_ck")
-      rmrf(srcDir); rmrf(outDir); rmrf(ckDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val srcDir = freshDir(s, "resume_src")
+      val outDir = freshDir(s, "resume_out")
+      val ckDir = freshDir(s, "resume_ck")
       val raw = s.read.schema(rawSchema).parquet(path)
       // width from the FULL fixture (path, not srcDir): the checkpoint
       // bakes the state partition count at run 1, before half_b lands,
       // so sizing from the drop directory would freeze run 1's half-
       // sized width for the query's whole lifetime
-      def run(): Unit = withStatePartitions(s, stateWidthFor(s, path)) {
+      val width = stateWidthFor(s, path)
+      def run(): Unit = Parallelism.withShufflePartitions(s, width) {
         val stream = s.readStream.schema(rawSchema)
           .option("recursiveFileLookup", "true").parquet(srcDir)
         val q = stream.groupBy("event_type")
@@ -397,19 +341,17 @@ object StreamingQueries {
         q.awaitTermination()
       }
       // both halves are pure functions of the fixture — synthesized once
-      // per fixture dir, copied per run (the stagedInput contract); the
+      // per fixture content, copied per run (Artifacts.fixtureDir); the
       // two query LIFETIMES and the checkpoint resume stay fully measured
-      val halfA = stagedInput(d, "resume_half_a") { dir =>
-        raw.filter(col("event_id") % 2 === 0)
-          .coalesce(1).write.mode("overwrite").parquet(dir)
+      val halfA = Artifacts.fixtureDir(s, d, "resume_half_a") {
+        raw.filter(col("event_id") % 2 === 0).coalesce(1)
       }
-      val halfB = stagedInput(d, "resume_half_b") { dir =>
-        raw.filter(col("event_id") % 2 === 1)
-          .coalesce(1).write.mode("overwrite").parquet(dir)
+      val halfB = Artifacts.fixtureDir(s, d, "resume_half_b") {
+        raw.filter(col("event_id") % 2 === 1).coalesce(1)
       }
-      copyStagedParts(halfA, s"$srcDir/half_a", "half_a")
+      stageFixture(halfA, s"$srcDir/half_a", "half_a")
       run() // first lifetime: half the fixture, then the query STOPS
-      copyStagedParts(halfB, s"$srcDir/half_b", "half_b")
+      stageFixture(halfB, s"$srcDir/half_b", "half_b")
       run() // second lifetime: SAME checkpoint, only half_b is new
       s.read.parquet(outDir)
         .select(col("event_type"), col("n_events"), col("sum_cents"))
@@ -436,23 +378,18 @@ object StreamingQueries {
     // correctness gate.
     "st_state" -> ((s, d) => {
       import s.implicits._
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
-      val srcDir = tmp(s, "state_src")
-      rmrf(srcDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val srcDir = freshDir(s, "state_src")
       stageFixture(path, srcDir, "events")
       val stream = Tables.normalizeEventTs(
         s.readStream.schema(rawSchema).parquet(srcDir))
       val typed = stream.select(col("user_id"), col("value"))
         .as[(Long, Double)]
-      val outDir = tmp(s, "state_out")
-      val ckDir = tmp(s, "state_ck")
-      rmrf(ckDir)
-      rmrf(outDir)
+      val outDir = freshDir(s, "state_out")
+      val ckDir = freshDir(s, "state_ck")
       // derived width: mapGroupsWithState keeps one row per user, so
       // state grows with input key cardinality — the st_sessions shape
-      withStatePartitions(s, stateWidthFor(s, srcDir)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
         val q = EventStream.runningUserActivity(typed)
           .toDF()
           .writeStream
@@ -480,24 +417,19 @@ object StreamingQueries {
     // stream side scales with executors and the dim broadcast is the
     // same bounded artifact every batch job ships.
     "st_enrich" -> ((s, d) => {
-      s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-      val path = s"$d/events.parquet"
-      val rawSchema = s.read.parquet(path).schema
-      val srcDir = tmp(s, "enrich_src")
-      rmrf(srcDir)
+      val (path, rawSchema) = Tables.rawEvents(s, d)
+      val srcDir = freshDir(s, "enrich_src")
       stageFixture(path, srcDir, "events")
       val stream = Tables.normalizeEventTs(
         s.readStream.schema(rawSchema).parquet(srcDir))
       val dim = broadcast(Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey")))
-      val outDir = tmp(s, "enrich_out")
-      val ckDir = tmp(s, "enrich_ck")
-      rmrf(ckDir)
-      rmrf(outDir)
+      val outDir = freshDir(s, "enrich_out")
+      val ckDir = freshDir(s, "enrich_ck")
       // derived width: the complete-mode rollup's state is nation-bounded
       // (25 keys) but the aggregation exchange still carries the full
       // stream — sized from the staged bytes like every other st_* query
-      withStatePartitions(s, stateWidthFor(s, srcDir)) {
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
         // integer-cents discipline (the ts_*/w* precedent): per-row cents
         // then an exact integer sum, so no cross-engine/partition-order
         // float reassociation can drift past a rounding mask at scale
@@ -535,30 +467,22 @@ object StreamingQueries {
       val base = o.select(col("k"), col("price_cents"), col("status"),
         lit(0).as("version"), lit("U").as("op"))
         .filter(col("k") % 10 =!= 9)
-      val srcDir = tmp(s, "upsert_src")
-      val stateRoot = tmp(s, "upsert_state")
-      rmrf(srcDir); rmrf(stateRoot)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(srcDir))
+      val srcDir = freshDir(s, "upsert_src")
+      val stateRoot = freshDir(s, "upsert_state")
       // The base snapshot and both change sets are pure functions of the
       // orders fixture — CDC INPUTS a real pipeline receives, not
-      // computes. Synthesized once per fixture dir (stagedInput), copied
-      // into the drop directory per run; the stream, the per-batch
-      // merges, and the read-back stay fully measured. The base dir is
-      // read-only state v0 — the merge writes only $stateRoot/v<bid>.
+      // computes. Synthesized once per fixture content
+      // (Artifacts.fixtureDir), copied into the drop directory per run;
+      // the stream, the per-batch merges, and the read-back stay fully
+      // measured. The base dir is read-only state v0 — the merge writes
+      // only $stateRoot/v<bid>.
       Seq(change(1, 3L, 30L, "U1"), change(2, 5L, 50L, "U2"))
         .zipWithIndex.foreach { case (c, i) =>
-          val stage = stagedInput(d, s"upsert_change$i") { dir =>
-            c.coalesce(1).write.mode("overwrite").parquet(dir)
-          }
-          val part = new java.io.File(stage).listFiles
-            .filter(_.getName.startsWith("part-")).head
-          java.nio.file.Files.copy(part.toPath,
-            java.nio.file.Paths.get(srcDir, s"changes_$i.parquet"),
-            java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+          stageFixture(Artifacts.fixtureDir(s, d, s"upsert_change$i") {
+            c.coalesce(1)
+          }, srcDir, s"changes_$i")
         }
-      var latest = stagedInput(d, "upsert_base") { dir =>
-        base.write.mode("overwrite").parquet(dir)
-      }
+      var latest = Artifacts.fixtureDir(s, d, "upsert_base")(base)
       val schema = s.read.parquet(latest).schema
       val stream = s.readStream.schema(schema).parquet(srcDir)
       val q = stream.writeStream

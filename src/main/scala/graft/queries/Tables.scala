@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet fixture-table access for the query battery.
   *
@@ -29,8 +30,17 @@ object Tables {
     * `spark.sql.session.timeZone=UTC`, so the NTZ→LTZ cast re-tags the
     * same micros value the oracle's naive `epoch_us(ts)` sees. */
   def events(spark: SparkSession, d: String): DataFrame = {
+    val (path, schema) = rawEvents(spark, d)
+    normalizeEventTs(spark.read.schema(schema).parquet(path))
+  }
+
+  /** The events fixture's path and RAW schema (`ts` as stored), for
+    * readers that need it up front, like a file stream. The one setter of
+    * the nanos conf: query code, since callers bring their own sessions. */
+  def rawEvents(spark: SparkSession, d: String): (String, StructType) = {
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    normalizeEventTs(t(spark, d, "events"))
+    val path = s"$d/events.parquet"
+    (path, spark.read.parquet(path).schema)
   }
 
   def normalizeEventTs(df: DataFrame): DataFrame = {

@@ -69,6 +69,31 @@ class ParallelismSpec extends SparkSpec {
     assert(spark.conf.get(key) === before)
   }
 
+  test("a stateful stream started inside withShufflePartitions bakes that " +
+    "width into its state stores, and the session width is restored") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.streaming.Trigger
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("par-stream").toString
+    spark.range(100).selectExpr("id % 5 AS k").write.parquet(s"$dir/src")
+    val q = Parallelism.withShufflePartitions(spark, 3) {
+      val q = spark.readStream.schema("k LONG").parquet(s"$dir/src")
+        .groupBy("k").count()
+        .writeStream
+        .outputMode("complete")
+        .option("checkpointLocation", s"$dir/ck")
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch { (batch: DataFrame, _: Long) => batch.collect(); () }
+        .start()
+      q.awaitTermination()
+      q
+    }
+    assert(q.lastProgress.stateOperators.map(_.numShufflePartitions).toSeq ===
+      Seq(3L))
+    assert(spark.conf.get(key) === before)
+  }
+
   test("planBytesPlausible accepts scan-shaped frames and flags a frame " +
     "with a join above the scan (r15 ADVICE: forPlanBytes misuse signal)") {
     import spark.implicits._

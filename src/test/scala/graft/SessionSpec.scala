@@ -4,7 +4,8 @@ import java.nio.file.{Files, Paths}
 import scala.jdk.CollectionConverters._
 
 /** The one session factory, the single-query probe that runs on it, and
-  * the guard that keeps session building in one place. */
+  * the guards that keep session building, scratch paths and the shuffle
+  * width conf each in one place. */
 class SessionSpec extends SparkSpec {
 
   private val Sf = "/root/testdata/sf0.001"
@@ -18,13 +19,29 @@ class SessionSpec extends SparkSpec {
     assert(conf.get("spark.cleaner.periodicGC.interval") == "2min")
   }
 
-  test("only graft/Session.scala builds a SparkSession in src/main") {
+  /** The `src/main/scala` files, relative and sorted, whose text matches
+    * `pattern`. */
+  private def mainSourcesMatching(pattern: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
-    val builders = Files.walk(root).iterator().asScala
+    val re = pattern.r
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains("SparkSession.builder"))
-      .map(root.relativize(_).toString).toSeq
-    assert(builders == Seq("graft/Session.scala"))
+      .filter(p => re.findFirstIn(new String(Files.readAllBytes(p), "UTF-8")).isDefined)
+      .map(root.relativize(_).toString).toSeq.sorted
+  }
+
+  test("only graft/Session.scala builds a SparkSession in src/main") {
+    assert(mainSourcesMatching("SparkSession\\.builder") == Seq("graft/Session.scala"))
+  }
+
+  test("only graft/Artifacts.scala reads java.io.tmpdir in src/main") {
+    assert(mainSourcesMatching("java\\.io\\.tmpdir") == Seq("graft/Artifacts.scala"))
+  }
+
+  test("only Session and Parallelism set spark.sql.shuffle.partitions in src/main") {
+    assert(mainSourcesMatching(
+      "\"spark\\.sql\\.shuffle\\.partitions\"|SQLConf\\.SHUFFLE_PARTITIONS") ==
+      Seq("graft/Session.scala", "graft/operators/Parallelism.scala"))
   }
 
   test("Probe bench-one, profile and explain run on a given session and leave it running") {
