@@ -16,7 +16,8 @@ import scala.collection.mutable
   *  - `profile`: a warm-up, then one execution under a SparkListener,
   *    one line per job (wall, tasks, stages, executor run/CPU time, scan
   *    input, shuffle read/write, spill) and the driver gap: query wall
-  *    minus the merged busy windows of its jobs.
+  *    minus the merged busy windows of its jobs; then the codegen classes
+  *    the sample and the warm-up (in a fresh JVM: the plan's) compiled.
   *  - `explain`: `explain("formatted")` of the query's plan. Nothing
   *    runs, except what the query's construction itself executes.
   *
@@ -47,12 +48,19 @@ object Probe {
     if (mode == "explain")
       build().queryExecution.explainString(ExplainMode.fromString("formatted"))
     else {
-      val rows = build().count() // warm-up: JIT + codegen, unrecorded
+      val cg0 = codegen()
+      val rows = build().count() // warm-up: JIT + codegen, untimed
+      val warmUp = codegen(cg0)
       graft.operators.Dedup.releaseAllCaches(spark)
       if (mode == "bench-one") benchOne(spark, name, samples, sfDir, rows, build)
-      else profile(spark, name, build)
+      else profile(spark, name, build, warmUp)
     }
   }
+
+  /** Codegen classes compiled in this JVM and their ns, less `since`. */
+  private def codegen(since: (Long, Long) = (0L, 0L)): (Long, Long) = (
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - since._1,
+    org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime - since._2)
 
   private def benchOne(spark: SparkSession, name: String, n: Int, sfDir: String,
       rows: Long, build: () => DataFrame): String = {
@@ -90,7 +98,7 @@ object Probe {
   }
 
   private def profile(spark: SparkSession, name: String,
-      build: () => DataFrame): String = {
+      build: () => DataFrame, warmUp: (Long, Long)): String = {
     val jobs = mutable.LinkedHashMap.empty[Int, JobAgg]
     val stageToJob = mutable.Map.empty[Int, Int]
     val listener = new SparkListener {
@@ -129,6 +137,7 @@ object Probe {
       }
     }
     spark.sparkContext.addSparkListener(listener)
+    val cg0 = codegen()
     val t0 = System.nanoTime()
     var missing = 0
     // detach (also on failure: the session outlives the probe) BEFORE the
@@ -149,6 +158,7 @@ object Probe {
       }
       (rows, wall)
     } finally spark.sparkContext.removeSparkListener(listener)
+    val sample = codegen(cg0)
     graft.operators.Dedup.releaseAllCaches(spark)
 
     val out = mutable.ArrayBuffer.empty[String]
@@ -179,6 +189,8 @@ object Probe {
     } match { case (cs, ce) => merged += (ce - cs) / 1e3 }
     out += f"== job wall sum ${jobWallSum}%.3f s (merged busy ${merged}%.3f s) " +
       f"vs query wall ${wall}%.3f s (driver gap ${wall - merged}%.3f s) =="
+    out += f"== codegen: ${sample._1} classes compiled (${sample._2 / 1e6}%.0f ms); " +
+      f"warm-up ${warmUp._1} (${warmUp._2 / 1e6}%.0f ms) =="
     out.mkString("\n")
   }
 }

@@ -11,11 +11,10 @@ import org.apache.spark.unsafe.types.UTF8String
 import graft.operators.Dedup
 
 /** Static kernel behind [[ShingleBands]]: the tokenize → shingle →
-  * xor-permutation minhash → band derivation, shared verbatim with the
-  * RDD path in `Dedup.withShinglesAndSigs` (same helpers, same
-  * arithmetic, so both paths — and the DuckDB oracle — agree
-  * byte-for-byte). Called from generated code, so it is allocation-lean
-  * and thread-confined (per-thread MessageDigest). */
+  * xor-permutation minhash → band derivation, built from the `Dedup`
+  * helpers the DuckDB oracle replays byte-for-byte. Called from generated
+  * code, so it is allocation-lean and thread-confined (per-thread
+  * MessageDigest). */
 object TextKernels {
 
   private val tlMd: ThreadLocal[java.security.MessageDigest] =
@@ -260,13 +259,23 @@ case class ShingleBands(child: Expression, k: Int, numHashes: Int)
   override def nullSafeEval(t: Any): Any =
     TextKernels.shingleBands(t.asInstanceOf[UTF8String], k, numHashes)
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+  /** Keeps the last input (copied: it may sit in a reused row buffer) and
+    * result, so over a sort-merge join, which emits a document's matches
+    * consecutively, the kernel runs once per document, not per match. */
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val lastIn = ctx.addMutableState("UTF8String", "sbLastIn")
+    val lastOut = ctx.addMutableState("InternalRow", "sbLastOut")
     nullSafeCodeGen(ctx, ev, c => {
       s"""
-         |${ev.value} = graft.expressions.TextKernels.shingleBands($c, $k, $numHashes);
+         |if ($lastIn == null || !$lastIn.equals($c)) {
+         |  $lastOut = graft.expressions.TextKernels.shingleBands($c, $k, $numHashes);
+         |  $lastIn = $c.clone();
+         |}
+         |${ev.value} = $lastOut;
          |${ev.isNull} = ${ev.value} == null;
        """.stripMargin
     })
+  }
 
   override protected def withNewChildInternal(newChild: Expression): ShingleBands =
     copy(child = newChild)

@@ -30,8 +30,8 @@ import scala.jdk.CollectionConverters._
   */
 object Dedup {
 
-  /** Registry of the frames the operators persist as SCRATCH: candidate
-    * pair tables, per-candidate shingle tables, banded batch tables —
+  /** Registry of the frames the operators persist as SCRATCH: banded
+    * batch tables, signature member tables, eval-set gram lists —
     * every one a plain `persist` whose lineage survives the blocks, so
     * dropping them is always CORRECT (a still-live consumer silently
     * recomputes; nothing hard-fails). localCheckpoint blocks are NOT in
@@ -226,42 +226,38 @@ object Dedup {
       java.lang.Long.parseLong(md5Hex(md, s"perm$p").substring(0, 15), 16))
   }
 
-  /** Per-doc shingles + banded minhash keys, one narrow pass through the
-    * native [[graft.expressions.ShingleBands]] expression — the kernel
-    * stays INSIDE the DataFrame plan (whole-stage codegen, no
-    * DataFrame→RDD round trip, no lineage break for Catalyst/AQE).
-    *
-    * Each shingle is content-hashed ONCE (md5 → 60-bit long); the
-    * `numHashes` signatures derive by XOR with per-function constants and
-    * a min-fold. At 100 TB the shingle hash is the dominant CPU line of
-    * near-dup — one digest per shingle instead of one per (shingle, hash
-    * fn) is an 8× cut with the same LSH guarantees (xor by a constant is
-    * a bijection, so min-over-xored-hashes is a valid minhash family).
-    * Band key b = md5(sig_2b "|" sig_2b+1). Docs shorter than k words
-    * produce a null struct and are dropped, like the previous RDD
-    * formulation's flatMap-None. */
   /** Narrow (id, text) projection, rebalanced when the SOURCE is
     * under-split. The text kernels are CPU-bound (~100 µs/doc); a
     * single-row-group local file gives one split, so without the
     * rebalance the kernel would run on one core. On a cluster input with
     * splits ≥ cores the check is a no-op.
     *
-    * The probe is `inputFiles` (leaf-scan file count from the ANALYZED
-    * plan — no job, no physical planning): a `.rdd.getNumPartitions`
-    * probe would force physical planning and, under AQE, eagerly execute
-    * every upstream shuffle stage at DataFrame-construction time, and
-    * would then report shuffle-OUTPUT partitions, which say nothing
-    * about scan splits. Inputs with no file leaves (in-memory fixtures,
-    * frames already downstream of a shuffle) skip the rebalance — they
-    * are either tiny or already distributed by the exchange. */
+    * Only a SCAN-SHAPED frame (projections and filters over file
+    * relations, or a union of such) has the scan's splits as its
+    * partitions; a frame with a join, aggregate or repartition in it is
+    * already spread by that exchange, though its `inputFiles` still list
+    * the files. The check reads the ANALYZED plan and file statuses: a
+    * `.rdd.getNumPartitions` probe would force physical planning and,
+    * under AQE, run every upstream shuffle stage at construction time.
+    * The rebalance hashes on the id, so [[jaccardVerify]]'s id join
+    * reuses the exchange instead of shuffling the corpus again (and,
+    * unlike round-robin, needs no pre-shuffle sort for retries). */
   private def balancedNarrow(
       df: DataFrame, idCol: String, textCol: String): DataFrame = {
     graft.expressions.GraftFunctions.register(df.sparkSession)
     val spark = df.sparkSession
     val target = spark.sparkContext.defaultParallelism
     val narrow = df.select(col(idCol).cast("long").as(idCol), col(textCol).as("__text"))
-    val files = df.inputFiles
-    if (files.isEmpty) narrow // in-memory or post-shuffle: already distributed
+    import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
+    import org.apache.spark.sql.execution.datasources.LogicalRelation
+    def scanShaped(p: LogicalPlan): Boolean = p match {
+      case _: LogicalRelation => true
+      case _: Project | _: Filter | _: Union => p.children.forall(scanShaped)
+      case _ => false
+    }
+    val files =
+      if (scanShaped(df.queryExecution.analyzed)) df.inputFiles else Array.empty[String]
+    if (files.isEmpty) narrow // in-memory or post-exchange: already distributed
     else {
       // Estimate the SCAN partition count the same way FilePartition
       // bin-packs: ceil((bytes + files·openCost) / maxPartitionBytes).
@@ -284,69 +280,86 @@ object Dedup {
         }.sum
         math.max(1L, (bytes + files.length * openCost + maxPart - 1) / maxPart)
       }.getOrElse(files.length.toLong)
-      if (est < target) narrow.repartition(target) else narrow
+      if (est < target) narrow.repartition(target, col(idCol)) else narrow
     }
   }
 
+  /** `keep` plus the [[graft.expressions.ShingleBands]] struct `__sb` of
+    * `text`, for every row whose text has at least `k` words.
+    * explode(array(...)) is a deliberate Generate BARRIER: without it,
+    * CollapseProject inlines the kernel into the null-check filter AND
+    * each struct-field extraction — 3 evaluations per row (measured 2×
+    * slower). Generate materializes the struct exactly once per row. */
+  private def shingleBands(df: DataFrame, keep: Seq[Column], text: Column,
+      k: Int, numHashes: Int): DataFrame =
+    df.select(keep :+ explode(array(
+        call_function("graft_shingle_bands", text, lit(k), lit(numHashes))))
+        .as("__sb"): _*)
+      .filter(col("__sb").isNotNull)
+
+  /** Per-doc shingles + banded minhash keys, one narrow pass through the
+    * native [[graft.expressions.ShingleBands]] expression — the kernel
+    * stays INSIDE the DataFrame plan (whole-stage codegen, no
+    * DataFrame→RDD round trip, no lineage break for Catalyst/AQE).
+    *
+    * Each shingle is content-hashed ONCE (md5 → 60-bit long); the
+    * `numHashes` signatures derive by XOR with per-function constants and
+    * a min-fold. At 100 TB the shingle hash is the dominant CPU line of
+    * near-dup — one digest per shingle instead of one per (shingle, hash
+    * fn) is an 8× cut with the same LSH guarantees (xor by a constant is
+    * a bijection, so min-over-xored-hashes is a valid minhash family).
+    * Band key b = md5(sig_2b "|" sig_2b+1). Docs shorter than k words
+    * produce a null struct and are dropped, like the previous RDD
+    * formulation's flatMap-None. */
   def withShinglesAndSigs(
       df: DataFrame, idCol: String, textCol: String,
-      k: Int, numHashes: Int): DataFrame = {
-    val balanced = balancedNarrow(df, idCol, textCol)
-    // explode(array(...)) is a deliberate Generate BARRIER: without it,
-    // CollapseProject inlines the kernel into the null-check filter AND
-    // each struct-field extraction — 3 evaluations per row (measured 2×
-    // slower). Generate materializes the struct exactly once per row.
-    balanced
-      .select(col(idCol), explode(array(
-        call_function("graft_shingle_bands", col("__text"), lit(k), lit(numHashes))))
-        .as("__sb"))
-      .filter(col("__sb").isNotNull)
+      k: Int, numHashes: Int): DataFrame =
+    shingleBands(balancedNarrow(df, idCol, textCol), Seq(col(idCol)), col("__text"),
+      k, numHashes)
       .select(col(idCol),
         col("__sb.shingles").as("shingles"),
         col("__sb.bandkeys").as("bandkeys"))
-  }
 
-  /** Exact shingle-Jaccard verification of candidate pairs: the text
-    * kernel reruns ONLY for docs that appear in some pair (broadcast
-    * semi-join on the candidate id set). At scale the candidate set is a
-    * small fraction of the corpus, so this second pass is cheap, and
-    * nothing corpus-sized is ever cached — the only persisted frame is
-    * the per-candidate-doc shingle table, bounded by the candidate
-    * count.
-    *
-    * Cache lifecycle: the persisted frames here and in the pair
-    * generators (all collision-bounded, never corpus-sized) stay
-    * registered until evicted — they must outlive the RETURNED frame,
-    * whose consumption time the operator cannot see, so they are not
-    * unpersisted eagerly. Long-lived sessions issuing many dedup calls
-    * should call [[Dedup.releaseScratch]] between pipelines to drop the
-    * scratch blocks deterministically (Bench does, per query). */
+  /** (id, band_idx, band_hash): one row per LSH band of every doc. */
+  private def bands(df: DataFrame, idCol: String, textCol: String,
+      k: Int, numHashes: Int): DataFrame =
+    withShinglesAndSigs(df, idCol, textCol, k, numHashes).select(
+      col(idCol), posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))
+
+  /** Band rows as one side of a bucket join, the id renamed to `as`. */
+  private def keyed(banded: DataFrame, idCol: String, as: String): DataFrame =
+    banded.select(col("band_idx"), col("band_hash"), col(idCol).as(as))
+
+  /** Exact shingle-Jaccard verification of candidate pairs `cands` (a, b);
+    * a pair may repeat (once per shared bucket). One id join, one regroup:
+    * each pair end (id, a, b) merge-joins the documents on id (the
+    * corpus-sized side: never broadcast or cached; where the caller
+    * already rebalanced `df` the join reuses that exchange); the kernel
+    * then sees candidate docs only, once per doc (the join emits a doc's
+    * matches consecutively and [[graft.expressions.ShingleBands]] keeps
+    * its last result); every (a, b, shingle) carries its end's tag bit and
+    * regroups on (a, b): shingles with both tags are |A∩B|, all distinct
+    * shingles |A∪B|. Repeated pairs only repeat tags. A pair whose end is
+    * shorter than k words lacks that tag and drops out. Nothing persists. */
   private def jaccardVerify(
       df: DataFrame, idCol: String, textCol: String, k: Int,
       cands: DataFrame, thresholdNum: Int, thresholdDen: Int): DataFrame = {
-    // both pair sides from ONE pass over the candidate table (the
-    // connectedComponents edge-build pattern, §2.3): the union form read
-    // the persisted cands twice and carried two scan branches into the
-    // distinct; explode emits a/b inside one codegen stage
-    val candIds = cands
-      .select(explode(array(col("a"), col("b"))).as(idCol)).distinct()
-    val needed = df
-      .select(col(idCol).cast("long").as(idCol), col(textCol))
-      .join(candIds, Seq(idCol), "left_semi")
-    val shing = withShinglesAndSigs(needed, idCol, textCol, k, numHashes = 2)
-      .select(col(idCol), col("shingles"))
-      .transform(scratchPersist)
-    val sa = shing.select(col(idCol).as("a"), col("shingles").as("sha"))
-    val sb = shing.select(col(idCol).as("b"), col("shingles").as("shb"))
-    cands.join(sa.hint("merge"), "a").join(sb.hint("merge"), "b")
-      .withColumn("n_inter", size(array_intersect(col("sha"), col("shb"))))
-      .withColumn("n_union", size(col("sha")) + size(col("shb")) - col("n_inter"))
+    val needed = balancedNarrow(df, idCol, textCol).hint("merge").join(
+      cands.select(explode(array(col("a"), col("b"))).as(idCol), col("a"), col("b")), Seq(idCol))
+    shingleBands(needed, // tag bit 1: a's shingles, bit 2: b's
+      Seq(col("a"), col("b"), when(col(idCol) === col("a"), 1).otherwise(2).as("__end")),
+      col("__text"), k, numHashes = 2)
+      .select(col("a"), col("b"), col("__end"), explode(col("__sb.shingles")).as("__g"))
+      // one exchange on (a, b) serves both groupings below
+      .repartition(col("a"), col("b"))
+      .groupBy("a", "b", "__g").agg(bit_or(col("__end")).as("__e"))
+      .groupBy("a", "b").agg(bit_or(col("__e")).as("__ends"),
+        count(when(col("__e") === 3, true)).as("n_inter"), count(lit(1)).as("n_union"))
       // rational threshold num/den keeps the compare exact-integer at
       // any corpus size (default 1/2 = Jaccard ≥ 0.5)
-      .filter(col("n_inter") * thresholdDen >= col("n_union") * thresholdNum)
-      .select(col("a"), col("b"),
-        col("n_inter").cast("long").as("n_inter"),
-        col("n_union").cast("long").as("n_union"))
+      .filter(col("__ends") === 3 &&
+        col("n_inter") * thresholdDen >= col("n_union") * thresholdNum)
+      .select("a", "b", "n_inter", "n_union")
   }
 
   /** Candidate near-dup pairs via banded LSH, verified with exact shingle
@@ -369,20 +382,13 @@ object Dedup {
       thresholdNum: Int = 1, thresholdDen: Int = 2): DataFrame = {
     require(thresholdNum > 0 && thresholdDen > 0,
       "Jaccard threshold must be a positive rational")
-    // Two kernel passes, neither corpus-cached:
-    //  1. candidate generation reads ONLY the band keys — the shingle
-    //    arrays are projected away before the explode, so the banded
-    //    table is fixed-width narrow rows and nothing corpus-sized is
-    //    shuffled or persisted;
-    //  2. Jaccard verification recomputes shingles for the candidate
-    //    docs alone (jaccardVerify's semi-join) — at 100 TB that is the
-    //    LSH collision set, a small fraction of the corpus.
-    // (The previous eager persist of the full (id, shingles) frame spilled
-    // more than the input corpus to executor disk; the previous
-    // persist-free form re-ran the full kernel for all four branches.)
-    val docs = withShinglesAndSigs(df, idCol, textCol, k, numHashes)
-    val allBanded = docs.select(
-      col(idCol), posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))
+    // Two kernel passes over ONE rebalanced frame (its exchange runs
+    // once), neither corpus-cached: candidate generation reads only the
+    // band keys (fixed-width rows, shingle arrays projected away), and
+    // verification recomputes shingles for the candidate docs alone —
+    // at 100 TB the LSH collision set, a small fraction of the corpus.
+    val narrow = balancedNarrow(df, idCol, textCol)
+    val allBanded = bands(narrow, idCol, "__text", k, numHashes)
     val banded =
       if (maxBucketSize <= 0) allBanded
       // join-against-filtered-aggregate kept over the window-count form
@@ -397,24 +403,18 @@ object Dedup {
           .filter(col("__bn") <= maxBucketSize)
           .select("band_idx", "band_hash"),
         Seq("band_idx", "band_hash"))
-    // Shuffle key is (band_idx, band_hash): same-bucket docs co-locate, so
-    // the pair join is local to each bucket — no all-pairs blowup.
-    val x = banded.select(col("band_idx"), col("band_hash"), col(idCol).as("a"))
-    val y = banded.select(col("band_idx"), col("band_hash"), col(idCol).as("b"))
-    // SHUFFLE_MERGE pinned: every side here is corpus-sized kernel output
-    // whose size Catalyst under-estimates from the parquet scan (the
-    // shingle explosion happens above the scan) — an auto-broadcast of an
-    // amplified side is an executor OOM at scale, so the bucket joins
-    // must shuffle by key, never broadcast. The two sides canonicalize to
-    // the same exchange, so ReuseExchange runs the band kernel once.
-    // Candidate pairs persist (lazily): they are read three times below
-    // (two verify joins + the id semi-join) and are collision-bounded
-    // tiny — never corpus-sized.
-    val cands = x.hint("merge").join(y, Seq("band_idx", "band_hash"))
+    // Bucket self-join on (band_idx, band_hash): same-bucket docs
+    // co-locate, no all-pairs blowup. SHUFFLE_MERGE pinned: both sides
+    // are corpus-sized kernel output Catalyst under-estimates from the
+    // scan, and an auto-broadcast of it is an executor OOM at scale. The
+    // sides share one exchange (a ReusedExchange in the executed plan),
+    // so the band kernel runs once. A pair sharing several buckets
+    // arrives once per bucket; the verify step absorbs the repeats.
+    val cands = keyed(banded, idCol, "a").hint("merge")
+      .join(keyed(banded, idCol, "b"), Seq("band_idx", "band_hash"))
       .filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-      .transform(scratchPersist)
-    jaccardVerify(df, idCol, textCol, k, cands, thresholdNum, thresholdDen)
+      .select("a", "b")
+    jaccardVerify(narrow, idCol, "__text", k, cands, thresholdNum, thresholdDen)
   }
 
   /** INCREMENTAL near-dup: pairs where at least one side is in the new
@@ -439,31 +439,33 @@ object Dedup {
       thresholdNum: Int = 1, thresholdDen: Int = 2): DataFrame = {
     require(thresholdNum > 0 && thresholdDen > 0,
       "Jaccard threshold must be a positive rational")
-    def banded(df: DataFrame): DataFrame =
-      withShinglesAndSigs(df, idCol, textCol, k, numHashes).select(
-        col(idCol), posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))
-    val bandedBatch = banded(batch)
+    val bandedBatch = bands(batch, idCol, textCol, k, numHashes)
       .transform(scratchPersist)
-    // ONE bucket join of the batch against (corpus ∪ batch) bands
-    // replaces the former batch×corpus + batch×batch join pair (§2.4
-    // fewer shuffles): with disjoint id spaces, {unordered pairs sharing
-    // a bucket with ≥1 batch side} = batch × (corpus ∪ batch) minus the
-    // self-hits — least/greatest normalizes orientation (a within-batch
-    // pair arrives in both orientations, the cross pair in one) and the
-    // existing distinct collapses them. Same candidate set, one SMJ and
-    // one union branch fewer at every scale; the y-side exchange carries
-    // corpus+batch bands once instead of corpus and batch separately.
-    val bandedAll = banded(corpus).unionByName(bandedBatch)
-    val x = bandedBatch.select(col("band_idx"), col("band_hash"), col(idCol).as("a"))
-    val cands = x.hint("merge")
-      .join(bandedAll.select(
-        col("band_idx"), col("band_hash"), col(idCol).as("b")),
+    batchPairs(corpus, batch, bandedBatch,
+      bands(corpus, idCol, textCol, k, numHashes), idCol, textCol, k,
+      thresholdNum, thresholdDen)
+  }
+
+  /** The verified pairs of the incremental operators, from the batch's
+    * bands and the standing corpus's. ONE bucket join of the batch
+    * against (corpus ∪ batch) bands replaces a batch×corpus plus a
+    * batch×batch join (§2.4 fewer shuffles): with disjoint id spaces,
+    * {unordered pairs sharing a bucket with ≥1 batch side} =
+    * batch × (corpus ∪ batch) minus the self-hits. least/greatest
+    * normalizes orientation (a within-batch pair arrives in both
+    * orientations, a cross pair in one) and the verify step drops the
+    * duplicates. SHUFFLE_MERGE pinned: the batch side is kernel-amplified
+    * output Catalyst under-estimates. */
+  private def batchPairs(
+      corpus: DataFrame, batch: DataFrame, bandedBatch: DataFrame,
+      bandedCorpus: DataFrame, idCol: String, textCol: String, k: Int,
+      thresholdNum: Int, thresholdDen: Int): DataFrame = {
+    val cands = keyed(bandedBatch, idCol, "a").hint("merge")
+      .join(keyed(bandedCorpus.unionByName(bandedBatch), idCol, "b"),
         Seq("band_idx", "band_hash"))
       .filter(col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("a"),
         greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .transform(scratchPersist)
     jaccardVerify(corpus.unionByName(batch), idCol, textCol, k, cands,
       thresholdNum, thresholdDen)
   }
@@ -481,8 +483,9 @@ object Dedup {
     * same pattern as [[graft.operators.Similarity.ivfPartitionedTopK]]'s
     * cell index. At 100 TB this is a one-time map-only write (one narrow
     * kernel pass over the corpus, numBands rows per doc); each daily
-    * batch then probes the index instead of recomputing corpus bands. */
-  /** Build-ONCE semantics: a completed index (parquet `_SUCCESS` marker
+    * batch then probes the index instead of recomputing corpus bands.
+    *
+    * Build-ONCE semantics: a completed index (parquet `_SUCCESS` marker
     * present) is reused, not rebuilt — that is the operator's entire
     * point (the corpus index amortizes over every ingest batch; callers
     * indexing a different corpus must use a different `indexPath`, which
@@ -492,9 +495,7 @@ object Dedup {
       k: Int = 3, numHashes: Int = 8): Unit = {
     val done = new java.io.File(indexPath, "_SUCCESS")
     if (!done.isFile) {
-      withShinglesAndSigs(corpus, idCol, textCol, k, numHashes)
-        .select(col(idCol),
-          posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))
+      bands(corpus, idCol, textCol, k, numHashes)
         .withColumn("band_pfx", bandPfxCol)
         // Range-cluster by the partition key before the partitioned
         // write (§6 small files): without this every write task holds
@@ -527,33 +528,14 @@ object Dedup {
     require(thresholdNum > 0 && thresholdDen > 0,
       "Jaccard threshold must be a positive rational")
     val spark = corpus.sparkSession
-    val bandedBatch = withShinglesAndSigs(batch, idCol, textCol, k, numHashes)
-      .select(col(idCol),
-        posexplode(col("bandkeys")).as(Seq("band_idx", "band_hash")))
+    val bandedBatch = bands(batch, idCol, textCol, k, numHashes)
       .transform(scratchPersist)
     val probedPfx = bandedBatch.select(bandPfxCol.as("band_pfx"))
       .distinct().collect().map(_.getString(0)).sorted
     val index = spark.read.parquet(indexPath)
       .filter(col("band_pfx").isin(probedPfx: _*))
-      .select(col("band_idx"), col("band_hash"), col(idCol).as("b"))
-    val x = bandedBatch.select(
-      col("band_idx"), col("band_hash"), col(idCol).as("a"))
-    // ONE bucket join of the batch against (index ∪ batch) bands — the
-    // same §2.4 join fusion as the in-memory variant: identical
-    // candidate set (disjoint id spaces; least/greatest + distinct
-    // normalizes the doubled within-batch orientation), one SMJ and one
-    // union branch fewer. SHUFFLE_MERGE pinned for the same reason as
-    // before: the batch side is kernel-amplified output Catalyst
-    // under-estimates.
-    val bandedAll = index.unionByName(bandedBatch.select(
-      col("band_idx"), col("band_hash"), col(idCol).as("b")))
-    val cands = x.hint("merge").join(bandedAll, Seq("band_idx", "band_hash"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("a"),
-        greatest(col("a"), col("b")).as("b"))
-      .distinct()
-      .transform(scratchPersist)
-    jaccardVerify(corpus.unionByName(batch), idCol, textCol, k, cands,
+      .select(col("band_idx"), col("band_hash"), col(idCol))
+    batchPairs(corpus, batch, bandedBatch, index, idCol, textCol, k,
       thresholdNum, thresholdDen)
   }
 
@@ -851,7 +833,7 @@ object Dedup {
     *
     * The blocking pass needs NO text kernel — just an md5 of the prefix —
     * so the shingle kernel runs exactly once, on the candidate docs alone
-    * (jaccardVerify's semi-join). Docs shorter than k words drop out at
+    * (jaccardVerify's id join). Docs shorter than k words drop out at
     * verification (the kernel yields no shingles for them), matching the
     * banded operators' semantics. Threshold 0/1 = report every candidate
     * pair's exact (inter, union) rather than filtering. */
@@ -863,8 +845,7 @@ object Dedup {
     val a = blocks.select(col("blk"), col(idCol).as("a"))
     val b = blocks.select(col("blk"), col(idCol).as("b"))
     val cands = a.hint("merge").join(b, "blk").filter(col("a") < col("b"))
-      .select("a", "b").distinct()
-      .transform(scratchPersist)
+      .select("a", "b")
     jaccardVerify(df, idCol, textCol, k, cands,
       thresholdNum = 0, thresholdDen = 1)
   }

@@ -83,6 +83,24 @@ object LlmOps {
     }
   }
 
+  /** (doc_id, gram): every distinct 5-word shingle of every document,
+    * the corpus side of the decontamination queries. */
+  private def grams5(s: SparkSession, d: String): DataFrame =
+    Dedup.withShinglesAndSigs(documents(s, d), "doc_id", "text", k = 5, numHashes = 2)
+      .select(col("doc_id"), explode(col("shingles")).as("gram"))
+
+  /** The eval slice's distinct grams (doc_id % 97 == 0) and their
+    * serialized bloom filter. The grams persist (r18, §5): the subtree is
+    * a full corpus kernel pass consumed TWICE, by the driver-side bloom
+    * build and the exact join's broadcast side; the persisted frame is
+    * the EVAL-set gram list (MB-scale by contract), never corpus-sized. */
+  private def evalGramsBloom(grams: DataFrame): (DataFrame, Array[Byte]) = {
+    val bench = Dedup.scratchPersist(
+      grams.filter(col("doc_id") % 97 === 0).select("gram").distinct())
+    (bench, graft.expressions.BloomMightContain.serialize(
+      bench.stat.bloomFilter("gram", 1L << 16, 0.03)))
+  }
+
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Exact dedup: deterministic keep-first-by-id per key
     "dd_exact_rownum" -> ((s, d) =>
@@ -864,9 +882,7 @@ object LlmOps {
     // so it broadcasts and the corpus side stays a narrow map + one
     // per-doc aggregate — the 100 TB shape for contamination checks.
     "ta_decontaminate" -> ((s, d) => {
-      val grams = Dedup.withShinglesAndSigs(
-        documents(s, d), "doc_id", "text", k = 5, numHashes = 2)
-        .select(col("doc_id"), explode(col("shingles")).as("gram"))
+      val grams = grams5(s, d)
       val bench = grams.filter(col("doc_id") % 97 === 0)
         .select("gram").distinct()
       grams.filter(col("doc_id") % 97 =!= 0)
@@ -887,19 +903,8 @@ object LlmOps {
     // MB-scale eval set, like the ANN codebooks), shipped as a literal.
     "ta_decontaminate_bloom" -> ((s, d) => {
       graft.expressions.GraftFunctions.register(s)
-      val grams = Dedup.withShinglesAndSigs(
-        documents(s, d), "doc_id", "text", k = 5, numHashes = 2)
-        .select(col("doc_id"), explode(col("shingles")).as("gram"))
-      // bench grams persist (r18, §5): the subtree is a full corpus
-      // kernel pass and is consumed TWICE — the driver-side bloom build
-      // and the exact join's broadcast side. The persisted frame is the
-      // distinct EVAL-set gram list (MB-scale by the operator's own
-      // contract), never corpus-sized.
-      val bench = Dedup.scratchPersist(
-        grams.filter(col("doc_id") % 97 === 0)
-          .select("gram").distinct())
-      val bytes = graft.expressions.BloomMightContain.serialize(
-        bench.stat.bloomFilter("gram", 1L << 16, 0.03))
+      val grams = grams5(s, d)
+      val (bench, bytes) = evalGramsBloom(grams)
       grams.filter(col("doc_id") % 97 =!= 0)
         .filter(call_function("graft_bloom_contains", lit(bytes), col("gram")))
         .join(broadcast(bench), Seq("gram"))
@@ -929,19 +934,11 @@ object LlmOps {
         .withColumn("rn",
           row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
         .filter(col("rn") === 1)
-      val grams = Dedup.withShinglesAndSigs(
-        documents(s, d), "doc_id", "text", k = 5, numHashes = 2)
-        .select(col("doc_id"), explode(col("shingles")).as("gram"))
-      // bench grams persist: eval-set-sized, consumed by both the bloom
-      // build and the broadcast join (the ta_decontaminate_bloom pattern)
-      val bench = Dedup.scratchPersist(
-        grams.filter(col("doc_id") % 97 === 0)
-          .select("gram").distinct())
+      val grams = grams5(s, d)
       // Bloom gate (ta_decontaminate_bloom's contract): false positives
       // pass the gate and die in the exact join below, so the result —
       // and the oracle — are unchanged.
-      val bytes = graft.expressions.BloomMightContain.serialize(
-        bench.stat.bloomFilter("gram", 1L << 16, 0.03))
+      val (bench, bytes) = evalGramsBloom(grams)
       val contaminated = grams.filter(col("doc_id") % 97 =!= 0)
         .filter(call_function("graft_bloom_contains", lit(bytes), col("gram")))
         .join(broadcast(bench), Seq("gram"))

@@ -226,10 +226,11 @@ class DedupSpec extends SparkSpec {
   }
 
   test("releaseScratch drops every persisted scratch block") {
-    // a near-dup run leaves its collision-bounded frames persisted (the
-    // documented lifecycle: scratch must outlive the returned frame) —
-    // releaseScratch is the executable side of that contract
-    Dedup.minhashNearDupPairs(docs, "doc_id", "text").count()
+    // an incremental near-dup run leaves its batch band table persisted
+    // (the documented lifecycle: scratch must outlive the returned
+    // frame) — releaseScratch is the executable side of that contract
+    Dedup.incrementalMinhashPairs(docs.filter($"doc_id" % 2 === 0),
+      docs.filter($"doc_id" % 2 === 1), "doc_id", "text").count()
     assert(spark.sparkContext.getPersistentRDDs.nonEmpty ||
       !spark.sharedState.cacheManager.isEmpty,
       "expected the dedup run to leave scratch blocks registered")

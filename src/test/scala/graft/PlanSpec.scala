@@ -1,9 +1,10 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.{InMemoryRelation, InMemoryTableScanExec}
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, CartesianProductExec}
-import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.exchange.{Exchange, ReusedExchangeExec, ShuffleExchangeExec}
 
 /** Plan-shape regression tests: the scale properties SCALE.md documents,
   * pinned as executable invariants. A change that un-pushes a filter,
@@ -16,6 +17,34 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def planOf(name: String): SparkPlan = {
     val df = SparkEntry.queries(name)(spark, d)
+    df.queryExecution.executedPlan
+  }
+
+  /** The cached relations `p` reads, directly or through other cached
+    * relations, each once. */
+  private def cachedRelations(p: SparkPlan): Seq[InMemoryRelation] = {
+    def direct(q: SparkPlan) =
+      collectWithSubqueries(q) { case im: InMemoryTableScanExec => im.relation }
+    @annotation.tailrec
+    def walk(todo: List[InMemoryRelation], seen: List[InMemoryRelation]): Seq[InMemoryRelation] =
+      todo match {
+        case Nil => seen.reverse
+        case r :: rest if seen.exists(_.cacheBuilder eq r.cacheBuilder) => walk(rest, seen)
+        case r :: rest => walk(direct(r.cacheBuilder.cachedPlan).toList ++ rest, r :: seen)
+      }
+    walk(direct(p).toList, Nil)
+  }
+
+  /** `pf` over `p` and over the plan of every relation it reads from the
+    * cache, each cached plan once. */
+  private def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] =
+    collectWithSubqueries(p)(pf) ++
+      cachedRelations(p).flatMap(r => collectWithSubqueries(r.cacheBuilder.cachedPlan)(pf))
+
+  /** The executed (final adaptive) plan of query `name`, run to the end. */
+  private def executedPlanOf(name: String): SparkPlan = {
+    val df = SparkEntry.queries(name)(spark, d)
+    df.collect()
     df.queryExecution.executedPlan
   }
 
@@ -319,14 +348,6 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // the query's result is scratch-persisted, so the heavy pipeline
     // lives inside an InMemoryRelation — collect must hop through the
     // cached plan (collectWithSubqueries alone sees zero scans)
-    def deepCollect[T](p: SparkPlan)(pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-      val here = collectWithSubqueries(p)(pf)
-      val cached = collectWithSubqueries(p) {
-        case im: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec =>
-          im.relation.cachedPlan
-      }.flatMap(deepCollect(_)(pf))
-      here ++ cached
-    }
     val plan = planOf("dd_span_dedup")
     val scans = deepCollect(plan) {
       case s: org.apache.spark.sql.execution.FileSourceScanExec => s
@@ -386,5 +407,61 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
         s"sim_topk_ivf_trained codegen stage ${w.codegenStageId} is " +
           s"$chars chars of source")
     }
+  }
+
+  test("minhash verify family stays within its plan budget: exchanges and " +
+    "cached relations in the executed plan") {
+    // Ceilings are the executed counts at this fixture (local[2]); an
+    // Exchange is a shuffle or a broadcast, a ReusedExchange is neither.
+    // dd_cluster and dd_canonical_stats read checkpointed labels, so
+    // their budget covers only the plan after the checkpoint.
+    val budget = Map( // query -> (exchanges, cached relations)
+      "dd_minhash_neardup" -> (5, 0),
+      "dd_minhash_capped" -> (8, 0), // 7 or 8: AQE may broadcast the cap side
+      "dd_cluster" -> (1, 0),
+      "dd_canonical_stats" -> (5, 0),
+      "dd_ngram_jaccard" -> (5, 0),
+      "dd_incremental" -> (8, 1),
+      "dd_incremental_indexed" -> (7, 1))
+    val got = budget.keys.toSeq.sorted.map { q =>
+      val plan = executedPlanOf(q)
+      q -> (deepCollect(plan) { case e: Exchange => e }.size, cachedRelations(plan).size)
+    }.toMap
+    budget.foreach { case (q, (ex, im)) =>
+      assert(got(q)._1 <= ex && got(q)._2 <= im,
+        s"$q: ${got(q)._1} exchanges / ${got(q)._2} cached relations, budget $ex / $im " +
+          s"(all: $got)")
+    }
+  }
+
+  test("minhash runs each text kernel once, and its documents exchange " +
+    "serves both the banding kernel and the verify join") {
+    val plan = executedPlanOf("dd_minhash_neardup")
+    val kernels = deepCollect(plan) {
+      case g: GenerateExec
+          if g.generator.exists(_.isInstanceOf[graft.expressions.ShingleBands]) => g
+    }
+    // one banding pass over the corpus + one verify pass over candidates;
+    // the bucket self-join's second side and the verify join's documents
+    // side both read exchanges that already ran
+    assert(kernels.size == 2, s"expected 2 kernel Generates, got ${kernels.size}")
+    assert(deepCollect(plan) { case r: ReusedExchangeExec => r }.size >= 2,
+      "expected the band and documents exchanges to be reused")
+  }
+
+  test("the text kernels rebalance an under-split scan, never a frame " +
+    "already spread by an exchange") {
+    import org.apache.spark.sql.catalyst.plans.logical.RepartitionOperation
+    import org.apache.spark.sql.functions.col
+    def rebalanced(df: org.apache.spark.sql.DataFrame) =
+      graft.operators.Dedup.withShinglesAndSigs(df, "doc_id", "text", 3, 2)
+        .queryExecution.analyzed.collect { case r: RepartitionOperation => r }.nonEmpty
+    val docs = graft.queries.Tables.documents(spark, d)
+    // a one-file scan is under-split (local[2]) and is rebalanced ...
+    assert(rebalanced(docs.filter(col("doc_id") > 0)))
+    // ... a frame downstream of a join is spread by the join's exchange
+    // (its inputFiles still list the documents file)
+    val joined = docs.join(docs.select("doc_id").filter(col("doc_id") % 7 === 0), "doc_id")
+    assert(!rebalanced(joined), "post-join frame rebalanced again")
   }
 }

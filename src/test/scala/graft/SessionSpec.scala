@@ -54,6 +54,9 @@ class SessionSpec extends SparkSpec {
     val profile = Probe.run(spark, "profile", "a1_group_count", 1, Sf)
     assert(profile.contains(s", $rows rows, "), profile)
     assert(profile.contains("driver gap"), profile)
+    // the codegen line sits under the job table, after the driver-gap line
+    val codegenLine = """== codegen: \d+ classes compiled \(\d+ ms\); warm-up \d+ \(\d+ ms\) ==""".r
+    assert(profile.linesIterator.toSeq.lastOption.exists(codegenLine.matches), profile)
     val plan = Probe.run(spark, "explain", "a1_group_count", 1, Sf)
     assert(plan.contains("== Physical Plan =="), plan)
     assert(!spark.sparkContext.isStopped)
