@@ -32,7 +32,7 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * greatest, so a NaN score passes `>= minScore` exactly as the SQL
   * comparison does). Members sort by id inside the generator —
   * collect_list order is nondeterministic, the output must not be.
-  * The one deliberate divergence (same as [[IvfTop1]]'s): a degenerate
+  * The one deliberate divergence (same as [[IvfTopP]]'s): a degenerate
   * zero-norm member makes the join form's codegen'd division raise
   * DIVIDE_BY_ZERO under Spark 4's default ANSI mode; here the JVM
   * division yields NaN/Infinity scores instead of failing the job.

@@ -77,14 +77,6 @@ object GraftFunctions {
         AllShingles(children.head, k)
       }),
     (
-      FunctionIdentifier("graft_ivf_top1"),
-      new ExpressionInfo(classOf[IvfTop1].getName, "graft_ivf_top1"),
-      (children: Seq[Expression]) => {
-        require(children.size == 3,
-          "graft_ivf_top1 takes (serialized_index, vec, norm)")
-        IvfTop1(children.head, children(1), children(2))
-      }),
-    (
       FunctionIdentifier("graft_ivf_topp"),
       new ExpressionInfo(classOf[IvfTopP].getName, "graft_ivf_topp"),
       (children: Seq[Expression]) => {

@@ -1,23 +1,27 @@
 package graft.expressions
 
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
 
-/** Nearest-IVF-cell assignment as ONE codegen-friendly expression with
-  * triangle-inequality group pruning — the scale fix for the flat-argmax
-  * term the corpus-scaled codebooks introduced.
+/** Nearest-IVF-cells assignment (`graft_ivf_topp`) as ONE codegen-
+  * friendly expression with triangle-inequality group pruning — the
+  * multi-probe kernel every IVF assignment uses: the probe side of the
+  * IVF gates with p = nprobe, and with p = 1 the docs side, the kNN
+  * graph and semantic clustering cells, the persisted index and Lloyd's
+  * training. Returns the P best cells' cent_ids as `array<bigint>`, best
+  * first by (−cosine, cent_id) under Spark's nan-safe struct ordering.
   *
-  * The previous formulation (`array_min(array(struct(-dot/.., cid), ...))`)
-  * inlines one `graft_dot` + struct per cell, so with k = ⌈n/128⌉ cells the
-  * per-row cost is k·dims multiply-adds PLUS k struct allocations and
-  * O(k·dims) of generated expression tree — n·k total work that fits
-  * exponents >1 on the scale ladder (sim_knn_graph e≈1.3, dd_semantic
-  * e≈1.16 on the 10×→30× segment). This expression keeps the identical
-  * semantics but:
+  * An `array_min`/`sort_array` tree over one `struct(-dot/.., cid)` per
+  * cell inlines one `graft_dot` + struct per cell, so with k = ⌈n/128⌉
+  * cells the per-row cost is k·dims multiply-adds PLUS k struct
+  * allocations and O(k·dims) of generated expression tree — n·k total
+  * work that fit exponents >1 on the scale ladder (sim_knn_graph e≈1.3,
+  * dd_semantic e≈1.16 on the 10×→30× segment), and made the first
+  * multi-probe frontier measurement 13× instead of ~4×. This expression
+  * keeps the identical semantics but:
   *
   *  - holds the codebook as PRIMITIVE arrays in a serialized model
   *    artifact (one binary literal, not k literal subtrees), so plan size
@@ -27,82 +31,26 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   *    pre-clustered (driver-side, deterministic) into g ≈ √k groups with
   *    mean `m_g` and radius `r_g = max‖ĉ−m_g‖`; for a unit query x̂,
   *    `cos(x̂,ĉ) = ⟨x̂,ĉ⟩ ≤ ⟨x̂,m_g⟩ + ‖ĉ−m_g‖ ≤ ⟨x̂,m_g⟩ + r_g`,
-  *    so a group whose bound (+ε slack for fp error) is below the best
-  *    similarity found so far cannot contain the argmax and is skipped —
+  *    so a group whose bound (+ε slack for fp error) is below the P-th
+  *    best similarity found so far cannot contribute and is skipped —
   *    typical per-row work drops from k·dims to (g + k/g + spill)·dims.
   *
   * EXACTNESS contract (what keeps every oracle untouched): every cell that
-  * could win IS evaluated — pruning uses `!(bound + ε < best)`, which also
-  * fails-open on NaN bounds — and an evaluated cell's similarity is
-  * computed with bit-identical arithmetic to the old expression tree
-  * (same left-to-right dot fold as [[DotProduct]], same `norm * cellNorm`
-  * product order, same negate), compared with Spark's exact struct
-  * ordering (nan-safe double compare, then cent_id asc). Rows whose
-  * length differs from the codebook's dims, or with non-finite norms,
-  * fall back to the flat full scan — still bit-identical, never wrong.
-  * The one deliberate divergence: a zero/NaN norm (degenerate vector)
-  * yields NaN sims and the lowest cent_id under nan-safe ordering —
-  * the non-ANSI fold semantics — where the literal tree raises
+  * could rank IS evaluated — pruning uses `!(bound + ε < worstKept)`,
+  * which also fails-open on NaN bounds — and an evaluated cell's
+  * similarity is computed with bit-identical arithmetic to the expression
+  * tree (same left-to-right dot fold as [[DotProduct]], same
+  * `norm * cellNorm` product order, same negate), compared with Spark's
+  * exact struct ordering (nan-safe double compare, then cent_id asc).
+  * Rows whose length differs from the codebook's dims, or with non-finite
+  * norms, fall back to the flat full scan — still bit-identical, never
+  * wrong. The one deliberate divergence: a zero/NaN norm (degenerate
+  * vector) yields NaN sims and the lowest cent_ids under nan-safe
+  * ordering — the non-ANSI fold semantics — where the literal tree raises
   * DIVIDE_BY_ZERO under Spark 4's default ANSI mode and fails the job.
-  *
-  * Returns `struct<negsim double, cent_id long>` — a drop-in for the
-  * `array_min` formulation's result.
+  * `p` is a literal constructor parameter (the CellPairs pattern), so
+  * codegen stays branch-free.
   */
-case class IvfTop1(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (BinaryType, ArrayType(DoubleType, _), DoubleType)
-          if first.foldable && first.eval(null) != null =>
-        TypeCheckResult.TypeCheckSuccess
-      case (BinaryType, ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckFailure(
-          "graft_ivf_top1: index must be a non-null foldable binary literal")
-      case (a, b, c) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"graft_ivf_top1 requires (binary, array<double>, double), got " +
-            s"${a.simpleString}, ${b.simpleString}, ${c.simpleString}")
-    }
-
-  override def dataType: DataType = StructType(Seq(
-    StructField("negsim", DoubleType, nullable = false),
-    StructField("cent_id", LongType, nullable = false)))
-
-  override def prettyName: String = "graft_ivf_top1"
-
-  /** Deserialized once per task from the foldable literal, not per row. */
-  @transient private lazy val index: IvfPrunedIndex =
-    IvfPrunedIndex.deserialize(first.eval(null).asInstanceOf[Array[Byte]])
-
-  override def nullSafeEval(bytes: Any, vec: Any, norm: Any): Any =
-    index.assignTop1(vec.asInstanceOf[ArrayData],
-      norm.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("ivfIndex", index,
-      classOf[IvfPrunedIndex].getName)
-    nullSafeCodeGen(ctx, ev, (_, vec, norm) =>
-      s"${ev.value} = $ref.assignTop1($vec, $norm);")
-  }
-
-  override protected def withNewChildrenInternal(
-      f: Expression, s: Expression, t: Expression): IvfTop1 =
-    copy(first = f, second = s, third = t)
-}
-
-/** TOP-P variant of [[IvfTop1]] (`graft_ivf_topp`): the multi-probe
-  * assignment kernel — returns the P best cells' cent_ids (best first,
-  * identical (negsim, cent_id) ordering, head always == top-1) as
-  * `array<bigint>`, with the same serialized-index artifact, the same
-  * O(1)-in-k plan size, and the same group pruning generalized to a
-  * P-deep candidate set. Every IVF probe side assigns its cells with it
-  * (ivfTopK, ivfPqTopK, probeIvfIndexTopK, the two-level L1
-  * multi-probe); the naive alternative — sort_array over k literal cell
-  * structs — generated code that grows with k × dims, and made the
-  * first multi-probe frontier measurement 13× instead of ~4×. `p` is a
-  * literal constructor parameter (the CellPairs pattern), so codegen
-  * stays branch-free. */
 case class IvfTopP(first: Expression, second: Expression, third: Expression,
     p: Int) extends TernaryExpression {
 
@@ -127,7 +75,7 @@ case class IvfTopP(first: Expression, second: Expression, third: Expression,
   override def prettyName: String = "graft_ivf_topp"
 
   @transient private lazy val index: IvfPrunedIndex =
-    IvfPrunedIndex.deserialize(first.eval(null).asInstanceOf[Array[Byte]])
+    ModelLiteral.deserialize[IvfPrunedIndex](first.eval(null), prettyName)
 
   override def nullSafeEval(bytes: Any, vec: Any, norm: Any): Any =
     index.assignTopP(vec.asInstanceOf[ArrayData],
@@ -145,9 +93,10 @@ case class IvfTopP(first: Expression, second: Expression, third: Expression,
     copy(first = f, second = s, third = t)
 }
 
-/** The serialized model artifact behind [[IvfTop1]]: the codebook flattened
+/** The serialized model artifact behind [[IvfTopP]]: the codebook flattened
   * to primitive arrays plus the driver-computed pruning groups. Built once
   * per codebook on the driver, shipped as one binary literal. */
+@SerialVersionUID(-560561436893737401L) // see ModelLiteral
 final class IvfPrunedIndex(
     val dims: Int,
     val cellCid: Array[Long],      // cid asc within group, groups contiguous
@@ -163,115 +112,13 @@ final class IvfPrunedIndex(
 
   private def numGroups: Int = groupR.length
 
-  /** Exact top-1 cell: bit-identical to
-    * `array_min(array(struct(-dot(x,c)/(norm*nrm), cid) for each cell))`. */
-  def assignTop1(vec: ArrayData, norm: Double): InternalRow = {
-    val n = vec.numElements()
-    val xs = new Array[Double](n)
-    var i = 0
-    while (i < n) { xs(i) = vec.getDouble(i); i += 1 }
-
-    var bestNeg = 0.0
-    var bestCid = 0L
-    var init = false
-
-    // evaluate every cell in [from, until): same arithmetic as the old
-    // per-cell expression tree — left-to-right dot, norm*cellNrm, negate
-    def scan(from: Int, until: Int): Unit = {
-      var ci = from
-      while (ci < until) {
-        val m = if (n < dims) n else dims
-        var acc = 0.0
-        var j = 0
-        val off = ci * dims
-        while (j < m) { acc += xs(j) * cellVec(off + j); j += 1 }
-        val neg = -(acc / (norm * cellNrm(ci)))
-        val c = cmpDouble(neg, bestNeg)
-        if (!init || c < 0 || (c == 0 && cellCid(ci) < bestCid)) {
-          bestNeg = neg; bestCid = cellCid(ci); init = true
-        }
-        ci += 1
-      }
-    }
-
-    // Pruning is only sound for a true unit-normalized query: norm must be
-    // the L2 norm of vec and lengths must agree. Anything else (zero/NaN
-    // norms, truncated rows) exactly replays the flat scan.
-    if (numGroups <= 1 || n != dims || !(norm > 0.0) ||
-        java.lang.Double.isInfinite(norm)) {
-      scan(0, cellCid.length)
-    } else {
-      val g = numGroups
-      val bounds = new Array[Double](g)
-      var gi = 0
-      while (gi < g) {
-        var acc = 0.0
-        var j = 0
-        val off = gi * dims
-        while (j < dims) { acc += xs(j) * groupMean(off + j); j += 1 }
-        bounds(gi) = acc / norm + groupR(gi)
-        gi += 1
-      }
-      if (probeGroups > 0 && probeGroups < g) {
-        // APPROXIMATE mode (the corpus-scaled-k contract, see
-        // Similarity.semanticNearDupPairs): evaluate only the probeGroups
-        // best-bound groups. Deterministic — selection by (bound desc,
-        // group idx asc) with nan-safe compare (a NaN bound sorts first =
-        // probed, the fail-open direction). The exact-prune fallback below
-        // is vacuous exactly when approximation matters: a query whose
-        // best similarity is small (decorrelated vector) has every group
-        // bound above it, so the exact path degenerates to the flat scan
-        // — measured as the n·k assignment term at the 1000x ladder point.
-        val chosen = new Array[Boolean](g)
-        var pi = 0
-        while (pi < probeGroups) {
-          var best = -1
-          gi = 0
-          while (gi < g) {
-            if (!chosen(gi) &&
-              (best < 0 || cmpDouble(bounds(gi), bounds(best)) > 0)) best = gi
-            gi += 1
-          }
-          chosen(best) = true
-          scan(groupStart(best), groupStart(best + 1))
-          pi += 1
-        }
-      } else {
-        // EXACT mode: seed with the best-bound group (NaN sorts first =
-        // evaluated), then prune only groups that provably cannot win
-        var gmax = 0
-        gi = 1
-        while (gi < g) {
-          if (cmpDouble(bounds(gi), bounds(gmax)) > 0) gmax = gi
-          gi += 1
-        }
-        scan(groupStart(gmax), groupStart(gmax + 1))
-        gi = 0
-        while (gi < g) {
-          // fail-open form: NaN bound or NaN best never prunes; `init` guards
-          // the degenerate no-best-yet state (an empty seed group would leave
-          // bestNeg at its 0.0 sentinel and wrongly prune anti-correlated
-          // groups) — build() compacts empty groups away, this is the belt
-          if (gi != gmax && !(init && bounds(gi) + Eps < -bestNeg))
-            scan(groupStart(gi), groupStart(gi + 1))
-          gi += 1
-        }
-      }
-    }
-    val out = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(2)
-    out.update(0, bestNeg)
-    out.update(1, bestCid)
-    out
-  }
-
-  /** Exact (or probed, mirroring [[assignTop1]]'s probeGroups contract)
-    * TOP-P cells, best first — the multi-probe assignment kernel behind
-    * `graft_ivf_topp`. Ordering is the identical nan-safe
-    * (negsim, cent_id) struct ordering as top-1, so the head of the
-    * returned array always equals `assignTop1`'s cent_id; pruning in
-    * exact mode compares a group's Cauchy-Schwarz bound against the
-    * CURRENT P-TH BEST (only once p candidates exist — fail-open before
-    * that and on NaN, like top-1). Returns min(p, k) cent_ids. */
+  /** Exact (or probed, see `probeGroups`) TOP-P cells, best first — the
+    * kernel behind `graft_ivf_topp`. Ordering is the nan-safe
+    * (negsim, cent_id) struct ordering; pruning in exact mode compares a
+    * group's Cauchy-Schwarz bound against the CURRENT P-TH BEST, only
+    * once p candidates exist (fail-open before that and on NaN). At
+    * p = 1 this is the top-1 argmax: the same tie order, NaN order and
+    * pruning test. Returns min(p, k) cent_ids. */
   def assignTopP(vec: ArrayData, norm: Double, p: Int): ArrayData = {
     val n = vec.numElements()
     val xs = new Array[Double](n)
@@ -330,8 +177,15 @@ final class IvfPrunedIndex(
         gi += 1
       }
       if (probeGroups > 0 && probeGroups < g) {
-        // probed mode: same deterministic (bound desc, idx asc) group
-        // selection as top-1 — the candidates just feed a P-deep heap
+        // APPROXIMATE mode (the corpus-scaled-k contract, see
+        // Similarity.semanticNearDupPairs): evaluate only the probeGroups
+        // best-bound groups. Deterministic — selection by (bound desc,
+        // group idx asc) with nan-safe compare (a NaN bound sorts first =
+        // probed, the fail-open direction). The exact-prune path below
+        // is vacuous exactly when approximation matters: a query whose
+        // best similarity is small (decorrelated vector) has every group
+        // bound above it, so exact mode degenerates to the flat scan —
+        // measured as the n·k assignment term at the 1000x ladder point.
         val chosen = new Array[Boolean](g)
         var pi = 0
         while (pi < probeGroups) {
@@ -347,6 +201,8 @@ final class IvfPrunedIndex(
           pi += 1
         }
       } else {
+        // EXACT mode: seed with the best-bound group (NaN sorts first =
+        // evaluated), then prune only groups that provably cannot rank
         var gmax = 0
         gi = 1
         while (gi < g) {
@@ -358,6 +214,8 @@ final class IvfPrunedIndex(
         while (gi < g) {
           // prune only against a FULL candidate set's worst member —
           // with fewer than cap kept, every group can still contribute
+          // (an empty seed group leaves cnt at 0 and prunes nothing;
+          // build() compacts empty groups away, this is the belt)
           if (gi != gmax &&
             !(cnt == cap && bounds(gi) + Eps < -negs(cap - 1)))
             scan(groupStart(gi), groupStart(gi + 1))
@@ -476,7 +334,7 @@ object IvfPrunedIndex {
 
     // Lloyd's can strand a group with zero members (its mean goes stale);
     // compact those out so every retained group is non-empty — an empty
-    // seed group in assignTop1 would otherwise leave `init` false.
+    // seed group would otherwise leave the candidate set empty.
     if (mu.length > 1) {
       val live = (0 until mu.length).filter(gi => assign.contains(gi))
       if (live.length < mu.length) {
@@ -526,23 +384,5 @@ object IvfPrunedIndex {
     }
     new IvfPrunedIndex(dims, cellCid, cellVec, cellNrm,
       groupStart, groupMean, groupR, probeGroups)
-  }
-
-  def serialize(idx: IvfPrunedIndex): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(idx); oos.close()
-    bos.toByteArray
-  }
-
-  def deserialize(bytes: Array[Byte]): IvfPrunedIndex = {
-    val ois = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try ois.readObject().asInstanceOf[IvfPrunedIndex]
-    catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"graft_ivf_top1: cannot deserialize the ${bytes.length}-byte " +
-          "index literal", e)
-    } finally ois.close()
   }
 }

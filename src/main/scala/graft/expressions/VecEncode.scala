@@ -6,25 +6,25 @@ import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCo
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, IntegerType, LongType}
 
-/** Fused per-row vector-encode kernels — the [[IvfTop1]] treatment applied
-  * to the two remaining literal-tree hot paths the 100× ladder point
-  * surfaced:
+/** Fused per-row vector-encode kernels — the `graft_ivf_topp` treatment
+  * ([[IvfTopP]]) applied to the two remaining literal-tree hot paths the
+  * 100× ladder point surfaced:
   *
   *  - [[LshSigs]]: ALL multi-table LSH signatures in one pass over the
   *    vector. The Column formulation evaluates `tables × planes` separate
   *    `graft_dot` calls per row (each re-walking the same ArrayData); with
   *    corpus-scaled plane counts (17 planes × 4 tables at the 100× point)
-  *    that is 68 loop dispatches per row on the full-corpus side of
-  *    `lshTopK` — the measured dominant term of sim_topk_lsh's 70 s.
+  *    that is 68 loop dispatches per row on the full-corpus side of the
+  *    LSH gate — the measured dominant term of sim_topk_lsh's 70 s.
   *  - [[PqEncode]]: ALL product-quantization subspace codes in one pass.
   *    The Column formulation is `array_min` over `cents` struct subtrees
   *    per subspace (64 struct allocations per row at 4×16), run per doc in
-  *    every pqTopK/ivfPqTopK encode AND per Lloyd's iteration in
+  *    every ADC-scored top-k AND per Lloyd's iteration in
   *    trainSubCodebooks.
   *
   * Both hold their model (plane matrix / sub-codebooks) as ONE serialized
-  * binary literal — plan and codegen size O(1) in the model — and replay
-  * the replaced expression trees bit-for-bit:
+  * binary literal ([[ModelLiteral]]) — plan and codegen size O(1) in the
+  * model — and replay the replaced expression trees bit-for-bit:
   *  - identical left-to-right double folds (`acc += x(j) * m(j)`, same
   *    element order as [[DotProduct]] / the `slice` subspace views);
   *  - LSH bit test `proj >= 0.0` under SPARK comparison semantics (−0.0
@@ -59,7 +59,7 @@ case class LshSigs(left: Expression, right: Expression)
 
   /** Deserialized once per task from the foldable literal, not per row. */
   @transient private lazy val model: LshPlanesModel =
-    LshPlanesModel.deserialize(left.eval(null).asInstanceOf[Array[Byte]])
+    ModelLiteral.deserialize[LshPlanesModel](left.eval(null), prettyName)
 
   override def nullSafeEval(bytes: Any, vec: Any): Any =
     model.sigs(vec.asInstanceOf[ArrayData])
@@ -77,6 +77,7 @@ case class LshSigs(left: Expression, right: Expression)
 
 /** The serialized model behind [[LshSigs]]: `tables` independent ±1
   * hyperplane matrices flattened row-major (table, plane, dim). */
+@SerialVersionUID(1702618014087919937L) // see ModelLiteral
 final class LshPlanesModel(
     val tables: Int,
     val planes: Int,
@@ -122,27 +123,6 @@ final class LshPlanesModel(
   }
 }
 
-object LshPlanesModel {
-
-  def serialize(m: LshPlanesModel): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(m); oos.close()
-    bos.toByteArray
-  }
-
-  def deserialize(bytes: Array[Byte]): LshPlanesModel = {
-    val ois = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try ois.readObject().asInstanceOf[LshPlanesModel]
-    catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"graft_lsh_sigs: cannot deserialize the ${bytes.length}-byte " +
-          "model literal", e)
-    } finally ois.close()
-  }
-}
-
 /** All PQ subspace codes in one pass — see [[LshSigs]]'s scaladoc. */
 case class PqEncode(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -166,7 +146,7 @@ case class PqEncode(left: Expression, right: Expression)
   override def prettyName: String = "graft_pq_encode"
 
   @transient private lazy val model: PqModel =
-    PqModel.deserialize(left.eval(null).asInstanceOf[Array[Byte]])
+    ModelLiteral.deserialize[PqModel](left.eval(null), prettyName)
 
   override def nullSafeEval(bytes: Any, vec: Any): Any =
     model.encode(vec.asInstanceOf[ArrayData])
@@ -185,7 +165,8 @@ case class PqEncode(left: Expression, right: Expression)
   * slice offset into the full vector plus the sub-codebook (cid ascending)
   * flattened to primitive arrays. `sliceStart` is explicit (not s·width)
   * so trainSubCodebooks can encode ONE evolving subspace per iteration
-  * while pqTopK encodes all of them. */
+  * while ADC scoring encodes all of them. */
+@SerialVersionUID(-5773298605375734736L) // see ModelLiteral
 final class PqModel(
     val width: Int,
     val sliceStart: Array[Int],      // one per encoded subspace
@@ -291,23 +272,5 @@ object PqModel {
       s += 1
     }
     new PqModel(width, starts, cid, cvec, nrm2, clen)
-  }
-
-  def serialize(m: PqModel): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val oos = new java.io.ObjectOutputStream(bos)
-    oos.writeObject(m); oos.close()
-    bos.toByteArray
-  }
-
-  def deserialize(bytes: Array[Byte]): PqModel = {
-    val ois = new java.io.ObjectInputStream(
-      new java.io.ByteArrayInputStream(bytes))
-    try ois.readObject().asInstanceOf[PqModel]
-    catch {
-      case e: Exception => throw new IllegalArgumentException(
-        s"graft_pq_encode: cannot deserialize the ${bytes.length}-byte " +
-          "model literal", e)
-    } finally ois.close()
   }
 }

@@ -397,7 +397,11 @@ object Dedup {
       // per-partition SORT lands exactly on the skewed bucket this guard
       // exists for, while the hash aggregate absorbs the hot key
       // map-side and the join co-partitions with the same exchange.
-      else allBanded.join(
+      // SHUFFLE_MERGE pinned: the cap side has one row per bucket —
+      // corpus-sized at scale — and an unhinted join let AQE broadcast it
+      // or not depending on which stage finished first (7 or 8 exchanges
+      // between identical runs).
+      else allBanded.hint("merge").join(
         allBanded.groupBy("band_idx", "band_hash")
           .agg(count(lit(1)).as("__bn"))
           .filter(col("__bn") <= maxBucketSize)
@@ -424,7 +428,7 @@ object Dedup {
     * was deduped; a daily ingest at 100 TB pays only O(batch·bands) new
     * band rows joined against the corpus's band table (which at scale is
     * the persisted LSH index — the same build-once/probe-many pattern as
-    * [[graft.operators.Similarity.ivfPartitionedTopK]]'s cell index; here
+    * [[graft.operators.Similarity.writeIvfIndex]]'s cell index; here
     * both sides are recomputed because the fixtures are small).
     *
     * Same candidates and the same exact-Jaccard verification a full
@@ -480,7 +484,7 @@ object Dedup {
   /** Build the corpus's LSH band table ONCE as a hive-partitioned parquet
     * index (`partitionBy` the (band_idx, hash-prefix) key) — the
     * build-once/probe-many shape for standing-corpus ingest dedup, the
-    * same pattern as [[graft.operators.Similarity.ivfPartitionedTopK]]'s
+    * same pattern as [[graft.operators.Similarity.writeIvfIndex]]'s
     * cell index. At 100 TB this is a one-time map-only write (one narrow
     * kernel pass over the corpus, numBands rows per doc); each daily
     * batch then probes the index instead of recomputing corpus bands.

@@ -101,7 +101,80 @@ object LlmOps {
       bench.stat.bloomFilter("gram", 1L << 16, 0.03)))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
+  /** The coarse codebook the trained IVF variants share: 16 cells, 2
+    * Lloyd iterations, memoized per fixture content. */
+  private def cb16x2(d: String, emb: DataFrame): Similarity.Codebook =
+    Artifacts.fixtureMemo(d, "cb16x2") {
+      Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
+
+  /** The trained PQ sub-codebooks: 4 subspaces × 16 codes, 2 Lloyd
+    * iterations, memoized per fixture content. */
+  private def pq4x16x2(d: String, emb: DataFrame): Similarity.PqCodebooks =
+    Artifacts.fixtureMemo(d, "pq4x16x2") {
+      Similarity.trainSubCodebooks(emb, "vec_id", "embedding",
+        subspaces = 4, cents = 16, iters = 2, dims = 64) }
+
+  /** The top-5 of the first 10 vectors — the probe set of every sim_topk_*
+    * query and of sim_recall_report — under the gate and scorer built
+    * from the embeddings frame. */
+  private def simTopK(s: SparkSession, d: String,
+      gate: DataFrame => Similarity.Gate,
+      scorer: DataFrame => Similarity.Scorer = _ => Similarity.Exact): DataFrame = {
+    val emb = embeddings(s, d)
+    Similarity.topK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
+      gate(emb), scorer(emb))
+  }
+
+  /** The 8 ANN top-k variants, method → frame. Each defines the query
+    * sim_topk_<method> (the frame ordered by probe_id, rank) and is one
+    * row of sim_recall_report, so the report scores exactly what the
+    * standalone queries return. All are oracle-checked: DuckDB replays
+    * the codebooks (first-16 seeds, Lloyd's iterations unrolled with the
+    * same fixed-point means), the ranked cell assignment, the embedded
+    * ±1 LSH matrices, the PQ encode and LUT dots, and the ranks; recall
+    * floors are unit-tested in SimilaritySpec. */
+  private val annVariants: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    import Similarity._
+    val first16 = (emb: DataFrame) => IvfCells(coarseCodebookOf(emb, "vec_id", "embedding"))
+    val trained16 = (d: String) => (emb: DataFrame) => IvfCells(cb16x2(d, emb))
+    val seedPq = (emb: DataFrame) => pqCodebookOf(emb, "vec_id", "embedding", dims = 64)
+    Seq(
+      // IVF: coarse cells (the first 16 vectors by id), probes search
+      // their 4 nearest — the inverted-file scale path
+      "ivf" -> ((s, d) => simTopK(s, d, first16)),
+      // IVF with a TRAINED codebook (deterministic first-16 init, fixed-
+      // point centroid means — exact integer sums, partition-order-proof)
+      "ivf_trained" -> ((s, d) => simTopK(s, d, trained16(d))),
+      // Multi-table LSH — the 100 TB scale path: 4 independent hyperplane
+      // tables union their candidate buckets (single-table recall decays
+      // with plane count; L tables is the standard repair). The plane
+      // count follows the corpus (one extra plane per doubling past 16k
+      // vectors) so per-probe candidate mass stays ~bounded; it is 8 at
+      // every oracle scale, so the embedded 8-plane matrices replay.
+      "lsh" -> ((s, d) => simTopK(s, d,
+        emb => LshBuckets(lshPlanes(emb.count()), 64, 4))),
+      // Product quantization + asymmetric-distance scoring over all docs
+      // — the vector-compression path: docs carry 4 sub-centroid codes
+      // instead of 64 floats; probes score via per-row lookup tables
+      "pq" -> ((s, d) => simTopK(s, d, _ => AllDocs, emb => Adc(seedPq(emb)))),
+      // IVF-gated PQ — the production ANN stack: cells bound the
+      // candidates, PQ codes + per-probe LUTs score them
+      "ivfpq" -> ((s, d) => simTopK(s, d, first16, emb => Adc(seedPq(emb)))),
+      // IVF-PQ + exact refine: ADC oversamples 3k candidates per probe,
+      // only their full vectors are fetched and re-scored by exact cosine
+      "ivfpq_refined" -> ((s, d) => simTopK(s, d, first16,
+        emb => AdcRefine(seedPq(emb), 3))),
+      // trained coarse cells gate, seed PQ codes score
+      "ivfpq_trained" -> ((s, d) => simTopK(s, d, trained16(d),
+        emb => Adc(seedPq(emb)))),
+      // the FULLY trained stack (the real FAISS recipe): trained coarse
+      // cells AND per-subspace Lloyd's-trained PQ sub-codebooks
+      "ivfpq_trained_pq" -> ((s, d) => simTopK(s, d, trained16(d),
+        emb => Adc(pq4x16x2(d, emb)))))
+  }
+
+  def queries: Map[String, (SparkSession, String) => DataFrame] =
+    Map[String, (SparkSession, String) => DataFrame](
     // Exact dedup: deterministic keep-first-by-id per key
     "dd_exact_rownum" -> ((s, d) =>
       Dedup.exactKeepFirst(documents(s, d), Seq("lang", "source"), "doc_id")
@@ -222,57 +295,24 @@ object LlmOps {
         .orderBy("label")
     }),
 
-    // Brute-force cosine top-5 for the first 10 probe vectors
+    // Brute-force cosine top-5 for the first 10 probe vectors — the exact
+    // baseline sim_recall_report scores every ANN variant against
     "sim_topk_brute" -> ((s, d) =>
-      Similarity.bruteForceTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5)
-        .orderBy("probe_id", "rank")),
-
-    // Multi-table LSH approximate top-5 — the 100 TB scale path: 4
-    // independent hyperplane tables union their candidate buckets
-    // (single-table recall decays with plane count; L tables is the
-    // standard repair). Oracle-checked: all 4 deterministic ±1 matrices
-    // are embedded in the oracle SQL as literals, so DuckDB replays the
-    // exact same signature derivations (same left-fold projection order).
-    // Recall vs brute force is additionally unit-tested in SimilaritySpec.
-    // Plane count follows the corpus (one extra plane per doubling past
-    // 16k vectors, same law family as the kNN cell count) so per-probe
-    // candidate mass stays ~bounded instead of linear in n; identical to
-    // the fixed 8 planes at oracle scales, so the embedded 8-plane
-    // oracle matrices replay unchanged.
-    "sim_topk_lsh" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val planes = Similarity.lshPlanes(emb.count())
-      Similarity.lshTopK(
-        emb, "vec_id", "embedding", col("vec_id") < 10, 5,
-        planes = planes, dims = 64, tables = 4)
-        .orderBy("probe_id", "rank")
-    }),
-
-    // IVF-cell approximate top-5 — the inverted-file scale path. Oracle-
-    // checked: the deterministic codebook (first 16 vectors) and ranked
-    // cell assignment replay in SQL; recall is unit-tested in
-    // SimilaritySpec.
-    "sim_topk_ivf" -> ((s, d) =>
-      Similarity.ivfTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5)
-        .orderBy("probe_id", "rank")),
+      simTopK(s, d, _ => Similarity.AllDocs).orderBy("probe_id", "rank")),
 
     // Recall@k of the ANN stack vs brute force, as EXACT INTEGER counts
-    // on the hash gate: each method re-runs with its standalone query's
-    // exact parameterization, its (probe, neighbor) pairs semi-join the
-    // brute-force top-k, and the report is (method, n_hits, n_possible).
-    // Putting recall ON the oracle gate (not just in SimilaritySpec)
-    // pins it at every scale the driver checks — an index regression
-    // that silently trades recall for speed now hash-mismatches.
+    // on the hash gate: each variant of [[annVariants]] (the very frame
+    // its standalone sim_topk_<method> query ranks), its (probe,
+    // neighbor) pairs semi-join the brute-force top-k, and the report is
+    // (method, n_hits, n_possible). Putting recall ON the oracle gate
+    // (not just in SimilaritySpec) pins it at every scale the driver
+    // checks — an index regression that silently trades recall for speed
+    // now hash-mismatches.
     "sim_recall_report" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val k = 5
-      val pf = col("vec_id") < 10
       // The brute baseline is CONTRACT-BOUNDED output — |probes|·k =
-      // 50 rows at ANY corpus size (pf is a fixed 10-id probe set) — so
-      // it is computed ONCE per execution and pulled to the driver (a
-      // model-artifact-sized collect, the coarseCodebook pattern), then
+      // 50 rows at ANY corpus size (a fixed 10-id probe set) — so it is
+      // computed ONCE per execution and pulled to the driver (a
+      // model-artifact-sized collect, the coarse-codebook pattern), then
       // re-enters each variant's semi-join as a LOCAL relation and the
       // n_possible denominator as a literal. Previously the brute
       // subtree appeared 16× in the unioned plan (one semi-join + one
@@ -282,38 +322,13 @@ object LlmOps {
       // scratchPersist A/B had measured WORSE, 3.68 → 4.00 s, because
       // it kept all 16 subtrees and only added an InMemoryRelation hop;
       // removing 15 of the 16 subtrees is the actual fix).
-      val bruteDf = Similarity.bruteForceTopK(emb, "vec_id", "embedding", pf, k)
+      val bruteDf = simTopK(s, d, _ => Similarity.AllDocs)
         .select("probe_id", "vec_id_n")
       val bruteRows = bruteDf.collect()
       val nPossible = bruteRows.length.toLong
       val brute = s.createDataFrame(
         java.util.Arrays.asList(bruteRows: _*), bruteDf.schema)
-      val planes = Similarity.lshPlanes(emb.count())
-      // EVERY ANN variant rides the report — each re-run with its
-      // standalone query's exact parameterization (and memoized model
-      // artifacts), so a recall regression in any index family, trained
-      // or not, refined or not, hash-mismatches at every gate scale
-      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
-        Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      val pq = Artifacts.fixtureMemo(d, "pq4x16x2") {
-        Similarity.trainSubCodebooks(emb, "vec_id", "embedding",
-          subspaces = 4, cents = 16, iters = 2, dims = 64) }
-      val variants: Seq[(String, DataFrame)] = Seq(
-        "ivf" -> Similarity.ivfTopK(emb, "vec_id", "embedding", pf, k),
-        "ivfpq" -> Similarity.ivfPqTopK(emb, "vec_id", "embedding", pf, k,
-          dims = 64),
-        "lsh" -> Similarity.lshTopK(emb, "vec_id", "embedding", pf, k,
-          planes = planes, dims = 64, tables = 4),
-        "ivf_trained" -> Similarity.ivfTopK(emb, "vec_id", "embedding", pf, k,
-          codebookOpt = Some(cb)),
-        "ivfpq_refined" -> Similarity.ivfPqRefinedTopK(emb, "vec_id",
-          "embedding", pf, k, refine = 3, dims = 64),
-        "ivfpq_trained" -> Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-          pf, k, dims = 64, codebookOpt = Some(cb)),
-        "ivfpq_trained_pq" -> Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-          pf, k, dims = 64, codebookOpt = Some(cb), subCbOpt = Some(pq)),
-        "pq" -> Similarity.pqTopK(emb, "vec_id", "embedding", pf, k,
-          dims = 64))
+      val variants = annVariants.map { case (m, frame) => m -> frame(s, d) }
       // The 8 variant pipelines are INDEPENDENT: same probe set, disjoint
       // index structures, each a chain of sub-second 1-task stages that
       // previously SERIALIZED on the driver (profiled: ~40 jobs of
@@ -377,9 +392,9 @@ object LlmOps {
     // see semanticCodebook) and the one the k = 16 gate queries never
     // execute (one flat group there). k = max(72, ceil(n/64)) forces
     // ceil(sqrt(k)) = 9 pruning groups > probeGroups = 8 at EVERY gate
-    // scale (n = 500/500/2000 -> k = 72), so IvfTop1 runs the
+    // scale (n = 500/500/2000 -> k = 72), so graft_ivf_topp runs the
     // best-8-bound group selection, not the exact prune — asserted by
-    // IvfTop1Spec's "gate parameterization probes" test. The oracle
+    // the IVF kernel spec's "gate parameterization" test. The oracle
     // replays the WHOLE approximate chain term-for-term: normalized
     // cells, 5 fixed-point group-Lloyd iterations (stale means carried
     // for stranded groups), radii, per-row Cauchy-Schwarz bounds, the
@@ -417,89 +432,18 @@ object LlmOps {
         .orderBy("vec_id")
     }),
 
-    // IVF with a TRAINED codebook: 2 Lloyd iterations in DataFrame ops
-    // (deterministic first-16 init, fixed-point centroid means — exact
-    // integer sums, so the distributed mean is partition-order-proof).
-    // Oracle-checked end to end: DuckDB replays BOTH training iterations
-    // unrolled and the probe search on the resulting codebook.
-    "sim_topk_ivf_trained" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
-        Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      Similarity.ivfTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
-        codebookOpt = Some(cb))
-        .orderBy("probe_id", "rank")
-    }),
-
-    // Product quantization + asymmetric-distance scoring — the vector-
-    // compression ANN path: docs carry 4 sub-centroid codes instead of
-    // 64 floats; probes score via per-row lookup tables. Oracle-checked:
-    // DuckDB replays sub-codebook assignment (min-L2, ties cent asc) and
-    // the LUT reconstruction dot exactly.
-    "sim_topk_pq" -> ((s, d) =>
-      Similarity.pqTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5,
-        dims = 64)
-        .orderBy("probe_id", "rank")),
-
-    // IVF-gated PQ — the production ANN stack: coarse cells bound the
-    // candidate set to nprobe cells per probe, PQ codes + per-probe LUTs
-    // score within them. Oracle-checked by composing the two replays
-    // (cell CTEs from sim_topk_ivf, code/LUT CTEs from sim_topk_pq).
-    "sim_topk_ivfpq" -> ((s, d) =>
-      Similarity.ivfPqTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5,
-        dims = 64)
-        .orderBy("probe_id", "rank")),
-
-    // IVF-PQ with a TRAINED coarse codebook: the full production recipe —
-    // Lloyd's-trained cells gate the candidates, PQ codes score them.
-    // DuckDB replays both training iterations AND the PQ reconstruction.
-    "sim_topk_ivfpq_trained" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
-        Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
-        dims = 64, codebookOpt = Some(cb))
-        .orderBy("probe_id", "rank")
-    }),
-
-    // The FULLY trained production stack: Lloyd's-trained coarse cells
-    // gate AND per-subspace Lloyd's-trained PQ sub-codebooks score (the
-    // real FAISS recipe — both levels trained). DuckDB replays the coarse
-    // iterations AND all four subspaces' training iterations unrolled.
-    "sim_topk_ivfpq_trained_pq" -> ((s, d) => {
-      val emb = embeddings(s, d)
-      val cb = Artifacts.fixtureMemo(d, "cb16x2") {
-        Similarity.trainCodebook(emb, "vec_id", "embedding", 16, 2) }
-      val pq = Artifacts.fixtureMemo(d, "pq4x16x2") {
-        Similarity.trainSubCodebooks(emb, "vec_id", "embedding",
-          subspaces = 4, cents = 16, iters = 2, dims = 64) }
-      Similarity.ivfPqTopK(emb, "vec_id", "embedding", col("vec_id") < 10, 5,
-        dims = 64, codebookOpt = Some(cb), subCbOpt = Some(pq))
-        .orderBy("probe_id", "rank")
-    }),
-
-    // IVF-PQ + exact refine — ADC oversamples 3k candidates per probe,
-    // then ONLY those candidates' full vectors are fetched (broadcast id
-    // join into a second scan) and re-scored by exact cosine. Recovers
-    // quantization-error losses at ADC cost; the oracle replays both the
-    // oversample cut and the exact re-rank.
-    "sim_topk_ivfpq_refined" -> ((s, d) =>
-      Similarity.ivfPqRefinedTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5,
-        refine = 3, dims = 64)
-        .orderBy("probe_id", "rank")),
-
     // IVF with a persisted, hive-partitioned cell index: the probe read
     // back prunes to the probes' cell DIRECTORIES (PartitionFilters on
     // cent_id, pinned in PlanSpec) — partition pruning wired into the
     // ANN stack. Hash-identical to sim_topk_ivf by construction.
-    "sim_topk_ivf_pruned" -> ((s, d) =>
-      Similarity.ivfPartitionedTopK(
-        embeddings(s, d), "vec_id", "embedding", col("vec_id") < 10, 5,
-        indexPath = Artifacts.runDir(s, "ivf_index"))
-        .orderBy("probe_id", "rank")),
+    "sim_topk_ivf_pruned" -> ((s, d) => {
+      val idx = Artifacts.runDir(s, "ivf_index")
+      simTopK(s, d, emb => {
+        val cb = Similarity.coarseCodebookOf(emb, "vec_id", "embedding")
+        Similarity.writeIvfIndex(emb, "vec_id", "embedding", idx, cb, "overwrite")
+        Similarity.IvfIndex(idx, cb)
+      }).orderBy("probe_id", "rank")
+    }),
 
     // INCREMENTAL index maintenance — the ingest path a production ANN
     // index lives on: the codebook FREEZES at initial build, a later
@@ -510,18 +454,17 @@ object LlmOps {
     // base ∪ batch is the full corpus and the frozen codebook equals
     // the full-corpus codebook (seed ids 0..15 are all in the base).
     "sim_topk_ivf_append" -> ((s, d) => {
-      val emb = embeddings(s, d)
       val isBatch = col("vec_id") % 5 === 0 && col("vec_id") >= 16
       val idx = Artifacts.runDir(s, "ivf_incr")
-      val cb = Similarity.coarseCodebookOf(
-        emb.filter(!isBatch), "vec_id", "embedding")
-      Similarity.writeIvfIndex(
-        emb.filter(!isBatch), "vec_id", "embedding", idx, cb, "overwrite")
-      Similarity.writeIvfIndex(
-        emb.filter(isBatch), "vec_id", "embedding", idx, cb, "append")
-      Similarity.probeIvfIndexTopK(
-        emb, "vec_id", "embedding", col("vec_id") < 10, 5, idx, cb)
-        .orderBy("probe_id", "rank")
+      simTopK(s, d, emb => {
+        val cb = Similarity.coarseCodebookOf(
+          emb.filter(!isBatch), "vec_id", "embedding")
+        Similarity.writeIvfIndex(
+          emb.filter(!isBatch), "vec_id", "embedding", idx, cb, "overwrite")
+        Similarity.writeIvfIndex(
+          emb.filter(isBatch), "vec_id", "embedding", idx, cb, "append")
+        Similarity.IvfIndex(idx, cb)
+      }).orderBy("probe_id", "rank")
     }),
 
     // Token counting: whitespace tokens, BPE-ish regex tokens, char stats
@@ -974,7 +917,10 @@ object LlmOps {
           round(avg(col("n_chars")), 2).as("avg_chars"))
         .orderBy("source")
     })
-  )
+  ) ++ annVariants.map { case (m, frame) =>
+    s"sim_topk_$m" -> ((s: SparkSession, d: String) =>
+      frame(s, d).orderBy("probe_id", "rank"))
+  }
 
   /** The boilerplate flood text for dd_minhash_capped — lowercase
     * alphanumeric words so Spark's kernel tokenizer and the oracle's
@@ -1109,7 +1055,7 @@ object LlmOps {
   }
 
   /** Seed sub-codebook for subspace `s`: the first-16 vectors' slices,
-    * coded by id-rank (Similarity.subCodebooks' layout). */
+    * coded by id-rank (Similarity.pqCodebookOf's layout). */
   private def duckPqSeed(s: Int): String = {
     val off = s * 16
     s"pc${s}_0 AS (SELECT CAST(row_number() OVER (ORDER BY vec_id) - 1 AS INTEGER) AS cid, " +
@@ -1255,7 +1201,7 @@ object LlmOps {
 
   /** The REFINED IVF-PQ tail: the same ADC scoring, but cut to an
     * oversampled refine·k = 15 candidates per probe (ties vec_id asc,
-    * exactly ivfPqRefinedTopK's row_number cut), then re-scored by EXACT
+    * exactly AdcRefine's rankTopK cut), then re-scored by EXACT
     * cosine over the full vectors and ranked to the final top-5. */
   private val ivfPqRefinedTailSql: String =
     "cents AS (SELECT vec_id AS cent_id, v FROM e WHERE vec_id < 16), " +

@@ -92,9 +92,9 @@ class EdgeCaseSpec extends SparkSpec {
     val emb = (0L until 8L).map { id =>
       (id, Array.tabulate(8)(i => (id * 8 + i + 1).toFloat))
     }.toDF("vec_id", "embedding")
-    val out = Similarity.ivfPqTopK(
-      emb, "vec_id", "embedding", lit(false), 3,
-      centroids = 4, nprobe = 2, subspaces = 4, cents = 4)
+    val out = Similarity.topK(emb, "vec_id", "embedding", lit(false), 3,
+      Similarity.IvfCells(Similarity.coarseCodebookOf(emb, "vec_id", "embedding", 4), 2),
+      Similarity.Adc(Similarity.pqCodebookOf(emb, "vec_id", "embedding", 4, 4)))
     assert(out.count() == 0)
   }
 
@@ -103,18 +103,16 @@ class EdgeCaseSpec extends SparkSpec {
     val emb = (0L until 8L).map { id =>
       (id, Array.tabulate(8)(i => (id * 8 + i + 1).toFloat))
     }.toDF("vec_id", "embedding")
-    assert(Similarity.ivfPqRefinedTopK(
-      emb, "vec_id", "embedding", lit(false), 3,
-      centroids = 4, nprobe = 2, subspaces = 4, cents = 4).count() == 0)
+    val gate = Similarity.IvfCells(
+      Similarity.coarseCodebookOf(emb, "vec_id", "embedding", 4), 2)
+    val pq = Similarity.pqCodebookOf(emb, "vec_id", "embedding", 4, 4)
+    def refined(probes: org.apache.spark.sql.Column, refine: Int) =
+      Similarity.topK(emb, "vec_id", "embedding", probes, 3, gate,
+        Similarity.AdcRefine(pq, refine))
+    assert(refined(lit(false), 3).count() == 0)
     // refine=1: candidate set == final k — still ranks, never throws
-    assert(Similarity.ivfPqRefinedTopK(
-      emb, "vec_id", "embedding", col("vec_id") === 0L, 3, refine = 1,
-      centroids = 4, nprobe = 2, subspaces = 4, cents = 4).count() <= 3)
-    intercept[IllegalArgumentException] {
-      Similarity.ivfPqRefinedTopK(
-        emb, "vec_id", "embedding", lit(true), 3, refine = 0,
-        centroids = 4, nprobe = 2, subspaces = 4, cents = 4)
-    }
+    assert(refined(col("vec_id") === 0L, 1).count() <= 3)
+    intercept[IllegalArgumentException] { refined(lit(true), 0) }
   }
 
   test("IVF zero vectors take the kernel's NaN contract (lowest cent_ids), " +
@@ -128,22 +126,22 @@ class EdgeCaseSpec extends SparkSpec {
         if (i == 2 * c) 10f + id else if (i == 7) 1f else 0f))
     }
     val emb = (vecs :+ ((99L, Array.fill(8)(0f)))).toDF("vec_id", "embedding")
-    // ivfTopK: the zero doc lands in cell 0, which no probe visits here
+    // IvfCells: the zero doc lands in cell 0, which no probe visits here
     // (nprobe = 1, probes sit in cells 1 and 2), so results are exactly
     // those of the corpus without it
     def ivf(df: org.apache.spark.sql.DataFrame) =
-      Similarity.ivfTopK(df, "vec_id", "embedding",
-        col("vec_id").isin(1L, 2L), 3, centroids = 3, nprobe = 1)
+      Similarity.topK(df, "vec_id", "embedding", col("vec_id").isin(1L, 2L), 3,
+        Similarity.IvfCells(Similarity.coarseCodebookOf(df, "vec_id", "embedding", 3), 1))
         .orderBy("probe_id", "rank").collect().toSeq
     val withZero = ivf(emb)
     assert(withZero.nonEmpty)
     assert(withZero == ivf(vecs.toDF("vec_id", "embedding")))
-    // ivfPqTopK: the zero PROBE gets NaN sims for every cell, so it
+    // IvfCells + Adc: the zero PROBE gets NaN sims for every cell, so it
     // probes the two lowest cent_ids (cells 0 and 1); every ADC score is
     // 0.0 and ties rank id asc
-    val pq = Similarity.ivfPqTopK(emb, "vec_id", "embedding",
-      col("vec_id") === 99L, 3, centroids = 3, nprobe = 2,
-      subspaces = 4, cents = 4)
+    val pq = Similarity.topK(emb, "vec_id", "embedding", col("vec_id") === 99L, 3,
+      Similarity.IvfCells(Similarity.coarseCodebookOf(emb, "vec_id", "embedding", 3), 2),
+      Similarity.Adc(Similarity.pqCodebookOf(emb, "vec_id", "embedding", 4, 4)))
       .orderBy("rank").as[(Long, Long, Int, Double)].collect().toSeq
     assert(pq == Seq((99L, 0L, 1, 0.0), (99L, 1L, 2, 0.0), (99L, 3L, 3, 0.0)))
   }

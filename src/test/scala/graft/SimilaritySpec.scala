@@ -1,6 +1,7 @@
 package graft
 
 import graft.operators.Similarity
+import graft.operators.Similarity.{Adc, AdcRefine, AllDocs, IvfCells, IvfIndex, LshBuckets}
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -23,9 +24,15 @@ class SimilaritySpec extends SparkSpec {
     (base ++ dups).toDF("vec_id", "embedding")
   }
 
+  private def topK(probes: org.apache.spark.sql.Column, k: Int,
+      gate: Similarity.Gate, scorer: Similarity.Scorer = Similarity.Exact) =
+    Similarity.topK(fixture, "vec_id", "embedding", probes, k, gate, scorer)
+  private def cells(n: Int) = Similarity.coarseCodebookOf(fixture, "vec_id", "embedding", n)
+  private def pqSeed(cents: Int) =
+    Similarity.pqCodebookOf(fixture, "vec_id", "embedding", 4, cents)
+
   test("bruteForceTopK finds planted near-duplicates at rank 1") {
-    val out = Similarity.bruteForceTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3)
+    val out = topK(col("vec_id") < 5, 3, AllDocs)
       .filter(col("rank") === 1).collect()
     assert(out.length == 5)
     out.foreach { r =>
@@ -35,8 +42,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopK recalls planted near-duplicates (same bucket, cos≈1)") {
-    val out = Similarity.lshTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3)
+    val out = topK(col("vec_id") < 5, 3, LshBuckets(8, 64, 1))
       .filter(col("rank") === 1).collect()
     // a near-identical vector lands in the same bucket for every plane
     assert(out.length == 5)
@@ -46,9 +52,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("ivfTopK recalls planted near-duplicates through cell routing") {
-    val out = Similarity.ivfTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3,
-      centroids = 8, nprobe = 2)
+    val out = topK(col("vec_id") < 5, 3, IvfCells(cells(8), 2))
       .filter(col("rank") === 1).collect()
     // the perturbed twin lands in the same coarse cell as its original
     assert(out.length == 5)
@@ -63,9 +67,7 @@ class SimilaritySpec extends SparkSpec {
     // its original's coarse cell, so gating never loses it. (Rank-1 is
     // NOT asserted — ADC is quantized; exactness is pinned separately by
     // the sub-centroid test below and the DuckDB hash compare.)
-    val gated = Similarity.ivfPqTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 100,
-      centroids = 8, nprobe = 2, subspaces = 4, cents = 8)
+    val gated = topK(col("vec_id") < 5, 100, IvfCells(cells(8), 2), Adc(pqSeed(8)))
       .select("probe_id", "vec_id_n", "score_r")
       .as[(Long, Long, Double)].collect()
     val pairs = gated.map(r => (r._1, r._2)).toSet
@@ -74,9 +76,7 @@ class SimilaritySpec extends SparkSpec {
         s"cell gate dropped probe $p's planted twin")
     }
     // score consistency: the gate changes WHICH pairs score, never HOW
-    val ungated = Similarity.pqTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 100,
-      subspaces = 4, cents = 8)
+    val ungated = topK(col("vec_id") < 5, 100, AllDocs, Adc(pqSeed(8)))
       .select("probe_id", "vec_id_n", "score_r")
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
@@ -87,13 +87,9 @@ class SimilaritySpec extends SparkSpec {
 
   test("ivfPqTopK scores a strict subset of pqTopK's candidates (cell gate)") {
     // k exceeds the corpus so BOTH sides return their full candidate set
-    val gated = Similarity.ivfPqTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 100,
-      centroids = 8, nprobe = 2, subspaces = 4, cents = 8)
+    val gated = topK(col("vec_id") < 5, 100, IvfCells(cells(8), 2), Adc(pqSeed(8)))
       .select("probe_id", "vec_id_n").as[(Long, Long)].collect().toSet
-    val ungated = Similarity.pqTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 100,
-      subspaces = 4, cents = 8)
+    val ungated = topK(col("vec_id") < 5, 100, AllDocs, Adc(pqSeed(8)))
       .select("probe_id", "vec_id_n").as[(Long, Long)].collect().toSet
     assert(gated.subsetOf(ungated), "gating must only REMOVE candidates")
     assert(gated.size < ungated.size,
@@ -105,9 +101,8 @@ class SimilaritySpec extends SparkSpec {
     // neighbour within the candidate set, but the exact re-rank restores
     // it — rank-1 IS asserted here (vs. the ADC-only test above, where it
     // deliberately isn't), with the brute-force-exact rounded score.
-    val out = Similarity.ivfPqRefinedTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3, refine = 3,
-      centroids = 8, nprobe = 2, subspaces = 4, cents = 8)
+    val out = topK(col("vec_id") < 5, 3, IvfCells(cells(8), 2),
+      AdcRefine(pqSeed(8), 3))
       .filter(col("rank") === 1).collect()
     assert(out.length == 5)
     out.foreach { r =>
@@ -116,14 +111,11 @@ class SimilaritySpec extends SparkSpec {
       assert(r.getAs[Double]("score_r") > 0.999, "refined score is not exact")
     }
     // every refined score equals the brute-force exact score for its pair
-    val exact = Similarity.bruteForceTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 100)
+    val exact = topK(col("vec_id") < 5, 100, AllDocs)
       .select("probe_id", "vec_id_n", "score_r")
       .as[(Long, Long, Double)].collect()
       .map(r => (r._1, r._2) -> r._3).toMap
-    Similarity.ivfPqRefinedTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3, refine = 3,
-      centroids = 8, nprobe = 2, subspaces = 4, cents = 8)
+    topK(col("vec_id") < 5, 3, IvfCells(cells(8), 2), AdcRefine(pqSeed(8), 3))
       .select("probe_id", "vec_id_n", "score_r")
       .as[(Long, Long, Double)].collect()
       .foreach { case (p, c, s) =>
@@ -138,9 +130,7 @@ class SimilaritySpec extends SparkSpec {
     // summation order to vary
     val cb2 = Similarity.trainCodebook(fixture, "vec_id", "embedding", 8, 2)
     assert(cb.toSeq == cb2.toSeq)
-    val out = Similarity.ivfTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3,
-      nprobe = 2, codebookOpt = Some(cb))
+    val out = topK(col("vec_id") < 5, 3, IvfCells(cb, 2))
       .filter(col("rank") === 1).collect()
     assert(out.length == 5)
     out.foreach { r =>
@@ -151,8 +141,8 @@ class SimilaritySpec extends SparkSpec {
   test("trained sub-codebooks are deterministic and keep planted twins at rank 1") {
     val pq = Similarity.trainSubCodebooks(
       fixture, "vec_id", "embedding", subspaces = 4, cents = 8, iters = 2)
-    assert(pq.length == 4)
-    pq.foreach { sub =>
+    assert(pq.subspaces == 4 && pq.width == 16)
+    pq.subs.foreach { sub =>
       assert(sub.nonEmpty && sub.length <= 8)
       sub.foreach { case (_, vec, nrm2) =>
         assert(vec.length == 16)
@@ -163,21 +153,21 @@ class SimilaritySpec extends SparkSpec {
     // bit-identical across runs (fixed-point means)
     val pq2 = Similarity.trainSubCodebooks(
       fixture, "vec_id", "embedding", subspaces = 4, cents = 8, iters = 2)
-    assert(pq.map(_.toSeq).toSeq == pq2.map(_.toSeq).toSeq)
+    assert(pq.subs.map(_.toSeq).toSeq == pq2.subs.map(_.toSeq).toSeq)
     // training must move the codebook off its seed slices
     val seedless = Similarity.trainSubCodebooks(
       fixture, "vec_id", "embedding", subspaces = 4, cents = 8, iters = 0)
-    assert(pq.map(_.toSeq).toSeq != seedless.map(_.toSeq).toSeq)
+    assert(pq.subs.map(_.toSeq).toSeq != seedless.subs.map(_.toSeq).toSeq)
     // training must REDUCE quantization distortion vs the seed slices:
     // total min-L2 over every vector×subspace, computed locally
     val vecs = fixture.collect().map(r =>
       (r.getAs[Long]("vec_id"),
         r.getAs[collection.Seq[Float]]("embedding").map(_.toDouble).toIndexedSeq))
-    def distortion(cb: Array[Array[(Int, Seq[Double], Double)]]): Double =
+    def distortion(pq: Similarity.PqCodebooks): Double =
       vecs.map { case (_, v) =>
         (0 until 4).map { s =>
           val x = v.slice(s * 16, (s + 1) * 16)
-          cb(s).map { case (_, c, _) =>
+          pq.subs(s).map { case (_, c, _) =>
             x.zip(c).map { case (a, b) => (a - b) * (a - b) }.sum
           }.min
         }.sum
@@ -188,9 +178,7 @@ class SimilaritySpec extends SparkSpec {
     // codebooks gave centroid-probes (code ties can displace the twin
     // from an unrefined top-3), so assert the PRODUCTION contract:
     // trained PQ + exact refine puts every twin back at rank 1
-    val out = Similarity.ivfPqRefinedTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3,
-      refine = 5, cents = 8, subCbOpt = Some(pq))
+    val out = topK(col("vec_id") < 5, 3, IvfCells(cells(16)), AdcRefine(pq, 5))
       .filter(col("rank") === 1).collect()
     assert(out.length == 5)
     out.foreach { r =>
@@ -203,9 +191,7 @@ class SimilaritySpec extends SparkSpec {
     val cb = Similarity.trainCodebook(
       fixture, "vec_id", "embedding", 8, 2, sampleRate = 0.5)
     assert(cb.nonEmpty)
-    val out = Similarity.ivfTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3,
-      nprobe = 2, codebookOpt = Some(cb))
+    val out = topK(col("vec_id") < 5, 3, IvfCells(cb, 2))
       .filter(col("rank") === 1).collect()
     // near-identical twins share a cell under ANY codebook
     assert(out.length == 5)
@@ -219,9 +205,7 @@ class SimilaritySpec extends SparkSpec {
     // (sub-distance 0 in every subspace), so its reconstruction is
     // lossless and the asymmetric score must equal the exact dot —
     // the sharpest checkable property of ADC lookup scoring
-    val out = Similarity.pqTopK(
-      fixture, "vec_id", "embedding", col("vec_id") === 0, 44,
-      subspaces = 4, cents = 8).collect()
+    val out = topK(col("vec_id") === 0, 44, AllDocs, Adc(pqSeed(8))).collect()
     assert(out.nonEmpty && out.map(_.getAs[Int]("rank")).distinct.length == out.length)
     val vecs = fixture.collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble)).toMap
@@ -240,8 +224,7 @@ class SimilaritySpec extends SparkSpec {
 
   test("multi-table LSH recall dominates single-table recall") {
     // k=40 returns every candidate, so the result IS the candidate set
-    def pairs(tables: Int) = Similarity.lshTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 40, tables = tables)
+    def pairs(tables: Int) = topK(col("vec_id") < 5, 40, LshBuckets(8, 64, tables))
       .select("probe_id", "vec_id_n").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val one = pairs(1)
@@ -259,29 +242,21 @@ class SimilaritySpec extends SparkSpec {
     def pairSet(df: org.apache.spark.sql.DataFrame) =
       df.select("probe_id", "vec_id_n").collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val brute = pairSet(
-      Similarity.bruteForceTopK(fixture, "vec_id", "embedding", pf, 5))
+    val brute = pairSet(topK(pf, 5, AllDocs))
     assert(brute.size == 25)
     def recall(approx: Set[(Long, Long)]) =
       approx.intersect(brute).size.toDouble / brute.size
-    val ivf = recall(pairSet(
-      Similarity.ivfTopK(fixture, "vec_id", "embedding", pf, 5)))
-    val ivfpq = recall(pairSet(
-      Similarity.ivfPqTopK(fixture, "vec_id", "embedding", pf, 5, dims = 64)))
-    val lsh = recall(pairSet(
-      Similarity.lshTopK(fixture, "vec_id", "embedding", pf, 5, tables = 4)))
+    val ivf = recall(pairSet(topK(pf, 5, IvfCells(cells(16)))))
+    val ivfpq = recall(pairSet(topK(pf, 5, IvfCells(cells(16)), Adc(pqSeed(16)))))
+    val lsh = recall(pairSet(topK(pf, 5, LshBuckets(8, 64, 4))))
     val cb = Similarity.trainCodebook(fixture, "vec_id", "embedding", 16, 2)
     val pq = Similarity.trainSubCodebooks(fixture, "vec_id", "embedding",
       subspaces = 4, cents = 16, iters = 2, dims = 64)
-    val ivfTrained = recall(pairSet(Similarity.ivfTopK(
-      fixture, "vec_id", "embedding", pf, 5, codebookOpt = Some(cb))))
-    val refined = recall(pairSet(Similarity.ivfPqRefinedTopK(
-      fixture, "vec_id", "embedding", pf, 5, refine = 3, dims = 64)))
-    val trainedPq = recall(pairSet(Similarity.ivfPqTopK(
-      fixture, "vec_id", "embedding", pf, 5, dims = 64,
-      codebookOpt = Some(cb), subCbOpt = Some(pq))))
-    val pqOnly = recall(pairSet(Similarity.pqTopK(
-      fixture, "vec_id", "embedding", pf, 5, dims = 64)))
+    val ivfTrained = recall(pairSet(topK(pf, 5, IvfCells(cb))))
+    val refined = recall(pairSet(
+      topK(pf, 5, IvfCells(cells(16)), AdcRefine(pqSeed(16), 3))))
+    val trainedPq = recall(pairSet(topK(pf, 5, IvfCells(cb), Adc(pq))))
+    val pqOnly = recall(pairSet(topK(pf, 5, AllDocs, Adc(pqSeed(16)))))
     // floors, not equalities: the gate (sim_recall_report) pins the exact
     // integers per scale; the spec pins the QUALITY contract — an index
     // change that tanks recall fails here even if it re-pins the oracle.
@@ -301,11 +276,9 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("lshTopK candidate set is bucket-bounded (subset of brute scores)") {
-    val brute = Similarity.bruteForceTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 40)
+    val brute = topK(col("vec_id") < 5, 40, AllDocs)
       .select("probe_id", "vec_id_n", "score_r")
-    val lsh = Similarity.lshTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 40)
+    val lsh = topK(col("vec_id") < 5, 40, LshBuckets(8, 64, 1))
       .select("probe_id", "vec_id_n", "score_r")
     // every LSH-scored pair must carry the exact brute-force score
     assert(lsh.except(brute).count() == 0)
@@ -461,12 +434,10 @@ class SimilaritySpec extends SparkSpec {
       "append rewrote or dropped base index files")
     assert(files().size > baseFiles.size, "append added no files")
     // and the probe over the appended index equals the single-build index
-    val combined = Similarity.probeIvfIndexTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3, idx, cb)
-    val single = Similarity.ivfPartitionedTopK(
-      fixture, "vec_id", "embedding", col("vec_id") < 5, 3,
-      java.nio.file.Files.createTempDirectory("sim-ivf-single").toString,
-      centroids = 8)
+    val combined = topK(col("vec_id") < 5, 3, IvfIndex(idx, cb))
+    val singleIdx = java.nio.file.Files.createTempDirectory("sim-ivf-single").toString
+    Similarity.writeIvfIndex(fixture, "vec_id", "embedding", singleIdx, cells(8), "overwrite")
+    val single = topK(col("vec_id") < 5, 3, IvfIndex(singleIdx, cells(8)))
     assert(combined.except(single).count() == 0 &&
       single.except(combined).count() == 0)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.expressions.{LshPlanesModel, PqModel}
+import graft.expressions.{LshPlanesModel, ModelLiteral, PqModel}
 import graft.operators.Similarity
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
@@ -35,7 +35,7 @@ class VecEncodeSpec extends SparkSpec {
         System.arraycopy(m(p), 0, flat, (t * planes + p) * dims, dims)
     }
     call_function("graft_lsh_sigs",
-      lit(LshPlanesModel.serialize(
+      lit(ModelLiteral.serialize(
         new LshPlanesModel(tables, planes, dims, flat))),
       col("embedding").cast("array<double>"))
   }
@@ -104,7 +104,7 @@ class VecEncodeSpec extends SparkSpec {
   private def fusedCodes(
       cbs: Array[Array[(Int, Seq[Double], Double)]], width: Int): Column =
     call_function("graft_pq_encode",
-      lit(PqModel.serialize(PqModel.build(
+      lit(ModelLiteral.serialize(PqModel.build(
         width, Array.tabulate(cbs.length)(_ * width), cbs))),
       col("__vd"))
 
@@ -184,15 +184,15 @@ class VecEncodeSpec extends SparkSpec {
     // brute-force-verified shapes SimilaritySpec already asserts; here we
     // only re-assert determinism of the fused path across two runs
     val df = vecs(300)
-    val a = Similarity.lshTopK(df, "vec_id", "embedding",
-      col("vec_id") < 5, 3, planes = 8, dims = Dims, tables = 4).collect()
-    val b = Similarity.lshTopK(df, "vec_id", "embedding",
-      col("vec_id") < 5, 3, planes = 8, dims = Dims, tables = 4).collect()
+    def topK(gate: Similarity.Gate, scorer: Similarity.Scorer) = Similarity.topK(
+      df, "vec_id", "embedding", col("vec_id") < 5, 3, gate, scorer).collect()
+    val lsh = Similarity.LshBuckets(8, Dims, 4)
+    val a = topK(lsh, Similarity.Exact)
+    val b = topK(lsh, Similarity.Exact)
     assert(a.nonEmpty && a.sameElements(b))
-    val p = Similarity.pqTopK(df, "vec_id", "embedding",
-      col("vec_id") < 5, 3).collect()
-    val q = Similarity.pqTopK(df, "vec_id", "embedding",
-      col("vec_id") < 5, 3).collect()
+    val pq = Similarity.Adc(Similarity.pqCodebookOf(df, "vec_id", "embedding"))
+    val p = topK(Similarity.AllDocs, pq)
+    val q = topK(Similarity.AllDocs, pq)
     assert(p.nonEmpty && p.sameElements(q))
   }
 }
