@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Data-volume-derived shuffle parallelism for the operators whose cost
   * the session-wide `spark.sql.shuffle.partitions` cannot see.
@@ -57,21 +57,36 @@ object Parallelism {
   private def clamp(spark: SparkSession, byBytes: Long): Int =
     math.min(Cap.toLong, math.max(cores(spark).toLong, byBytes)).toInt
 
+  /** On-disk bytes under `path` (a directory is summed recursively). An
+    * unreadable path counts 0 — LOUDLY: a transient filesystem error at
+    * 1000× that silently railed a width to its floor would reproduce the
+    * very per-task blowup the derivation exists to prevent, so the
+    * failure goes to stderr, tagged with the `caller` and the `fallback`
+    * it lands on, where the bench/verify logs capture it. */
+  private[graft] def inputBytes(
+      spark: SparkSession, path: String, caller: String, fallback: String): Long =
+    try {
+      val hp = new org.apache.hadoop.fs.Path(path)
+      hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .getContentSummary(hp).getLength
+    } catch {
+      case e: Exception =>
+        System.err.println(
+          s"[graft] $caller: cannot size '$path' " +
+            s"(${e.getClass.getName}: ${e.getMessage}); falling back to $fallback")
+        0L
+    }
+
   /** Partition count from on-disk input size: `ceil(bytes / target)`,
     * floored at cores, capped. `paths` are the parquet files/directories
-    * the query scans (a directory is summed recursively). Unreadable
-    * paths contribute 0 — the floor keeps the result sane. */
+    * the query scans (see [[inputBytes]]; an unreadable path contributes
+    * 0 and the floor keeps the result sane). */
   def forInputBytes(
       spark: SparkSession,
       paths: Seq[String],
       targetBytes: Long = TargetPartitionBytes): Int = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val total = paths.map { p =>
-      try {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        hp.getFileSystem(conf).getContentSummary(hp).getLength
-      } catch { case _: Exception => 0L }
-    }.sum
+    val total = paths.map(
+      inputBytes(spark, _, "forInputBytes", "0 bytes (the core floor)")).sum
     clamp(spark, (total + targetBytes - 1) / targetBytes)
   }
 
@@ -85,7 +100,7 @@ object Parallelism {
     * a width for its input-sized first shuffle before any action has
     * produced a row count for [[forRows]]. */
   def forPlanBytes(
-      df: org.apache.spark.sql.DataFrame,
+      df: DataFrame,
       targetBytes: Long = TargetPartitionBytes): Int = {
     val plan = df.queryExecution.optimizedPlan
     val est = plan.stats.sizeInBytes
@@ -116,7 +131,7 @@ object Parallelism {
   /** True when [[forPlanBytes]]'s scan-shaped contract holds for `df`:
     * the plan's size estimate does not exceed 4× its leaves' file
     * bytes. Exposed so specs can assert a call site's frame shape. */
-  def planBytesPlausible(df: org.apache.spark.sql.DataFrame): Boolean = {
+  def planBytesPlausible(df: DataFrame): Boolean = {
     val plan = df.queryExecution.optimizedPlan
     val est = plan.stats.sizeInBytes
     val leafBytes = plan.collectLeaves()
@@ -145,8 +160,8 @@ object Parallelism {
   // measured that variant at 184 s isolated vs 102 s for plain
   // fixed-width conf. The pattern that works is the iterative
   // operators' contract applied to the query layer: materialize the
-  // heavy phase ONCE inside [[withShufflePartitions]] (persist +
-  // count), return the small deferred tail.
+  // heavy phase ONCE inside [[withShufflePartitions]] — [[materialize]]
+  // — and return the small deferred tail.
 
   /** Run `body` with `spark.sql.shuffle.partitions = n`, restoring the
     * previous value on exit. Scopes EXECUTION, not construction: only
@@ -158,4 +173,17 @@ object Parallelism {
     spark.conf.set(key, n.toString)
     try body finally spark.conf.set(key, prev)
   }
+
+  /** The scope's materialization contract for an eager batch phase:
+    * build `plan` with `spark.sql.shuffle.partitions = n`, persist it as
+    * registered scratch ([[Dedup.scratchPersist]] — released by
+    * `Dedup.releaseScratch` between queries), count it so every shuffle
+    * runs at `n`, and return it. The plan is built INSIDE the scope
+    * because a persist plans its physical exchanges when it is called. */
+  def materialize(spark: SparkSession, n: Int)(plan: => DataFrame): DataFrame =
+    withShufflePartitions(spark, n) {
+      val m = Dedup.scratchPersist(plan)
+      m.count()
+      m
+    }
 }

@@ -87,9 +87,9 @@ object Analytics {
     // scope's materialization contract).
     //
     // EAGER-EXECUTION NOTE: this method RUNS the pair pipeline at call
-    // time (persist + count — the withShufflePartitions contract needs
-    // the heavy phase materialized inside the scope), so a plan-only
-    // consumer pays full execution here. The persisted output is
+    // time (Parallelism.materialize: the width scope needs the heavy
+    // phase materialized inside it), so a plan-only consumer pays full
+    // execution here. The persisted output is
     // registered in the operator SCRATCH registry: any session-long
     // caller (Verify, Bench between samples) drops it via
     // Dedup.releaseScratch/releaseAllCaches, and because it is a plain
@@ -101,12 +101,8 @@ object Analytics {
     // [[basketPairsPlan]] instead.
     val nPairs = Parallelism.forPlanBytes(
       raw, Parallelism.TargetPartitionBytes / PairAmplification)
-    Parallelism.withShufflePartitions(spark, nPairs) {
-      val c = graft.operators.Dedup.scratchPersist(
-        basketPairsPlan(raw, support, maxBasket))
-      c.count()
-      c
-    }
+    Parallelism.materialize(spark, nPairs)(
+      basketPairsPlan(raw, support, maxBasket))
   }
 
   /** LAZY plan-only variant of [[basketPairs]] (r16 verdict hardening):
@@ -372,36 +368,34 @@ object Analytics {
       // session width no matter what the join inputs are repartitioned
       // to. So the heavy phase materializes ONCE, inside a conf scope
       // whose shuffle width tracks the scanned bytes (identical to the
-      // iterative operators' contract): persist + count executes the
-      // distinct, the self-join, the support aggregate, and the wedge
-      // join at the derived width; the deferred tail (node union +
-      // count + top-20) reads the cached triangle table, which is
-      // triangle-sized, not fact-table-sized. Bench's per-sample
-      // releaseAllCaches barrier drops the scratch, so every sample
-      // still re-executes the full pipeline.
+      // iterative operators' contract, Parallelism.materialize): the
+      // registered-scratch persist + count executes the distinct, the
+      // self-join, the support aggregate, and the wedge join at the
+      // derived width; the deferred tail (node union + count + top-20)
+      // reads the cached triangle table, which is triangle-sized, not
+      // fact-table-sized. Verify's releaseScratch and Bench's per-sample
+      // releaseAllCaches barrier drop it, so every sample still
+      // re-executes the full pipeline.
       val nP = graft.operators.Parallelism.forInputBytes(
         s, Seq(s"$d/lineitem.parquet"))
-      val tri = graft.operators.Parallelism.withShufflePartitions(s, nP) {
-        val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-          .distinct()
-        val a = li.select(col("l_orderkey"), col("l_partkey").as("part_a"))
-        val b = li.select(col("l_orderkey"), col("l_partkey").as("part_b"))
-        val edges = a.join(b, "l_orderkey")
-          .filter(col("part_a") < col("part_b"))
-          .groupBy("part_a", "part_b")
-          .agg(count(lit(1)).as("support"))
-          .filter(col("support") >= 2)
-          .select(col("part_a").as("u"), col("part_b").as("v"))
-          .persist()
-        val t = edges.select(col("u").as("x"), col("v").as("y"))
+      val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
+        .distinct()
+      val a = li.select(col("l_orderkey"), col("l_partkey").as("part_a"))
+      val b = li.select(col("l_orderkey"), col("l_partkey").as("part_b"))
+      val edges = a.join(b, "l_orderkey")
+        .filter(col("part_a") < col("part_b"))
+        .groupBy("part_a", "part_b")
+        .agg(count(lit(1)).as("support"))
+        .filter(col("support") >= 2)
+        .select(col("part_a").as("u"), col("part_b").as("v"))
+      val tri = graft.operators.Parallelism.materialize(s, nP) {
+        edges.persist() // planned in the scope, dropped once tri is built
+        edges.select(col("u").as("x"), col("v").as("y"))
           .join(edges.select(col("u").as("y"), col("v").as("z")), "y")
           .join(edges.select(col("u").as("x"), col("v").as("z")),
             Seq("x", "z"), "left_semi")
-          .persist()
-        t.count()
-        edges.unpersist(blocking = false)
-        t
       }
+      edges.unpersist(blocking = false)
       tri.select(col("x").as("node"))
         .unionByName(tri.select(col("y").as("node")))
         .unionByName(tri.select(col("z").as("node")))

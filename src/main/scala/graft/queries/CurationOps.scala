@@ -530,18 +530,13 @@ object CurationOps {
       // target — at the fixture scales the floor keeps plans identical
       // (nSpan = cores through sf10), and at 1000× the per-task window
       // sort stays in memory instead of external-sorting 700 MB slices.
-      // basketPairs' materialization contract: only the per-doc OUTPUT
-      // persists (registered scratch — Verify/Bench release per query),
-      // executed inside the scope; the orderBy tail stays deferred.
+      // Parallelism.materialize: only the per-doc OUTPUT persists
+      // (registered scratch — Verify/Bench release per query), executed
+      // inside the scope; the orderBy tail stays deferred.
       val nSpan = Parallelism.forPlanBytes(
         docs.select(col("doc_id"), col("text")),
         Parallelism.TargetPartitionBytes / SpanAmplification)
-      val m = Parallelism.withShufflePartitions(s, nSpan) {
-        val p = Dedup.scratchPersist(cleaned)
-        p.count()
-        p
-      }
-      m.orderBy("doc_id")
+      Parallelism.materialize(s, nSpan)(cleaned).orderBy("doc_id")
     }),
 
     // PMI collocation mining: ln(c_xy·N·N / (N2·c_x·c_y)) for bigrams

@@ -92,18 +92,12 @@ object Sinks {
         .select(col("o_orderkey"), col("o_custkey"), col("o_orderstatus"),
           round(col("o_totalprice") * 100).cast("long").as("price_cents"))
       base.write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-      val prev = s.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-      s.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-      try {
-        base.filter(col("o_orderstatus") === "F")
-          .withColumn("price_cents", col("price_cents") + 7L)
-          .write.mode("overwrite").partitionBy("o_orderstatus").parquet(out)
-      } finally {
-        prev match {
-          case Some(v) => s.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-          case None => s.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        }
-      }
+      // the writer option, not the session conf: Spark reads it first,
+      // and the session stays as the caller left it
+      base.filter(col("o_orderstatus") === "F")
+        .withColumn("price_cents", col("price_cents") + 7L)
+        .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+        .partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out)
         .select("o_orderkey", "o_custkey", "o_orderstatus", "price_cents")
         .orderBy("o_orderkey")

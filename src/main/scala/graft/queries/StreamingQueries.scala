@@ -2,9 +2,10 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.Artifacts
 import graft.operators.Parallelism
+import org.apache.spark.sql.types.StructType
 import graft.streaming.EventStream
 
 /** Streaming operators on the CORRECTNESS path (§2.9 extension): the
@@ -63,46 +64,97 @@ object StreamingQueries {
     }
   }
 
-  /** A stateful streaming query fixes its state-store partition count
-    * from `spark.sql.shuffle.partitions` at FIRST start (it's baked into
-    * the checkpoint), so each st_* query starts its stream inside
-    * `Parallelism.withShufflePartitions`. Every partition carries a
-    * state store with real per-micro-batch overhead (provider init,
-    * snapshot, commit), so the count must be sized to the stream's
-    * input, not inherited from the batch default — 32 stores for a
-    * fixture-sized stream is pure fixed cost. Fresh checkpoints here
-    * make the re-size safe.
-    *
-    * Stream-state width from the staged input's on-disk bytes:
-    * ceil(bytes / 32 MB), floored at the fixture-scale 8. The r16
-    * SessionProbe term-split measured the st_sessions growth term to be
-    * the STREAM phase under the fixed 8-partition state shuffle
-    * (sf30: t_stream 50.9 s at width 8 vs 24.8 s at the derived 15;
-    * staging/sentinel/read-back all ≤ 5 s) — the basketPairs lesson
-    * applied to streaming state: a stateful shuffle whose width ignores
-    * input volume accumulates per-task state linearly until spill. The
-    * floor keeps fixture-scale runs on the historical 8 stores (state
-    * stores carry real per-micro-batch fixed cost); the width only rises
-    * when the data outgrows them, which is the cluster regime. Unreadable
-    * paths contribute 0 and land on the floor — LOUDLY: a transient
-    * filesystem error at 1000× that silently railed the width to 8
-    * would reproduce the exact per-task state blowup this derivation
-    * exists to prevent, so the fallback prints the failure to stderr
-    * where the bench/verify logs capture it. */
+  /** Stream-state width from the on-disk bytes under `path`:
+    * ceil(bytes / [[Parallelism.TargetPartitionBytes]]), floored at the
+    * fixture-scale 8. Every state partition carries a state store with
+    * real per-micro-batch overhead (provider init, snapshot, commit), so
+    * the count is sized to the stream's input, not inherited from the
+    * batch default — 32 stores for a fixture-sized stream is pure fixed
+    * cost. The r16 SessionProbe term-split measured the st_sessions
+    * growth term to be the STREAM phase under the fixed 8-partition
+    * state shuffle (sf30: t_stream 50.9 s at width 8 vs 24.8 s at the
+    * derived 15; staging/sentinel/read-back all ≤ 5 s) — the basketPairs
+    * lesson applied to streaming state: a stateful shuffle whose width
+    * ignores input volume accumulates per-task state linearly until
+    * spill. The floor keeps fixture-scale runs on the historical 8
+    * stores; the width only rises when the data outgrows them, which is
+    * the cluster regime. An unreadable path lands on the floor, with a
+    * stderr diagnostic ([[Parallelism.inputBytes]]). */
   private[graft] def stateWidthFor(s: SparkSession, path: String): Int = {
-    val conf = s.sparkContext.hadoopConfiguration
-    val bytes = try {
-      val hp = new org.apache.hadoop.fs.Path(path)
-      hp.getFileSystem(conf).getContentSummary(hp).getLength
-    } catch {
-      case e: Exception =>
-        System.err.println(
-          s"[graft] stateWidthFor: cannot size '$path' " +
-            s"(${e.getClass.getName}: ${e.getMessage}); " +
-            "falling back to floor state width 8")
-        0L
+    val bytes = Parallelism.inputBytes(
+      s, path, "stateWidthFor", "floor state width 8")
+    val target = Parallelism.TargetPartitionBytes
+    math.max(8L, (bytes + target - 1) / target).toInt
+  }
+
+  /** The one stream lifecycle of the st_* queries: start `stream` in
+    * output `mode` on checkpoint `ckDir` with `Trigger.AvailableNow`,
+    * hand every micro-batch to `sink`, and block until the input is
+    * drained. A stateful query fixes its state-store partition count
+    * from `spark.sql.shuffle.partitions` at FIRST start (it is baked into
+    * the checkpoint), so a stream with a `widthFrom` path starts inside a
+    * [[stateWidthFor]] scope; a stateless one (`None`) starts at the
+    * session width. Calling this twice on one `ckDir` resumes the first
+    * lifetime's offsets and state. Returns the finished query. */
+  private[graft] def runStream(stream: DataFrame, mode: String,
+      widthFrom: Option[String], ckDir: String)(
+      sink: (DataFrame, Long) => Unit): StreamingQuery = {
+    val s = stream.sparkSession
+    def start(): StreamingQuery = {
+      val q = stream.writeStream
+        .outputMode(mode)
+        .option("checkpointLocation", ckDir)
+        .trigger(Trigger.AvailableNow())
+        .foreachBatch(sink)
+        .start()
+      q.awaitTermination()
+      q
     }
-    math.max(8L, (bytes + (32L << 20) - 1) / (32L << 20)).toInt
+    widthFrom.fold(start()) { p =>
+      Parallelism.withShufflePartitions(s, stateWidthFor(s, p))(start())
+    }
+  }
+
+  /** A sink writing each epoch to parquet `outDir`: a complete-mode epoch
+    * restates the whole result, so it overwrites; append and update
+    * epochs add to what is there. */
+  private def parquetSink(outDir: String, mode: String): (DataFrame, Long) => Unit =
+    (batch, _) =>
+      batch.write.mode(if (mode == "complete") "overwrite" else "append")
+        .parquet(outDir)
+
+  /** [[runStream]] into the fresh parquet sink `<name>_out` on the fresh
+    * checkpoint `<name>_ck`, with the state width sized from
+    * `widthFrom`; returns the sink read back. */
+  private def streamToParquet(s: SparkSession, stream: DataFrame,
+      mode: String, widthFrom: String, name: String): DataFrame = {
+    val outDir = freshDir(s, s"${name}_out")
+    runStream(stream, mode, Some(widthFrom), freshDir(s, s"${name}_ck"))(
+      parquetSink(outDir, mode))
+    s.read.parquet(outDir)
+  }
+
+  /** The events fixture staged into drop directory `dir`. The file
+    * stream source monitors DIRECTORIES, so the fixture lands in one —
+    * the "files landing in a drop directory" shape a streaming ingest
+    * actually has. */
+  private final case class StagedEvents(
+      s: SparkSession, path: String, rawSchema: StructType, dir: String) {
+    /** A new file-stream source over `dir`, with the same nanos-as-long
+      * handling as `Tables.events` (readStream needs the RAW schema up
+      * front). */
+    def stream: DataFrame =
+      Tables.normalizeEventTs(s.readStream.schema(rawSchema).parquet(dir))
+  }
+
+  /** The events fixture staged into the fresh drop directory `name`,
+    * once per file name in `copies`. */
+  private def stagedEvents(s: SparkSession, d: String, name: String,
+      copies: String*): StagedEvents = {
+    val (path, rawSchema) = Tables.rawEvents(s, d)
+    val dir = freshDir(s, name)
+    copies.foreach(stageFixture(path, dir, _))
+    StagedEvents(s, path, rawSchema, dir)
   }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
@@ -110,41 +162,18 @@ object StreamingQueries {
     // arrives through the file source, the watermarked tumbling-window
     // aggregation runs in complete mode (every window in the final
     // epoch's state — append mode would hold back windows the
-    // end-of-stream watermark never closes), and foreachBatch overwrites
-    // the parquet sink per epoch so the LAST epoch is what gets read
-    // back. Value sums are integer cents end-to-end (see
-    // EventStream.windowedTypeCounts): exact regardless of micro-batch
-    // slicing or partition merge order, same convention as the batch
-    // rollups and the other st_* queries.
+    // end-of-stream watermark never closes), and the sink is overwritten
+    // per epoch so the LAST epoch is what gets read back. Value sums are
+    // integer cents end-to-end (see EventStream.windowedTypeCounts):
+    // exact regardless of micro-batch slicing or partition merge order,
+    // same convention as the batch rollups and the other st_* queries.
+    // The state width is sized from the staged drop directory, i.e.
+    // exactly the bytes the stream will read.
     "st_window_counts" -> ((s, d) => {
-      // same nanos-as-long handling as Tables.events, but the stream
-      // needs the RAW schema up front (readStream requires one)
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      // the file stream source monitors DIRECTORIES; stage the fixture
-      // into one (the "files landing in a drop directory" shape a
-      // streaming ingest actually has)
-      val srcDir = freshDir(s, "win_src")
-      stageFixture(path, srcDir, "events")
-      val stream = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = freshDir(s, "win_out")
-      val ckDir = freshDir(s, "win_ck")
-      // derived state width (stateWidthFor — the st_sessions lesson
-      // applied to every stateful st_* query): sized from the staged
-      // drop directory, i.e. exactly the bytes the stream will read
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
-        val q = EventStream.windowedTypeCounts(stream, "10 minutes", "1 hour")
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("overwrite").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+      val ev = stagedEvents(s, d, "win_src", "events")
+      streamToParquet(s,
+        EventStream.windowedTypeCounts(ev.stream, "10 minutes", "1 hour"),
+        "complete", ev.dir, "win")
         .select(
           date_format(col("window_start"), "yyyy-MM-dd HH:mm:ss").as("window_start"),
           col("event_type"), col("n_events"), col("sum_cents"))
@@ -159,31 +188,12 @@ object StreamingQueries {
     // takes both files in one micro-batch (in-batch dedup) or two (the
     // second copy is all-late and dropped by the advanced watermark),
     // the sink converges to exactly one row per event — which is what
-    // the batch oracle asserts.
+    // the batch oracle asserts. The width is sized from the STAGED
+    // directory, so the dedup state's input volume is the doubled bytes.
     "st_dedup" -> ((s, d) => {
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      val srcDir = freshDir(s, "dedup_src")
-      Seq("events_a", "events_b").foreach(stageFixture(path, srcDir, _))
-      val stream = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = freshDir(s, "dedup_out")
-      val ckDir = freshDir(s, "dedup_ck")
-      // derived width over the STAGED directory: the fixture lands
-      // twice (re-delivery), so the dedup state's input volume — and
-      // therefore the width — is automatically the doubled bytes
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
-        val q = EventStream.dedupWithinWatermark(stream, "10 minutes")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+      val ev = stagedEvents(s, d, "dedup_src", "events_a", "events_b")
+      streamToParquet(s, EventStream.dedupWithinWatermark(ev.stream, "10 minutes"),
+        "append", ev.dir, "dedup")
         .groupBy("event_type")
         .agg(count(lit(1)).as("n_events"),
           sum(round(col("value") * 100).cast("long")).as("sum_cents"))
@@ -201,10 +211,8 @@ object StreamingQueries {
     // read-back filters the sentinel user. Session bounds compare as
     // epoch-micros integers (formatting to seconds could tie rows).
     "st_sessions" -> ((s, d) => {
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      val raw = s.read.schema(rawSchema).parquet(path)
-      val srcDir = freshDir(s, "sess_src")
-      stageFixture(path, srcDir, "events")
+      val ev = stagedEvents(s, d, "sess_src", "events")
+      val raw = s.read.schema(ev.rawSchema).parquet(ev.path)
       // sentinel ts must match the fixture's physical ts type (long
       // nanos on legacy data, timestamp on current) or the file-source
       // schema check rejects the staged file. The sentinel is a pure
@@ -213,7 +221,7 @@ object StreamingQueries {
       // max(ts) probe and the 1-row write run outside the measured time.
       val sentDir = Artifacts.fixtureDir(s, d, "sess_sentinel") {
         import org.apache.spark.sql.types.{LongType, TimestampType}
-        val sentTs = rawSchema("ts").dataType match {
+        val sentTs = ev.rawSchema("ts").dataType match {
           case LongType =>
             val maxTs = raw.agg(max("ts")).head.getLong(0)
             lit(maxTs + 172800L * 1000000000L) // +2 days, in nanos
@@ -230,28 +238,14 @@ object StreamingQueries {
           lit(0.0).as("value"), lit("").as("props"))
           .coalesce(1)
       }
-      stageFixture(sentDir, srcDir, "sentinel")
-      val stream = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(srcDir))
-      val outDir = freshDir(s, "sess_out")
-      val ckDir = freshDir(s, "sess_ck")
-      // derived state width (see stateWidthFor): the SessionProbe split
-      // pinned the st_sessions 300×→1000× growth to the stream phase at
-      // the fixed width — 8 at fixture scale (identical plans), tracks
-      // input bytes above it
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, path)) {
-        val q = EventStream.sessionCounts(stream, "30 minutes", "10 minutes")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+      stageFixture(sentDir, ev.dir, "sentinel")
+      // width from the fixture: the SessionProbe split pinned the
+      // st_sessions 300×→1000× growth to the stream phase at the fixed
+      // width — 8 at fixture scale (identical plans), tracks input
+      // bytes above it
+      streamToParquet(s,
+        EventStream.sessionCounts(ev.stream, "30 minutes", "10 minutes"),
+        "append", ev.path, "sess")
         .filter(col("user_id") >= 0)
         .select(col("user_id"),
           unix_micros(col("session_start")).as("session_start_us"),
@@ -266,37 +260,18 @@ object StreamingQueries {
     // plus both-side watermarks is what makes buffered state finite on a
     // real cluster; inner-join matches emit as they are found, so with
     // AvailableNow over the fixture the emitted set IS the batch join —
-    // which is exactly the oracle.
+    // which is exactly the oracle. Both sides' state stores share the
+    // same shuffle partitions, but each input event lands in AT MOST one
+    // side's buffer (it is a purchase or a view, never both), so the
+    // staged directory's bytes bound the total buffered state and size
+    // the width directly.
     "st_join" -> ((s, d) => {
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      val srcDir = freshDir(s, "join_src")
-      stageFixture(path, srcDir, "events")
+      val ev = stagedEvents(s, d, "join_src", "events")
       def side(eventType: String): DataFrame =
-        Tables.normalizeEventTs(
-          s.readStream.schema(rawSchema).parquet(srcDir))
-          .filter(col("event_type") === eventType)
-      val outDir = freshDir(s, "join_out")
-      val ckDir = freshDir(s, "join_ck")
-      // derived width for the stream-stream join (r16 verdict item):
-      // both sides' state stores share the same shuffle partitions, but
-      // each input event lands in AT MOST one side's buffer (it is a
-      // purchase or a view, never both), so the staged directory's bytes
-      // bound the total buffered state and size the width directly —
-      // same derivation as the single-store queries
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
-        val q = EventStream.joinWithinWindow(
-          side("purchase"), side("view"), "10 minutes", "30 minutes")
-          .writeStream
-          .outputMode("append")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+        ev.stream.filter(col("event_type") === eventType)
+      streamToParquet(s, EventStream.joinWithinWindow(
+          side("purchase"), side("view"), "10 minutes", "30 minutes"),
+        "append", ev.dir, "join")
         .select(col("user_id"),
           unix_micros(col("p_ts")).as("p_ts_us"), col("p_value"),
           unix_micros(col("v_ts")).as("v_ts_us"), col("v_value"))
@@ -323,23 +298,13 @@ object StreamingQueries {
       // bakes the state partition count at run 1, before half_b lands,
       // so sizing from the drop directory would freeze run 1's half-
       // sized width for the query's whole lifetime
-      val width = stateWidthFor(s, path)
-      def run(): Unit = Parallelism.withShufflePartitions(s, width) {
-        val stream = s.readStream.schema(rawSchema)
+      def run(): Unit = runStream(
+        s.readStream.schema(rawSchema)
           .option("recursiveFileLookup", "true").parquet(srcDir)
-        val q = stream.groupBy("event_type")
+          .groupBy("event_type")
           .agg(count(lit(1)).as("n_events"),
-            sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("overwrite").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
+            sum(round(col("value") * 100).cast("long")).as("sum_cents")),
+        "complete", Some(path), ckDir)(parquetSink(outDir, "complete"))
       // both halves are pure functions of the fixture — synthesized once
       // per fixture content, copied per run (Artifacts.fixtureDir); the
       // two query LIFETIMES and the checkpoint resume stay fully measured
@@ -358,16 +323,6 @@ object StreamingQueries {
         .orderBy("event_type")
     }),
 
-    // Streaming CDC apply: a base snapshot plus a change LOG landing as
-    // files, folded into a serving table by foreachBatch. The merge is
-    // Merge.applyVersioned — per-key highest-version wins, tombstones
-    // retained — which is CONFLUENT (commutative/associative/
-    // idempotent), so the final table is identical whether AvailableNow
-    // takes the change files in one micro-batch or several, in any
-    // order. That independence is what puts a STREAMING upsert on the
-    // batch-SQL oracle gate: the oracle replays winner-per-key over the
-    // full change log. State alternates between batchId-keyed dirs
-    // (read-then-overwrite of one dir would race the lazy scan).
     // CUSTOM per-key state on the oracle gate: runningUserActivity keeps
     // one mapGroupsWithState row per user (count + running max) and
     // emits the updated state every micro-batch. Both fields are
@@ -375,34 +330,15 @@ object StreamingQueries {
     // matter how AvailableNow chopped the file — which is exactly what
     // the batch oracle states (count + max per user). This puts the
     // arbitrary-state API itself, not just built-in window aggs, on the
-    // correctness gate.
+    // correctness gate. State grows with input key cardinality (the
+    // st_sessions shape), so the width is sized from the staged bytes.
     "st_state" -> ((s, d) => {
       import s.implicits._
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      val srcDir = freshDir(s, "state_src")
-      stageFixture(path, srcDir, "events")
-      val stream = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(srcDir))
-      val typed = stream.select(col("user_id"), col("value"))
+      val ev = stagedEvents(s, d, "state_src", "events")
+      val typed = ev.stream.select(col("user_id"), col("value"))
         .as[(Long, Double)]
-      val outDir = freshDir(s, "state_out")
-      val ckDir = freshDir(s, "state_ck")
-      // derived width: mapGroupsWithState keeps one row per user, so
-      // state grows with input key cardinality — the st_sessions shape
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
-        val q = EventStream.runningUserActivity(typed)
-          .toDF()
-          .writeStream
-          .outputMode("update")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("append").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+      streamToParquet(s, EventStream.runningUserActivity(typed).toDF(),
+        "update", ev.dir, "state")
         .groupBy("user_id")
         .agg(max(col("n_events")).as("n_events"),
           round(max(col("max_value")), 2).as("max_value"))
@@ -415,44 +351,38 @@ object StreamingQueries {
     // is a plan literal per batch, the stream side never waits), then a
     // running per-nation rollup in complete mode. At 100 TB/day the
     // stream side scales with executors and the dim broadcast is the
-    // same bounded artifact every batch job ships.
+    // same bounded artifact every batch job ships. The rollup's state is
+    // nation-bounded (25 keys) but the aggregation exchange still carries
+    // the full stream, so the width is sized from the staged bytes.
     "st_enrich" -> ((s, d) => {
-      val (path, rawSchema) = Tables.rawEvents(s, d)
-      val srcDir = freshDir(s, "enrich_src")
-      stageFixture(path, srcDir, "events")
-      val stream = Tables.normalizeEventTs(
-        s.readStream.schema(rawSchema).parquet(srcDir))
+      val ev = stagedEvents(s, d, "enrich_src", "events")
+      val stream = ev.stream
       val dim = broadcast(Tables.customer(s, d)
         .select(col("c_custkey"), col("c_nationkey")))
-      val outDir = freshDir(s, "enrich_out")
-      val ckDir = freshDir(s, "enrich_ck")
-      // derived width: the complete-mode rollup's state is nation-bounded
-      // (25 keys) but the aggregation exchange still carries the full
-      // stream — sized from the staged bytes like every other st_* query
-      Parallelism.withShufflePartitions(s, stateWidthFor(s, srcDir)) {
-        // integer-cents discipline (the ts_*/w* precedent): per-row cents
-        // then an exact integer sum, so no cross-engine/partition-order
-        // float reassociation can drift past a rounding mask at scale
-        val q = stream.join(dim, stream("user_id") === dim("c_custkey"))
+      // integer-cents discipline (the ts_*/w* precedent): per-row cents
+      // then an exact integer sum, so no cross-engine/partition-order
+      // float reassociation can drift past a rounding mask at scale
+      streamToParquet(s, stream.join(dim, stream("user_id") === dim("c_custkey"))
           .groupBy("c_nationkey")
           .agg(count(lit(1)).as("n_events"),
-            sum(round(col("value") * 100).cast("long")).as("sum_cents"))
-          .writeStream
-          .outputMode("complete")
-          .option("checkpointLocation", ckDir)
-          .trigger(Trigger.AvailableNow())
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            batch.write.mode("overwrite").parquet(outDir); ()
-          }
-          .start()
-        q.awaitTermination()
-      }
-      s.read.parquet(outDir)
+            sum(round(col("value") * 100).cast("long")).as("sum_cents")),
+        "complete", ev.dir, "enrich")
         .select(col("c_nationkey").cast("long").as("nation_key"),
           col("n_events"), col("sum_cents"))
         .orderBy("nation_key")
     }),
 
+    // Streaming CDC apply: a base snapshot plus a change LOG landing as
+    // files, folded into a serving table by foreachBatch. The merge is
+    // Merge.applyVersioned — per-key highest-version wins, tombstones
+    // retained — which is CONFLUENT (commutative/associative/
+    // idempotent), so the final table is identical whether AvailableNow
+    // takes the change files in one micro-batch or several, in any
+    // order. That independence is what puts a STREAMING upsert on the
+    // batch-SQL oracle gate: the oracle replays winner-per-key over the
+    // full change log. State alternates between batchId-keyed dirs
+    // (read-then-overwrite of one dir would race the lazy scan). The
+    // stream itself is stateless, so it starts at the session width.
     "st_upsert" -> ((s, d) => {
       val cents = round(col("o_totalprice") * 100).cast("long")
       val o = Tables.orders(s, d).select(
@@ -484,20 +414,15 @@ object StreamingQueries {
         }
       var latest = Artifacts.fixtureDir(s, d, "upsert_base")(base)
       val schema = s.read.parquet(latest).schema
-      val stream = s.readStream.schema(schema).parquet(srcDir)
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$stateRoot/ck")
-        .trigger(Trigger.AvailableNow())
-        .foreachBatch { (batch: DataFrame, bid: Long) =>
-          val next = s"$stateRoot/v$bid"
-          graft.operators.Merge
-            .applyVersioned(s.read.parquet(latest), batch,
-              "k", "version", "op")
-            .write.mode("overwrite").parquet(next)
-          latest = next; ()
-        }
-        .start()
-      q.awaitTermination()
+      runStream(s.readStream.schema(schema).parquet(srcDir), "append", None,
+        s"$stateRoot/ck") { (batch, bid) =>
+        val next = s"$stateRoot/v$bid"
+        graft.operators.Merge
+          .applyVersioned(s.read.parquet(latest), batch,
+            "k", "version", "op")
+          .write.mode("overwrite").parquet(next)
+        latest = next
+      }
       s.read.parquet(latest)
         .filter(col("op") =!= "D")
         .select("k", "price_cents", "status", "version")

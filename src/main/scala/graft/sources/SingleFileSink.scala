@@ -4,8 +4,9 @@ import org.apache.spark.sql.DataFrame
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
-/** Single-file JSON/CSV export: write `coalesce(1)` to a temp dir, move the
-  * lone part-file to the final destination, clean up the temp dir.
+/** Single-file JSON/CSV export: write `coalesce(1)` to a staging dir next
+  * to the destination, move the lone part-file to the final destination,
+  * clean up the staging dir.
   *
   * Mirrors the reference's `cp_file_temp` (utils.py:226-252,
   * write_to_volume.py:13-16) with two deliberate deviations: a missing
@@ -26,19 +27,20 @@ object SingleFileSink {
     write(df, dest, "csv")(
       (w, p) => w.option("header", header.toString).csv(p))
 
+  /** Stages the `coalesce(1)` output in `.<dest name>.staging`, a
+    * sibling of `dest`, so the final move is a same-filesystem rename;
+    * the staging dir is removed whether or not the write succeeds. */
   private def write(df: DataFrame, dest: String, ext: String)(
       sink: (org.apache.spark.sql.DataFrameWriter[org.apache.spark.sql.Row], String) => Unit): Unit = {
     val destPath = Paths.get(dest).toAbsolutePath
-    val tmp = Files.createTempDirectory(s"graft_${ext}_sink")
-    // createTempDirectory creates the dir; Spark's writer wants to own it
-    Files.delete(tmp)
-    sink(df.coalesce(1).write.mode("overwrite"), tmp.toString)
-    val part = firstPartFile(tmp, ext).getOrElse(
-      throw new IllegalStateException(
-        s"no part-file *.$ext produced under $tmp"))
-    Option(destPath.getParent).foreach(Files.createDirectories(_))
-    Files.move(part, destPath, StandardCopyOption.REPLACE_EXISTING)
-    deleteRecursively(tmp)
+    val staging = destPath.resolveSibling(s".${destPath.getFileName}.staging")
+    try {
+      sink(df.coalesce(1).write.mode("overwrite"), staging.toString)
+      val part = firstPartFile(staging, ext).getOrElse(
+        throw new IllegalStateException(
+          s"no part-file *.$ext produced under $staging"))
+      Files.move(part, destPath, StandardCopyOption.REPLACE_EXISTING)
+    } finally deleteRecursively(staging)
   }
 
   private def firstPartFile(dir: Path, ext: String): Option[Path] = {

@@ -276,4 +276,25 @@ class EventStreamSpec extends SparkSpec {
     assert(diag.contains("stateWidthFor") && diag.contains("/no/such/file")
       && diag.contains("floor"), s"missing fallback diagnostic: '$diag'")
   }
+
+  test("runStream starts the stream at stateWidthFor(widthFrom) and " +
+    "restores the session width") {
+    import graft.queries.StreamingQueries.{runStream, stateWidthFor}
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    val dir = java.nio.file.Files.createTempDirectory("runstream").toString
+    spark.range(100).selectExpr("id % 5 AS k").write.parquet(s"$dir/src")
+    val width = stateWidthFor(spark, s"$dir/src")
+    assert(width.toString != before) // the scope must be observable
+    var rows = 0L
+    val q = runStream(
+      spark.readStream.schema("k LONG").parquet(s"$dir/src").groupBy("k").count(),
+      "complete", Some(s"$dir/src"), s"$dir/ck") { (batch, _) =>
+      rows = batch.count()
+    }
+    assert(rows === 5L)
+    assert(q.lastProgress.stateOperators.map(_.numShufflePartitions).toSeq ===
+      Seq(width.toLong))
+    assert(spark.conf.get(key) === before)
+  }
 }

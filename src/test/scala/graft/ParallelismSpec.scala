@@ -55,8 +55,27 @@ class ParallelismSpec extends SparkSpec {
   }
 
   test("forInputBytes treats unreadable paths as empty, not fatal") {
-    assert(Parallelism.forInputBytes(spark, Seq("/no/such/path.parquet")) ===
-      Parallelism.cores(spark))
+    // ...but not silently: the fallback leaves a diagnostic in the logs
+    val realErr = System.err
+    val captured = new java.io.ByteArrayOutputStream()
+    try {
+      System.setErr(new java.io.PrintStream(captured, true, "UTF-8"))
+      assert(Parallelism.forInputBytes(spark, Seq("/no/such/path.parquet")) ===
+        Parallelism.cores(spark))
+    } finally System.setErr(realErr)
+    val diag = captured.toString("UTF-8")
+    assert(diag.contains("forInputBytes") &&
+      diag.contains("/no/such/path.parquet"), s"missing diagnostic: '$diag'")
+  }
+
+  test("an_triangles' triangle table is registered scratch: " +
+    "releaseScratch restores the cached-RDD set") {
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sf/lineitem.parquet").exists())
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    SparkEntry.queries("an_triangles")(spark, sf).collect()
+    graft.operators.Dedup.releaseScratch(spark)
+    assert(spark.sparkContext.getPersistentRDDs.keySet === before)
   }
 
   test("withShufflePartitions scopes the conf and restores on exit") {

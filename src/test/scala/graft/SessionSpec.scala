@@ -38,6 +38,23 @@ class SessionSpec extends SparkSpec {
     assert(mainSourcesMatching("java\\.io\\.tmpdir") == Seq("graft/Artifacts.scala"))
   }
 
+  test("no src/main file makes a temp file or dir outside Artifacts' roots") {
+    assert(mainSourcesMatching("createTempDirectory|createTempFile").isEmpty)
+  }
+
+  test("StreamingQueries.runStream is the one place that awaits a stream") {
+    assert(mainSourcesMatching("awaitTermination") ==
+      Seq("graft/queries/StreamingQueries.scala"))
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/queries/StreamingQueries.scala")), "UTF-8")
+    assert("awaitTermination".r.findAllMatchIn(src).size == 1)
+    val runner = src.indexOf("def runStream(")
+    val await = src.indexOf("awaitTermination")
+    assert(runner >= 0 && await > runner &&
+      src.indexOf("\n  }\n", runner) > await,
+      "awaitTermination must sit inside runStream")
+  }
+
   test("only Session and Parallelism set spark.sql.shuffle.partitions in src/main") {
     assert(mainSourcesMatching(
       "\"spark\\.sql\\.shuffle\\.partitions\"|SQLConf\\.SHUFFLE_PARTITIONS") ==

@@ -1,7 +1,8 @@
 package graft
 
 import graft.sources.SingleFileSink
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 class SingleFileSinkSpec extends SparkSpec {
   import spark.implicits._
@@ -28,5 +29,16 @@ class SingleFileSinkSpec extends SparkSpec {
     SingleFileSink.csv(Seq((9, "z")).toDF("id", "v"), dest.toString)
     val lines = Files.readAllLines(dest)
     assert(lines.get(1) == "9,z")
+  }
+
+  test("a failed write leaves neither a staging dir nor a destination file") {
+    import org.apache.spark.sql.functions.{col, lit, raise_error, when}
+    val dir = Files.createTempDirectory("sfs")
+    val failing = spark.range(4).select(
+      when(col("id") >= 0, raise_error(lit("boom"))).otherwise(lit("ok")).as("v"))
+    intercept[Exception](SingleFileSink.csv(failing, dir.resolve("out.csv").toString))
+    val left = Files.list(dir)
+    try assert(left.iterator.asScala.toSeq.isEmpty)
+    finally left.close()
   }
 }

@@ -308,4 +308,27 @@ class TableSinkSpec extends SparkSpec {
       rec(new java.io.File(base))
     }
   }
+
+  test("s11_dynamic_overwrite overwrites dynamically without touching " +
+    "the session's partitionOverwriteMode") {
+    val sf = "/root/testdata/sf0.001"
+    assume(new java.io.File(s"$sf/orders.parquet").exists())
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val before = spark.conf.getOption(key)
+    val got = SparkEntry.queries("s11_dynamic_overwrite")(spark, sf).collect()
+    assert(spark.conf.getOption(key) === before)
+    // a session explicitly in STATIC mode still gets the dynamic replace
+    spark.conf.set(key, "static")
+    try {
+      val underStatic = SparkEntry.queries("s11_dynamic_overwrite")(spark, sf)
+      assert(underStatic.collect().toSeq === got.toSeq)
+      assert(spark.conf.get(key) === "static")
+    } finally before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    // the oracle SQL is plain enough to run on Spark itself
+    spark.read.parquet(s"$sf/orders.parquet").createOrReplaceTempView("orders")
+    try {
+      val want = spark.sql(SparkEntry.oracleSql("s11_dynamic_overwrite")).collect()
+      assert(got.toSeq === want.toSeq)
+    } finally spark.catalog.dropTempView("orders")
+  }
 }
