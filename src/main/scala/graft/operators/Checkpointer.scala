@@ -3,8 +3,8 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
-/** Injectable lineage-truncation strategy for the iterative operators
-  * (connected components, PageRank, BFS, SSSP). They must cut the plan
+/** Injectable lineage-truncation strategy for the iterative operators,
+  * applied by their one driver ([[Iterate]]). The loop must cut the plan
   * every round — otherwise round N embeds N copies of the edge
   * derivation — but HOW to cut is a deployment decision, not an
   * operator decision:
@@ -13,8 +13,8 @@ import org.apache.spark.storage.StorageLevel
   *    external storage, the right call at local[32] and for restartable
   *    jobs. The known cost: on a real cluster an executor loss kills its
   *    blocks and the job, because truncated lineage cannot recompute.
-  *  - `spark.graft.checkpointDir=<dir>` (or an explicit per-call dir):
-  *    reliable `checkpoint` to HDFS/object storage — an executor loss
+  *  - `spark.graft.checkpointDir=<dir>` in the session conf: reliable
+  *    `checkpoint` to HDFS/object storage — an executor loss
   *    mid-iteration recovers from the checkpoint files instead of
   *    killing the job. Always EAGER in this mode, with the frame
   *    persisted around the write: a lazy reliable checkpoint recomputes
@@ -32,32 +32,17 @@ object Checkpointer {
   /** Session conf key selecting the reliable strategy. */
   val DirKey = "spark.graft.checkpointDir"
 
-  /** Drop the storage blocks backing a frame [[truncate]] returned, once
-    * the OPERATOR knows nothing references them any more (an iterative
-    * loop releasing round N's checkpoint after round N+1 materialized).
-    * The truncated frame wraps a `LogicalRDD`; unpersisting that RDD
-    * frees its localCheckpoint blocks. Reliable-mode frames read
-    * checkpoint FILES (their RDD holds no blocks), so this is a no-op
-    * there — file retention stays the deployment's policy. Safe to call
-    * on any frame: non-LogicalRDD plans are left untouched. */
-  def release(df: DataFrame): Unit =
-    try df.queryExecution.analyzed.foreach {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(blocking = true)
-      case _ => ()
-    } catch { case _: Throwable => () /* stopped session: nothing to free */ }
-
-  /** Truncate `df`'s lineage under the configured strategy. `eager`
-    * only applies to the local strategy (reliable is always eager — see
-    * the class note); `dir` overrides the session conf for one call. */
-  def truncate(df: DataFrame, eager: Boolean = true,
-      dir: Option[String] = None): DataFrame = {
+  /** Truncate `df`'s lineage under the configured strategy. A local
+    * checkpoint is only marked: the caller's next action materializes
+    * it (the [[Iterate]] driver's one count per round). Reliable is
+    * always eager — see the class note. */
+  def truncate(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
-    val target = dir.orElse(
-      try spark.conf.getOption(DirKey) catch { case _: Throwable => None })
-      .filter(_.trim.nonEmpty)
+    val target =
+      (try spark.conf.getOption(DirKey) catch { case _: Throwable => None })
+        .filter(_.trim.nonEmpty)
     target match {
-      case None => df.localCheckpoint(eager)
+      case None => df.localCheckpoint(eager = false)
       case Some(d) =>
         val sc = spark.sparkContext
         // setCheckpointDir mints a fresh UUID subdir per call; only

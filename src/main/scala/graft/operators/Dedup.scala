@@ -36,10 +36,9 @@ object Dedup {
     * dropping them is always CORRECT (a still-live consumer silently
     * recomputes; nothing hard-fails). localCheckpoint blocks are NOT in
     * this registry — their lineage is truncated, so dropping them while a
-    * result frame is live would hard-fail re-execution; the iterative
-    * operators release their own superseded checkpoints in-loop
-    * ([[Checkpointer.release]]) and leave only the final one, which backs
-    * the returned frame, alive. */
+    * result frame is live would hard-fail re-execution; the [[Iterate]]
+    * driver releases superseded checkpoints in-loop and leaves alive only
+    * those the returned frame reads. */
   private val scratch = new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
 
   /** Persist a frame as operator scratch and register it for
@@ -692,24 +691,16 @@ object Dedup {
     * deterministic and an external oracle (recursive-CTE transitive
     * closure) reaches the same labels.
     *
-    * Lineage is truncated each round; ONE action per iteration drives
-    * both the truncation and the convergence check: the step frame is
-    * checkpoint-marked LAZILY, so the `changed` count materializes the
-    * checkpoint blocks and counts moved labels in the same job (an eager
-    * checkpoint + separate count paid two job launches per round).
-    *
-    * Lineage strategy is injectable ([[Checkpointer]]): default
-    * `localCheckpoint` (local mode, restartable jobs); a reliable dir —
-    * via the `checkpointDir` param or session-wide
-    * `spark.graft.checkpointDir` — survives executor loss on a real
-    * cluster. Returns (id, component) for every node in a pair. */
+    * The loop runs on the [[Iterate]] driver: each round's state carries
+    * the old label beside the new one, so the round's one action counts
+    * the moved labels over the SAME checkpointed frame — no extra
+    * join-per-iteration. Lineage strategy is [[Checkpointer]]'s: local
+    * checkpoints by default, reliable files under the session's
+    * `spark.graft.checkpointDir`. Fails if labels still move after
+    * `maxIters` rounds. Returns (id, component) for every node in a
+    * pair. */
   def connectedComponents(pairs: DataFrame, aCol: String, bCol: String,
-      maxIters: Int = 50, checkpointDir: Option[String] = None): DataFrame = {
-    // strategy selection (incl. the persist-around-eager-write dance for
-    // the reliable mode) lives in Checkpointer; an explicit param here
-    // overrides the session-wide spark.graft.checkpointDir
-    def truncate(df: DataFrame, eager: Boolean): DataFrame =
-      Checkpointer.truncate(df, eager, checkpointDir)
+      maxIters: Int = 50): DataFrame =
     // Both orientations from ONE pass over the pairs subtree: the union
     // form embedded the (possibly expensive — dd_cluster feeds the whole
     // minhash verify pipeline here) pairs plan twice, and while
@@ -717,83 +708,45 @@ object Dedup {
     // re-executed per branch. explode of a 2-element struct array emits
     // the same two rows per pair inside one codegen stage (§2.3 shuffle
     // the same bytes, compute the input once).
-    val edges0 = truncate(
-      pairs.select(explode(array(
+    Iterate(pairs.select(explode(array(
         struct(col(aCol).as("src"), col(bCol).as("dst")),
         struct(col(bCol).as("src"), col(aCol).as("dst")))).as("__e"))
         .select(col("__e.src").as("src"), col("__e.dst").as("dst"))
-        .distinct(), eager = true)
-    // Per-round shuffle parallelism tracks the EDGE volume, not the
-    // session default: the edge table is eagerly checkpointed above, so
-    // the count is a cached-block scan, and 100 TB of pairs no longer
-    // funnels through a partition count sized for the average query
-    // (Parallelism scaladoc has the measured 300× case). Every action
-    // below runs inside the scope; both returned frames (labels, and the
-    // step backing it) are checkpoint-materialized in-loop.
-    val nParts = Parallelism.forRows(pairs.sparkSession, edges0.count())
-    Parallelism.withShufflePartitions(pairs.sparkSession, nParts) {
-    // Lay the STATIC edge table out on the per-round join key ONCE:
-    // hash-partition by dst, sort within partitions, checkpoint. A
-    // checkpoint captures outputPartitioning/outputOrdering, so every
-    // round's neighbor join reads the edge side with NO exchange and NO
-    // sort — previously the (corpus-sized) edge frame was re-shuffled
-    // and re-sorted per round while only the node-sized label table
-    // changed (guide §2.4: operations keyed the same way share one
-    // layout). One extra eager checkpoint pays for itself from round 2.
-    val edges = truncate(
-      edges0.repartition(nParts, col("dst")).sortWithinPartitions("dst"),
-      eager = true)
-    Checkpointer.release(edges0)
-    // FUSED FIRST ROUND: min-label propagation from labels(v) = v
-    // computes exactly min(v, min neighbor id), which is one aggregate
-    // over the pre-partitioned edge table (groupBy dst needs no
-    // exchange) — so the init both replaces the old distinct-ids job
-    // and absorbs what used to be the first loop iteration. Fixpoint
-    // (component-minimum id) is unchanged: init here equals the old
-    // state after round 1, and propagation is monotone.
-    var labels = truncate(
-      edges.groupBy(col("dst").as("id"))
+        .distinct()) { loop =>
+      // Lay the STATIC edge table out on the per-round join key ONCE:
+      // hash-partition by dst, sort within partitions, checkpoint. A
+      // checkpoint captures outputPartitioning/outputOrdering, so every
+      // round's neighbor join reads the edge side with NO exchange and NO
+      // sort — previously the (corpus-sized) edge frame was re-shuffled
+      // and re-sorted per round while only the node-sized label table
+      // changed (guide §2.4: operations keyed the same way share one
+      // layout). One extra checkpoint pays for itself from round 2.
+      val (edges, _) = loop.mark(
+        loop.edges.repartition(loop.width, col("dst")).sortWithinPartitions("dst"))
+      // FUSED FIRST ROUND: min-label propagation from labels(v) = v
+      // computes exactly min(v, min neighbor id), which is one aggregate
+      // over the pre-partitioned edge table (groupBy dst needs no
+      // exchange) — so the init absorbs the first propagation round.
+      val init = edges.groupBy(col("dst").as("id"))
         .agg(min(col("src")).as("__nbr_min"))
-        .select(col("id"), least(col("id"), col("__nbr_min")).as("component")),
-      eager = true)
-    var changed = 1L
-    var iters = 0
-    // round N's checkpoint blocks are dead the moment round N+1's
-    // checkpoint materializes (N+1's RDD is self-contained after the
-    // count) — released in-loop so live state is a constant two rounds,
-    // not O(iterations), and so the FINAL checkpoint (which backs the
-    // returned frame) is the only one left alive. releaseScratch never
-    // touches it; only the releaseAllCaches barrier does.
-    var prevCkpt: DataFrame = labels
-    while (changed > 0) {
-      iters += 1
-      require(iters <= maxIters,
+        .select(col("id"), col("id").as("old"),
+          least(col("id"), col("__nbr_min")).as("component"))
+      val (labels, moved) = loop.rounds(init, maxIters)(
+        (prev, _, _) => {
+          val nbrMin = edges
+            .join(prev.select(col("id").as("dst"), col("component").as("nbr")), "dst")
+            .groupBy(col("src").as("id")).agg(min("nbr").as("nbr_min"))
+          prev.select("id", "component").join(nbrMin, Seq("id"), "left")
+            .select(col("id"), col("component").as("old"),
+              least(col("component"), coalesce(col("nbr_min"), col("component")))
+                .as("component"))
+        },
+        progress = _.filter(col("component") =!= col("old")))
+      require(moved == 0,
         s"connectedComponents: no fixpoint after $maxIters rounds — " +
           "component diameter exceeds the cap; raise maxIters")
-      val nbrMin = edges
-        .join(labels.select(col("id").as("dst"), col("component").as("nbr")), "dst")
-        .groupBy(col("src").as("id")).agg(min("nbr").as("nbr_min"))
-      // old label rides along so the fixpoint check is a filter over the
-      // SAME checkpointed frame — no extra join-per-iteration. Local mode:
-      // the lazy checkpoint mark makes the count() the iteration's ONLY
-      // job. Reliable mode: truncate is eager (compute+write once), and
-      // the count reads the checkpoint files — still one compute pass.
-      val step = truncate(
-        labels.join(nbrMin, Seq("id"), "left")
-          .select(col("id"), col("component").as("old"),
-            least(col("component"), coalesce(col("nbr_min"), col("component")))
-              .as("component")), eager = false)
-      changed = step.filter(col("component") =!= col("old")).count()
-      Checkpointer.release(prevCkpt)
-      prevCkpt = step
-      labels = step.select("id", "component")
+      labels.select("id", "component")
     }
-    // the fixpoint labels read only the final step's blocks — the edge
-    // table's checkpoint is scratch from here
-    Checkpointer.release(edges)
-    labels
-    }
-  }
 
   /** Edit-distance near-dup with exact-prefix blocking: same-block pairs
     * verified by levenshtein over a bounded text window. The window cap is

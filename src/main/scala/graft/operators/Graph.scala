@@ -1,15 +1,18 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Iterative graph analytics beyond connected components (Dedup): a
-  * fixed-iteration PageRank in EXACT scaled-integer arithmetic.
+/** Iterative graph analytics beyond connected components (Dedup): an
+  * exact scaled-integer PageRank, multi-source BFS and bounded weighted
+  * shortest paths. Each is an init, a step and a progress count run by
+  * the [[Iterate]] driver, which owns the edge truncation, the loop's
+  * shuffle width, the one action per round and the checkpoint release.
   *
-  * Floating-point PageRank sums neighbor contributions in partition
-  * order, so two engines (or two runs) disagree in the last ulps and a
-  * hash-compare gate can never pin it. This implementation keeps every
-  * rank as a scaled BIGINT (`scale` = 1e12 by default): contributions
+  * PageRank keeps every rank as a scaled BIGINT (`scale` = 1e12 by
+  * default). Floating-point PageRank sums neighbor contributions in
+  * partition order, so two engines (or two runs) disagree in the last
+  * ulps and a hash-compare gate can never pin it. Here contributions
   * divide by out-degree with truncating integer `div`, the damping mix
   * is integer `15·S/(100·N) + 85·Σ/100`, and integer addition is
   * associative — the result is bit-identical regardless of partition
@@ -17,12 +20,10 @@ import org.apache.spark.sql.functions._
   * scaled truncation per edge per iteration, which is part of the
   * operator's CONTRACT (the oracle replays the identical formula).
   *
-  * Scale shape per iteration: one join of edges to the rank table on
-  * src (both sides hash-partitioned on src — the rank side is
+  * Scale shape per PageRank round: one join of edges to the rank table
+  * on src (both sides hash-partitioned on src — the rank side is
   * node-sized, NOT broadcast, so 100 TB graphs with billions of nodes
-  * hold), one groupBy(dst) sum. Iterations are a driver-side loop over
-  * a bounded count; for deep iteration counts the lazy-checkpoint
-  * pattern from Dedup.connectedComponents applies unchanged.
+  * hold), one groupBy(dst) sum.
   */
 object Graph {
 
@@ -34,66 +35,87 @@ object Graph {
       edges: DataFrame, src: String, dst: String,
       iters: Int = 3, scale: Long = 1000000000000L): DataFrame = {
     require(iters >= 1, s"iters must be >= 1, got $iters")
-    // Truncate lineage ONCE: without this, every iteration's plan embeds
-    // a fresh copy of the (possibly expensive) edge-derivation subtree —
-    // the co-purchase self-join re-ran 3× per action before this landed
-    // (bench: an_pagerank 3.76s → the derivation is paid once). Same
-    // checkpoint pattern as Dedup.connectedComponents.
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .transform(Checkpointer.truncate(_))
-    // Shuffle parallelism tracks the edge volume, not the session
-    // default (see Parallelism scaladoc — an iterative join's per-task
-    // state must not grow with the data); e is checkpointed, so the
-    // count is a cached-block scan. The scope covers the node/degree
-    // derivation shuffles AND the loop; it requires in-loop
-    // materialization, so each round's truncation is EAGER: one job per
-    // round (launch overhead is noise at any real edge count), and
-    // superseded rounds' blocks release in-loop — live state is a
-    // constant two rounds, the connectedComponents discipline, instead
-    // of the lazy form's iters × node-table.
-    val nParts = Parallelism.forRows(edges.sparkSession, e.count())
-    Parallelism.withShufflePartitions(edges.sparkSession, nParts) {
-    // Out-degree is STATIC across iterations, and it is a NODE-sized
-    // attribute — so it rides the rank table instead of being joined to
-    // the corpus-sized edge frame every round (§2.4: only the node
-    // table moves per round). One map-side-combined aggregate + one
-    // node-sized join at setup, ~8 bytes/node through each round's rank
-    // checkpoint, and the per-round (edges ⋈ ranks) ⋈ deg second join
-    // disappears at every scale. (Folding deg into the EDGE table was
-    // measured worse at gate scale — a corpus-sized setup join — and a
-    // window count over src would buffer hub groups whole, the skew
-    // shape the minhash bucket cap rejected.) deg is null for nodes
-    // with no out-edges; such ids never match the contribs join, so the
-    // null never evaluates.
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val nodes = Checkpointer.truncate(
-      e.select(col("src").as("id"))
-        .union(e.select(col("dst").as("id"))).distinct()
-        .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
-    // N and the teleport term are scalars of a bounded aggregate
-    val n = nodes.count()
-    val teleport = (15L * scale) / (100L * n)
-    var ranks = nodes.withColumn("r", lit(scale / n))
-    var prevCkpt: DataFrame = null
-    for (_ <- 1 to iters) {
-      val contribs = e.join(ranks, e("src") === ranks("id"))
-        .select(col("dst").as("id"), expr("r div deg").as("c"))
-        .groupBy("id").agg(sum(col("c")).as("c"))
-      // eager truncation: round N's plan reaches back only to round
-      // N-1's materialized LogicalRDD, so analysis stays O(1) per round
-      // at ANY iteration count (un-truncated, round N nested N copies
-      // of the join subtree); deg rides along so every round's rank
-      // table keeps it without re-joining
-      ranks = Checkpointer.truncate(
-        nodes.join(contribs, Seq("id"), "left")
-          .select(col("id"), col("deg"),
-            (lit(teleport) +
-              expr("85 * coalesce(c, cast(0 as bigint)) div 100")).as("r")),
-        eager = true)
-      if (prevCkpt != null) Checkpointer.release(prevCkpt)
-      prevCkpt = ranks
+    // The edge truncation keeps every round's plan from embedding a fresh
+    // copy of the (possibly expensive) edge-derivation subtree — the
+    // co-purchase self-join re-ran 3× per action before it landed.
+    Iterate(edges.select(col(src).as("src"), col(dst).as("dst"))) { loop =>
+      val e = loop.edges
+      // Out-degree is STATIC across iterations, and it is a NODE-sized
+      // attribute — so it rides the rank table instead of being joined to
+      // the corpus-sized edge frame every round (§2.4: only the node
+      // table moves per round). One map-side-combined aggregate + one
+      // node-sized join at setup, ~8 bytes/node through each round's rank
+      // checkpoint, and the per-round (edges ⋈ ranks) ⋈ deg second join
+      // disappears at every scale. (Folding deg into the EDGE table was
+      // measured worse at gate scale — a corpus-sized setup join — and a
+      // window count over src would buffer hub groups whole, the skew
+      // shape the minhash bucket cap rejected.) deg is null for nodes
+      // with no out-edges; such ids never match the contribs join, so the
+      // null never evaluates.
+      val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+      // N and the teleport term are scalars of a bounded aggregate
+      val (nodes, n) = loop.mark(
+        e.select(col("src").as("id"))
+          .union(e.select(col("dst").as("id"))).distinct()
+          .join(deg.withColumnRenamed("src", "id"), Seq("id"), "left"))
+      val teleport = (15L * scale) / (100L * n)
+      // every round's rank table is a fresh checkpoint, so round N's plan
+      // reaches back only to round N-1's LogicalRDD and analysis stays
+      // O(1) per round at ANY iteration count; deg rides along so every
+      // round's rank table keeps it without re-joining
+      val (ranks, _) = loop.rounds(nodes.withColumn("r", lit(scale / n)), iters) {
+        (prev, _, _) =>
+          val contribs = e.join(prev, e("src") === prev("id"))
+            .select(col("dst").as("id"), expr("r div deg").as("c"))
+            .groupBy("id").agg(sum(col("c")).as("c"))
+          nodes.join(contribs, Seq("id"), "left")
+            .select(col("id"), col("deg"),
+              (lit(teleport) +
+                expr("85 * coalesce(c, cast(0 as bigint)) div 100")).as("r"))
+      }
+      ranks.select(col("id"), col("r").as("rank_scaled"))
     }
-    ranks.select(col("id"), col("r").as("rank_scaled"))
+  }
+
+  /** Bounded weighted shortest path (Bellman–Ford with a frontier
+    * optimization): minimum total integer weight from any seed over paths
+    * of ≤ `maxHops` edges. Returns (id, dist) for every node reachable
+    * within the bound.
+    *
+    * Per round, ONLY nodes whose distance improved last round relax
+    * their out-edges (the frontier — classic Bellman-Ford relaxes every
+    * edge every round, maxHops× the work on graphs where shortest paths
+    * stabilize early), candidates take a per-target min, and one
+    * full-outer merge folds strict improvements into the distance table
+    * and flags them. The flagged rows are the next frontier and their
+    * count is the round's progress, so the distance table is the one
+    * frame each round checkpoints. Weights are integers so the min-fold
+    * is exact: no float sum order can flip a comparison, and the hash
+    * gate + recursive-CTE oracle replay bit-identically. */
+  def ssspWeighted(
+      edges: DataFrame, src: String, dst: String, weightCol: String,
+      seeds: DataFrame, idCol: String, maxHops: Int): DataFrame = {
+    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
+    Iterate(edges.select(col(src).as("src"), col(dst).as("dst"),
+        col(weightCol).cast("long").as("w"))) { loop =>
+      val e = loop.edges
+      val seeded = seeds.select(col(idCol).as("id")).distinct()
+        .withColumn("dist", lit(0L)).withColumn("improved", lit(true))
+      val (dist, _) = loop.rounds(seeded, maxHops)(
+        (prev, _, _) => {
+          val frontier = prev.filter(col("improved"))
+          val cand = e.join(frontier, e("src") === frontier("id"))
+            .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
+            .groupBy("id").agg(min("cand").as("cand"))
+          // a strict improvement, or a node reached for the first time
+          val better = col("cand").isNotNull &&
+            (col("dist").isNull || col("cand") < col("dist"))
+          prev.select("id", "dist").join(cand, Seq("id"), "full_outer")
+            .select(col("id"), when(better, col("cand")).otherwise(col("dist")).as("dist"),
+              better.as("improved"))
+        },
+        progress = _.filter(col("improved")))
+      dist.select("id", "dist")
     }
   }
 
@@ -110,107 +132,27 @@ object Graph {
     * visited set each round would not. Min-hop BFS is deterministic by
     * construction (no arithmetic, only set reachability), so the result
     * sits on the exact hash gate and a recursive-CTE oracle replays it.
-    * Lineage is truncated per round via the injectable [[Checkpointer]]
-    * (localCheckpoint by default, reliable checkpoint under
-    * `spark.graft.checkpointDir`) so round N's plan does not embed N
-    * copies of the edge derivation. */
-  /** Bounded weighted shortest path (Bellman–Ford with a frontier
-    * optimization): minimum total integer weight from any seed over paths
-    * of ≤ `maxHops` edges. Returns (id, dist) for every node reachable
-    * within the bound.
     *
-    * Per round, ONLY nodes whose distance improved last round relax
-    * their out-edges (the frontier — classic Bellman-Ford relaxes every
-    * edge every round, maxHops× the work on graphs where shortest paths
-    * stabilize early), candidates take a per-target min, and the
-    * distance table folds in strict improvements via one full-outer
-    * merge. Weights are integers so the min-fold is exact: no float sum
-    * order can flip a comparison, and the hash gate + recursive-CTE
-    * oracle replay bit-identically. Lineage truncates per round
-    * (the Dedup.connectedComponents pattern). */
-  def ssspWeighted(
-      edges: DataFrame, src: String, dst: String, weightCol: String,
-      seeds: DataFrame, idCol: String, maxHops: Int): DataFrame = {
-    require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"),
-      col(weightCol).cast("long").as("w")).transform(Checkpointer.truncate(_))
-    var dist = seeds.select(col(idCol).as("id")).distinct()
-      .withColumn("dist", lit(0L)).transform(Checkpointer.truncate(_))
-    // per-round parallelism tracks edge volume (see Parallelism scaladoc);
-    // e is checkpointed, so the count is a cached-block scan, and every
-    // round's frames materialize inside the scope
-    val nParts = Parallelism.forRows(edges.sparkSession, e.count())
-    Parallelism.withShufflePartitions(edges.sparkSession, nParts) {
-    var frontier = dist
-    // ONE action per round drives both the frontier's checkpoint
-    // materialization and the emptiness test (the connectedComponents
-    // lazy-mark + count discipline) — the eager-truncate-then-isEmpty
-    // form paid an extra job launch per round, and the profiled cost of
-    // this loop at gate scale is driver-side job overhead, not data.
-    var nFrontier = dist.count() // cached-block scan of the seed ckpt
-    var h = 1
-    while (h <= maxHops && nFrontier > 0) {
-      val cand = e.join(frontier, e("src") === frontier("id"))
-        .select(col("dst").as("id"), (col("dist") + col("w")).as("cand"))
-        .groupBy("id").agg(min("cand").as("cand"))
-      val improved = cand.join(dist, Seq("id"), "left")
-        .filter(col("dist").isNull || col("cand") < col("dist"))
-        .select(col("id"), col("cand").as("dist"))
-        .transform(Checkpointer.truncate(_, eager = false))
-      nFrontier = improved.count() // materializes + counts in one job
-      // empty frontier ⇒ the coalesce-merge below is the identity —
-      // skip its materialization on the terminating round
-      if (nFrontier > 0) {
-        // improved rows are STRICT improvements (or brand-new nodes) by
-        // the filter above, so the merge is a plain coalesce — no
-        // re-compare
-        dist = dist.join(improved.select(col("id"), col("dist").as("nd")),
-          Seq("id"), "full_outer")
-          .select(col("id"), coalesce(col("nd"), col("dist")).as("dist"))
-          .transform(Checkpointer.truncate(_))
-      }
-      frontier = improved
-      h += 1
-    }
-    dist
-    }
-  }
-
+    * The distance table is a UNION of the rounds' checkpointed frontiers:
+    * every leg is materialized once, and re-checkpointing the growing
+    * union each round would only re-copy the visited set maxHops times;
+    * the anti-join reads the union's cached blocks directly. */
   def bfsHops(
       edges: DataFrame, src: String, dst: String,
       seeds: DataFrame, idCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 1, s"maxHops must be >= 1, got $maxHops")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .transform(Checkpointer.truncate(_))
-    var dist = seeds.select(col(idCol).as("id")).distinct()
-      .withColumn("hops", lit(0L)).transform(Checkpointer.truncate(_))
-    // per-round parallelism tracks edge volume (see Parallelism scaladoc);
-    // the returned dist is a union of in-scope checkpointed legs, so no
-    // shuffle escapes the override
-    val nParts = Parallelism.forRows(edges.sparkSession, e.count())
-    Parallelism.withShufflePartitions(edges.sparkSession, nParts) {
-    var frontier = dist
-    // one action per round: lazy checkpoint mark + count materializes the
-    // frontier AND answers the emptiness test (the connectedComponents
-    // discipline) — eager-truncate-then-isEmpty paid two job launches
-    var nFrontier = dist.count() // cached-block scan of the seed ckpt
-    var h = 1
-    while (h <= maxHops && nFrontier > 0) {
-      val next = e.join(frontier, e("src") === frontier("id"))
-        .select(col("dst").as("id")).distinct()
-        .join(dist, Seq("id"), "left_anti")
-        .withColumn("hops", lit(h.toLong))
-        .transform(Checkpointer.truncate(_, eager = false))
-      nFrontier = next.count()
-      // dist stays a UNION of already-checkpointed frontiers — every leg
-      // is materialized, so re-checkpointing the growing union each round
-      // would only re-copy the visited set maxHops times; the anti-join
-      // above reads the union's cached blocks directly
-      dist = dist.unionByName(next)
-      frontier = next
-      h += 1
-    }
-    dist
+    Iterate(edges.select(col(src).as("src"), col(dst).as("dst"))) { loop =>
+      val e = loop.edges
+      val (dist, _) = loop.rounds(
+        seeds.select(col(idCol).as("id")).distinct().withColumn("hops", lit(0L)),
+        maxHops)(
+        (visited, frontier, h) =>
+          e.join(frontier, e("src") === frontier("id"))
+            .select(col("dst").as("id")).distinct()
+            .join(visited, Seq("id"), "left_anti")
+            .withColumn("hops", lit(h.toLong)),
+        fold = _ unionByName _)
+      dist
     }
   }
 }

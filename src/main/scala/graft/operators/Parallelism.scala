@@ -30,16 +30,16 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    (exact, from the filesystem; use for non-iterative join queries
   *    whose Catalyst stats above a join are products, not sizes);
   *  - [[forRows]] — a materialized frame's row count × estimated row
-  *    width (use after an eager lineage truncation, where the count is
-  *    a cheap cached-block scan and plan stats are `defaultSizeInBytes`
-  *    garbage).
+  *    width (the [[Iterate]] driver's edge count, taken by the action
+  *    that checkpoints the edges, where plan stats are
+  *    `defaultSizeInBytes` garbage).
   *
-  * [[withShufflePartitions]] scopes the session conf for operators that
-  * drive their OWN in-loop actions (connected components, BFS, SSSP):
-  * every shuffle the loop executes — whatever its key — uses the derived
-  * count, and the conf restores on exit. It is only correct when the
-  * frames the caller receives back are materialized inside the scope
-  * (checkpointed), which is exactly the iterative operators' contract.
+  * [[withShufflePartitions]] scopes the session conf for code that
+  * drives its OWN actions — the iterative operators' one driver
+  * ([[Iterate]]) and [[materialize]]: every shuffle those actions execute
+  * — whatever its key — uses the derived count, and the conf restores on
+  * exit. It is only correct when the frames the caller receives back are
+  * materialized inside the scope (checkpointed or persisted).
   */
 object Parallelism {
 
@@ -139,16 +139,13 @@ object Parallelism {
     !est.isValidLong || leafBytes == 0L || est.toLong <= 4L * leafBytes
   }
 
-  /** Partition count from a materialized row count. `bytesPerRow` is the
-    * SHUFFLED width (columns + row overhead), not the parquet-encoded
-    * width — 64 B covers the narrow (long, long[, long]) edge/state rows
-    * the iterative operators shuffle. */
-  def forRows(
-      spark: SparkSession,
-      rows: Long,
-      bytesPerRow: Long = 64L,
-      targetBytes: Long = TargetPartitionBytes): Int =
-    clamp(spark, (rows * bytesPerRow + targetBytes - 1) / targetBytes)
+  /** Partition count from a materialized row count of the iterative
+    * operators' edge rows, at [[TargetPartitionBytes]] per partition. A
+    * row counts 64 B: the SHUFFLED width (columns + row overhead) of the
+    * narrow (long, long[, long]) edge/state rows they shuffle, not the
+    * parquet-encoded width. */
+  def forRows(spark: SparkSession, rows: Long): Int =
+    clamp(spark, (rows * 64L + TargetPartitionBytes - 1) / TargetPartitionBytes)
 
   // NOTE (measured, round 13): widening a deferred query by
   // key-repartitioning the JOIN INPUTS to a derived count does not

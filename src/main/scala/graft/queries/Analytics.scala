@@ -313,9 +313,9 @@ object Analytics {
         .select(col("part_a").as("src"), col("part_b").as("dst"))
       val sym = edges.unionByName(
         edges.select(col("dst").as("src"), col("src").as("dst")))
-      // The lazy edge plan executes inside pageRankScaled's FIRST step
-      // (Checkpointer.truncate), which runs BEFORE pageRank's own
-      // derived-width scope — so the pair aggregate would otherwise run
+      // The lazy edge plan executes in pageRankScaled's edge preparation
+      // (the Iterate driver's edge checkpoint), which runs BEFORE the
+      // loop's derived-width scope — so the pair aggregate would otherwise run
       // at the ambient session width, the r14 fixed-width knee
       // basketPairs' eager scope exists to prevent (the r17 sf30 subset
       // battery caught exactly that: 64.8 → 87.7 s). Wrap the call in

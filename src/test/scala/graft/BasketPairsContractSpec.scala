@@ -89,9 +89,9 @@ class BasketPairsContractSpec extends SparkSpec {
 
   test("a width scope applies to a lazy plan checkpointed inside it — " +
     "the an_pagerank consumer contract") {
-    // an_pagerank executes basketPairsPlan inside pageRankScaled's FIRST
-    // step (Checkpointer.truncate), which runs BEFORE pageRank's own
-    // width scope; the call site therefore wraps the whole call in the
+    // an_pagerank executes basketPairsPlan in pageRankScaled's edge
+    // preparation (the Iterate driver's edge checkpoint), which runs
+    // BEFORE the loop's width scope; the call site therefore wraps the whole call in the
     // pair-derived width. This pins the mechanism that wrapper relies
     // on: shuffle width is read at execution time, so a localCheckpoint
     // triggered inside withShufflePartitions materializes at the scoped

@@ -105,21 +105,25 @@ class DedupSpec extends SparkSpec {
   }
 
   test("connectedComponents reliable-checkpoint mode matches local mode") {
+    // spark.graft.checkpointDir switches every round's checkpoint to
+    // reliable files, set and unset around the call
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toString
-    val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
-      .toDF("a", "b")
-    val out = Dedup.connectedComponents(pairs, "a", "b",
-      checkpointDir = Some(dir))
-      .as[(Long, Long)].collect().toMap
-    assert((1L to 5L).forall(out(_) == 1L))
-    assert(out(10L) == 10L && out(11L) == 10L)
-    assert(out.size == 7)
-    // the reliable dir actually received checkpoint files (the property
-    // that survives an executor loss, unlike executor-local blocks)
-    def files(f: java.io.File): Iterator[java.io.File] =
-      Iterator(f) ++ Option(f.listFiles).iterator.flatten.flatMap(files)
-    assert(files(new java.io.File(dir)).exists(_.getName.startsWith("rdd-")),
-      s"no reliable checkpoint RDD dirs under $dir")
+    spark.conf.set(graft.operators.Checkpointer.DirKey, dir)
+    try {
+      val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
+        .toDF("a", "b")
+      val out = Dedup.connectedComponents(pairs, "a", "b")
+        .as[(Long, Long)].collect().toMap
+      assert((1L to 5L).forall(out(_) == 1L))
+      assert(out(10L) == 10L && out(11L) == 10L)
+      assert(out.size == 7)
+      // the reliable dir actually received checkpoint files (the property
+      // that survives an executor loss, unlike executor-local blocks)
+      def files(f: java.io.File): Iterator[java.io.File] =
+        Iterator(f) ++ Option(f.listFiles).iterator.flatten.flatMap(files)
+      assert(files(new java.io.File(dir)).exists(_.getName.startsWith("rdd-")),
+        s"no reliable checkpoint RDD dirs under $dir")
+    } finally spark.conf.unset(graft.operators.Checkpointer.DirKey)
   }
 
   test("exactKeepFirst keeps lowest id per key") {

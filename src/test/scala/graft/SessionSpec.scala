@@ -61,6 +61,25 @@ class SessionSpec extends SparkSpec {
       Seq("graft/Session.scala", "graft/operators/Parallelism.scala"))
   }
 
+  test("only Iterate derives a loop width or truncates lineage in src/main") {
+    assert(mainSourcesMatching("Parallelism\\.forRows\\(|Checkpointer\\.truncate\\(") ==
+      Seq("graft/operators/Iterate.scala"))
+    // one width scope each: the fixpoint driver, materialize, runStream
+    // and an_pagerank's pair-width wrapper
+    val root = Paths.get("src/main/scala")
+    val scopes = Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+      .flatMap(p => Files.readAllLines(p).asScala.map(_.trim)
+        .filterNot(l => l.startsWith("//") || l.startsWith("*"))
+        .filter(l => l.contains("withShufflePartitions(") &&
+          !l.contains("def withShufflePartitions"))
+        .map(_ => root.relativize(p).toString))
+      .sorted
+    assert(scopes == Seq("graft/operators/Iterate.scala",
+      "graft/operators/Parallelism.scala", "graft/queries/Analytics.scala",
+      "graft/queries/StreamingQueries.scala"))
+  }
+
   test("Probe bench-one, profile and explain run on a given session and leave it running") {
     assume(new java.io.File(s"$Sf/customer.parquet").exists())
     val rows = SparkEntry.queries("a1_group_count")(spark, Sf).count()
