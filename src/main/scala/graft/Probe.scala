@@ -2,6 +2,7 @@ package graft
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.ExplainMode
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 import scala.collection.mutable
 
 /** Single-query triage for one entry of `SparkEntry.queries`, on the
@@ -15,9 +16,11 @@ import scala.collection.mutable
   *    steal turned multi-job iterative queries into 2-5x outliers).
   *  - `profile`: a warm-up, then one execution under a SparkListener,
   *    one line per job (wall, tasks, stages, executor run/CPU time, scan
-  *    input, shuffle read/write, spill) and the driver gap: query wall
-  *    minus the merged busy windows of its jobs; then the codegen classes
-  *    the sample and the warm-up (in a fresh JVM: the plan's) compiled.
+  *    input, shuffle read/write, spill; labeled by the job's description,
+  *    else its SQL execution's, else its call site) and the driver gap:
+  *    query wall minus the merged busy windows of its jobs; then the
+  *    codegen classes the sample and the warm-up (in a fresh JVM: the
+  *    plan's) compiled.
   *  - `explain`: `explain("formatted")` of the query's plan. Nothing
   *    runs, except what the query's construction itself executes.
   *
@@ -101,15 +104,26 @@ object Probe {
       build: () => DataFrame, warmUp: (Long, Long)): String = {
     val jobs = mutable.LinkedHashMap.empty[Int, JobAgg]
     val stageToJob = mutable.Map.empty[Int, Int]
+    val executions = mutable.Map.empty[String, String]
     val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case x: SparkListenerSQLExecutionStart =>
+          executions(x.executionId.toString) = x.description.takeWhile(_ != '\n')
+        case _ =>
+      }
       override def onJobStart(e: SparkListenerJobStart): Unit = {
         val a = new JobAgg
         a.start = e.time
-        a.desc = Option(e.properties)
+        val props = Option(e.properties)
+        a.desc = props
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.nonEmpty)
-          // fall back to the result stage's callsite name — identifies
-          // which action (count/collect/broadcast/checkpoint) ran the job
+          // then the SQL execution the job runs for: AQE submits map-stage
+          // jobs from a pool thread, whose call site names no operator
+          .orElse(props.flatMap(p => Option(p.getProperty("spark.sql.execution.id")))
+            .flatMap(executions.get).filter(_.nonEmpty))
+          // else the result stage's callsite name — identifies which
+          // action (count/collect/broadcast/checkpoint) ran the job
           .orElse(e.stageInfos.lastOption.map(_.name.takeWhile(_ != '\n')))
           .getOrElse("")
         e.stageIds.foreach(sid => stageToJob(sid) = e.jobId)

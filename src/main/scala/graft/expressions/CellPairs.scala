@@ -40,7 +40,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   * Modes (by the `topK` literal):
   *  - `topK <= 0`: near-dup pairs — emit (a, b, score_r) for every
   *    member pair with a.id < b.id (strictly: equal ids never pair,
-  *    like the join's `a < b` filter) and score_r >= minScore.
+  *    like the join's `a < b` filter) and score_r >= minScore. Rows
+  *    come from one resumable iterator whose refills each buffer at most
+  *    [[CellPairs.RefillRows]] (2^17) rows, so a permissive minScore on a
+  *    big block streams, as the join form did, in bounded memory.
   *  - `topK > 0`: per-member kNN — for EACH member, its topK neighbours
   *    by (score desc, id asc) among same-block members with a different
   *    id, emitted as (id, nbr, rank, score_r) with rank 1-based — the
@@ -49,8 +52,10 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType,
   *    the frame (the window form partitions by id globally; with
   *    duplicate ids the two forms diverge — callers own that contract).
   *
-  * The caller also owns the block-size bound (corpus-scaled cells,
-  * sign-bit blocks): one block's members materialize in a single task.
+  * The caller also owns the block-size bound: one block's members
+  * materialize in a single task. `Similarity.cellBlocked` sizes cells by
+  * its corpus law (~128 members each), and `dd_cosine_neardup` sizes its
+  * sign-bit blocks by `Similarity.signBlockBits`.
   */
 case class CellPairs(child: Expression, minScore: Double, topK: Int)
     extends UnaryExpression with Generator with CodegenFallback {
@@ -127,67 +132,44 @@ case class CellPairs(child: Expression, minScore: Double, topK: Int)
     }
 
     if (topK <= 0) {
-      if (m.toLong * (m - 1) / 2 <= CellPairs.EagerPairBound) {
-        // EAGER emission under the bound: the lazy iterator's per-element
-        // machinery is a measured 2× on threshold workloads dominated by
-        // small blocks (dd_semantic at 1000×: 22.5 s lazy vs 11.3 s eager,
-        // SCALE.md r14 A/B). Worst case here is EagerPairBound rows —
-        // each a GenericInternalRow over a boxed Object[3] (~100 B with
-        // headers), so ~13 MB at the 2¹⁷ bound — bounded regardless of
-        // minScore.
-        val out = Vector.newBuilder[InternalRow]
-        var oi = 0
-        while (oi < m - 1) {
-          val ai = order(oi)
-          var oj = oi + 1
-          while (oj < m) {
-            val bi = order(oj)
-            if (ids(ai) < ids(bi)) {
-              val s = score(ai, bi)
-              if (java.lang.Double.compare(s, minScore) >= 0) {
-                val r = new GenericInternalRow(3)
-                r.update(0, ids(ai)); r.update(1, ids(bi)); r.update(2, s)
-                out += r
-              }
-            }
-            oj += 1
-          }
-          oi += 1
-        }
-        return out.result().iterator
-      }
-      // LAZY emission above the bound: a permissive minScore admits up to
-      // m²/2 pairs per block, and the join form this replaced streamed
-      // them — so must this generator. Per-block memory stays O(m·dims)
-      // (the member arrays above), never O(pairs); the loop state is two
-      // indices.
+      // ONE emitter: each refill runs the eager double loop until it has
+      // buffered RefillRows passing pairs or run out of pairs, and keeps
+      // its two loop indices for the next refill. A block with fewer
+      // passing pairs than the bound costs one bulk loop; a permissive
+      // minScore on a big block streams in bounded chunks.
       new Iterator[InternalRow] {
         private var oi = 0
         private var oj = 1
-        private var pending: InternalRow = null
-        private def advance(): Unit = {
-          while (pending == null && oi < m - 1) {
+        private val buf = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
+        private var pos = 0
+        private def refill(): Unit = {
+          buf.clear(); pos = 0
+          while (buf.length < CellPairs.RefillRows && oi < m - 1) {
             val ai = order(oi)
-            while (pending == null && oj < m) {
+            while (buf.length < CellPairs.RefillRows && oj < m) {
               val bi = order(oj)
-              oj += 1
               if (ids(ai) < ids(bi)) {
                 val s = score(ai, bi)
                 // nan-safe >=: NaN passes, like Spark's comparisons
                 if (java.lang.Double.compare(s, minScore) >= 0) {
                   val r = new GenericInternalRow(3)
                   r.update(0, ids(ai)); r.update(1, ids(bi)); r.update(2, s)
-                  pending = r
+                  buf += r
                 }
               }
+              oj += 1
             }
-            if (pending == null) { oi += 1; oj = oi + 1 }
+            if (oj >= m) { oi += 1; oj = oi + 1 }
           }
         }
-        override def hasNext: Boolean = { advance(); pending != null }
+        override def hasNext: Boolean = {
+          if (pos == buf.length && oi < m - 1) refill()
+          pos < buf.length
+        }
         override def next(): InternalRow = {
-          advance()
-          val r = pending; pending = null; r
+          if (!hasNext) throw new NoSuchElementException
+          pos += 1
+          buf(pos - 1)
         }
       }
     } else {
@@ -240,55 +222,10 @@ case class CellPairs(child: Expression, minScore: Double, topK: Int)
 }
 
 object CellPairs {
-  /** Threshold-mode blocks whose worst-case pair count m·(m−1)/2 fits
-    * under this bound emit eagerly (bulk Vector, fast iteration); larger
-    * blocks fall back to the lazy streaming iterator so per-block memory
-    * never exceeds ~EagerPairBound rows even at minScore = −∞. Each
-    * buffered row is a GenericInternalRow over a boxed Object[3] —
-    * ~100 B with object headers — so the worst-case buffer is ~13 MB at
-    * this bound. 2¹⁷ pairs ⇔ m ≤ 512 members — every corpus-scaled cell
-    * (~128 members by the k = n/128 law) sits far under it.
-    *
-    * `GRAFT_EAGER_PAIR_BOUND` overrides it for the sensitivity sweep
-    * (SCALE.md r15) — a measurement knob for local-mode probes ONLY
-    * (cluster executors read their own env, so the override would
-    * silently diverge from the driver): the committed default IS the
-    * contract. Enforced, not just documented — the override is honored
-    * only under a local master, and a malformed value falls back to the
-    * default instead of throwing NumberFormatException inside static
-    * initialization (which would surface as an opaque
-    * ExceptionInInitializerError on first use).
-    *
-    * Resolved LAZILY at first use, not at class-load, and FAIL-CLOSED:
-    * if no SparkEnv exists yet (a cluster driver that loaded this class
-    * before the session came up — exactly the case where class-load
-    * resolution used to default to "local" and honor the override), the
-    * master is treated as NON-local and the override is refused. Every
-    * real evaluation site (driver or executor) runs with a live
-    * SparkEnv, so a local-mode probe still gets its knob. */
-  lazy val EagerPairBound: Long = {
-    val isLocal = masterIsLocal(Option(org.apache.spark.SparkEnv.get)
-      .map(_.conf.get("spark.master", "")))
-    resolveEagerPairBound(sys.env.get("GRAFT_EAGER_PAIR_BOUND"), isLocal)
-  }
-
-  /** Fail-closed master classification behind [[EagerPairBound]], pure
-    * for the spec: an absent SparkEnv (None) or an unset/empty master is
-    * NOT local — the override-refusing branch — so a class loaded before
-    * the session exists can never freeze a cluster run onto a local-only
-    * measurement knob. */
-  private[graft] def masterIsLocal(master: Option[String]): Boolean =
-    master.exists(_.startsWith("local"))
-
-  /** The override-resolution rule behind [[EagerPairBound]], pure for
-    * the spec: non-local masters and malformed/non-positive values both
-    * fall back to the committed default. */
-  private[graft] def resolveEagerPairBound(
-      raw: Option[String], isLocal: Boolean): Long = {
-    val default = 1L << 17
-    if (!isLocal) default
-    else raw.flatMap(v => scala.util.Try(v.trim.toLong).toOption)
-      .filter(_ > 0)
-      .getOrElse(default)
-  }
+  /** The most threshold-mode rows one refill buffers (2^17). Each row is
+    * a GenericInternalRow over a boxed Object[3], ~100 B with headers, so
+    * a block's buffer stays under ~13 MB whatever minScore admits. A
+    * corpus-scaled cell (~128 members) has at most 8,128 pairs, so it
+    * always fits in one refill. */
+  val RefillRows: Int = 1 << 17
 }

@@ -15,12 +15,13 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, 
   * first by (−cosine, cent_id) under Spark's nan-safe struct ordering.
   *
   * An `array_min`/`sort_array` tree over one `struct(-dot/.., cid)` per
-  * cell inlines one `graft_dot` + struct per cell, so with k = ⌈n/128⌉
-  * cells the per-row cost is k·dims multiply-adds PLUS k struct
-  * allocations and O(k·dims) of generated expression tree — n·k total
-  * work that fit exponents >1 on the scale ladder (sim_knn_graph e≈1.3,
-  * dd_semantic e≈1.16 on the 10×→30× segment), and made the first
-  * multi-probe frontier measurement 13× instead of ~4×. This expression
+  * cell inlines one `graft_dot` + struct per cell, so with corpus-scaled
+  * k (`Similarity.corpusCells`) the per-row cost is k·dims multiply-adds
+  * PLUS k struct allocations and O(k·dims) of generated expression tree
+  * — n·k total work that fit exponents >1 on the scale ladder
+  * (sim_knn_graph e≈1.3, dd_semantic e≈1.16 on the 10×→30× segment),
+  * and made the first multi-probe frontier measurement 13× instead of
+  * ~4×. This expression
   * keeps the identical semantics but:
   *
   *  - holds the codebook as PRIMITIVE arrays in a serialized model

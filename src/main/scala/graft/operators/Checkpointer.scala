@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.storage.StorageLevel
 
@@ -46,8 +47,11 @@ object Checkpointer {
       case Some(d) =>
         val sc = spark.sparkContext
         // setCheckpointDir mints a fresh UUID subdir per call; only
-        // (re)set when the configured root actually changed
-        if (!sc.getCheckpointDir.exists(_.contains(d))) sc.setCheckpointDir(d)
+        // (re)set when the configured root is not that subdir's parent
+        val root = new Path(d)
+        val qualified = root.getFileSystem(sc.hadoopConfiguration).makeQualified(root)
+        if (!sc.getCheckpointDir.exists(c => new Path(c).getParent == qualified))
+          sc.setCheckpointDir(d)
         val cached = df.persist(StorageLevel.MEMORY_AND_DISK)
         val ck = cached.checkpoint(true)
         cached.unpersist(false)

@@ -63,7 +63,14 @@ object Iterate {
         progress: DataFrame => DataFrame = identity): (DataFrame, Long) = {
       val ck = Checkpointer.truncate(plan)
       marks ++= rdds(ck)
-      (ck, progress(ck).queryExecution.toRdd.count())
+      // the count runs outside any SQL execution, so the AQE stages it
+      // submits from a pool thread carry no execution id; a job
+      // description (restored after) is what names them in a profile
+      val sc = plan.sparkSession.sparkContext
+      val outer = sc.getLocalProperty("spark.job.description")
+      sc.setJobDescription("count at Iterate.mark")
+      try (ck, progress(ck).queryExecution.toRdd.count())
+      finally sc.setJobDescription(outer)
     }
 
     /** Mark `init` as the state, then run rounds 1 to `maxRounds`: round

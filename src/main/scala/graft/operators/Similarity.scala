@@ -405,7 +405,7 @@ object Similarity {
     * primitive loop, and with k ≥ 32 cells a driver-computed √k grouping
     * prunes whole groups by a Cauchy-Schwarz bound — typical per-row work
     * drops from k·dims to ~(√k + k/√k)·dims, which is what keeps the
-    * corpus-scaled codebooks (k = ⌈n/128⌉) from fitting a quadratic n·k
+    * corpus-scaled codebooks ([[corpusCells]]) from fitting a quadratic n·k
     * assignment term on the scale ladder. `probeGroups = 0` is the exact
     * path (see [[semanticNearDupPairs]] for the probed one).
     *
@@ -433,8 +433,11 @@ object Similarity {
     * bound. Same determinism contract as [[topK]]: scores round to 6dp
     * BEFORE ranking, ties break id asc. Items alone in their cell emit no
     * edges (by design — raise `centroids` resolution to densify). Callers
-    * should scale `centroids` with the corpus (~n/128, as `sim_knn_graph`
-    * does): a fixed count makes cell size ∝ n and the pairing quadratic.
+    * should scale `centroids` with the corpus ([[corpusCells]], as
+    * `sim_knn_graph` does): a fixed count makes cell size ∝ n and the
+    * pairing quadratic. Blocking is [[cellBlocked]] over first-k coarse
+    * codebooks, one block per vector (no L1 multi-probe: a vector in two
+    * blocks would rank its neighbours twice).
     * `idCol` must be integral (ids travel as primitive bigint through the
     * pair generator — see [[requireLongCastableId]]); map string/UUID ids
     * to a surrogate bigint first. */
@@ -442,22 +445,12 @@ object Similarity {
       k: Int, centroids: Int = 16, probeGroups: Int = 0,
       maxDriverCells: Int = MaxDriverCells): DataFrame = {
     requireLongCastableId(emb, idCol, "knnGraph")
-    val (cells, cell) =
-      if (centroids > maxDriverCells) {
-        // corpus-scaled cell counts outgrow the driver (see
-        // MaxDriverCells): block by the two-level composite cell instead
-        // — same ~128-member cells, O(√k) driver state
-        val k1 = math.ceil(math.sqrt(centroids.toDouble)).toInt
-        val m2 = math.ceil(centroids.toDouble / k1).toInt
-        val l1 = coarseCodebookOf(emb, idCol, vecCol, k1)
-        (withNorm(twoLevelClustered(emb, idCol, vecCol, l1, m2,
-          probeGroups = probeGroups), vecCol), col("__cell"))
-      } else {
-        val codebook = coarseCodebookOf(emb, idCol, vecCol, centroids)
-        (withNorm(emb, vecCol).withColumn("cent_id", cellCol(codebook, probeGroups)),
-          col("cent_id"))
-      }
-    inCellPairs(cells, idCol, cell, 0.0, k, Seq(idCol, "vec_id_n", "rank", "score_r"))
+    cellBlocked(emb, idCol, vecCol, centroids,
+        coarseCodebookOf(emb, idCol, vecCol, _), probeGroups,
+        maxDriverCells = maxDriverCells) { cells =>
+      inCellPairs(withNorm(cells, vecCol), idCol, col("__cell"), 0.0, k,
+        Seq(idCol, "vec_id_n", "rank", "score_r"))
+    }
   }
 
   /** Per-doc PQ codes for every subspace starting at `starts` in one fused
@@ -561,13 +554,14 @@ object Similarity {
     * the groupBy shuffles the corpus once on the cluster id, and each
     * cluster's pair count is bounded by (corpus/centroids)² per cell —
     * at 100 TB you raise `centroids` so cells stay bounded (the paper
-    * uses k ≈ √n) and train on a [[Sampling.bernoulli]] slice.
+    * uses k ≈ √n) and train on a [[Sampling.bernoulli]] slice. Blocking
+    * is [[cellBlocked]] with L1 multi-probe P = 2 on its two-level branch.
     *
     * `probeGroups` is the assignment-cost contract for corpus-scaled k
-    * (the 1000× ladder finding): the EXACT argmax is n·k — k = n/128
-    * makes it quadratic, and the triangle-inequality prune is provably
-    * vacuous for vectors whose best similarity is below the group radii
-    * (most of a decorrelated corpus). With probeGroups = p > 0 each
+    * (the 1000× ladder finding): the EXACT argmax is n·k — the corpus
+    * law ([[corpusCells]]) makes it quadratic, and the triangle-inequality
+    * prune is provably vacuous for vectors whose best similarity is below
+    * the group radii (most of a decorrelated corpus). With probeGroups = p > 0 each
     * vector is assigned within the p best-bound pruning groups only
     * (≈ p·√k of k cells evaluated) — the faiss-style IVF assignment
     * SemDeDup itself ships. Still fully deterministic (no RNG; nan-safe
@@ -585,50 +579,12 @@ object Similarity {
   def semanticNearDupPairs(
       emb: DataFrame, idCol: String, vecCol: String, minScore: Double,
       centroids: Int = 16, iters: Int = 2,
-      codebookOpt: Option[Codebook] = None,
       probeGroups: Int = 0,
-      maxDriverCells: Int = MaxDriverCells): DataFrame = {
-    // Above maxDriverCells the single-level codebook is no longer a
-    // model artifact (k = n/128 grows with the corpus): switch to the
-    // two-level form — L1 trains at ⌈√k⌉ on the driver, L2 refines
-    // distributively, blocking key = the composite (l1, l2) cell. Same
-    // ~k blocks / ~128-member-cells law, O(√k) driver state. The bound
-    // is parameterized only so specs can exercise the branch with sane
-    // cell geometry on small frames; production callers keep the default.
-    if (codebookOpt.isEmpty && centroids > maxDriverCells) {
-      val k1 = math.ceil(math.sqrt(centroids.toDouble)).toInt
-      val m2 = math.ceil(centroids.toDouble / k1).toInt
-      val l1 = trainCodebook(emb, idCol, vecCol, k1, iters,
-        probeGroups = probeGroups)
-      // L1 MULTI-PROBE, default on for this branch (r17 nd-fixture
-      // probes): two-level recall loss vs single-level is almost
-      // entirely L1 hard-assignment straddling (truth pairs co-block at
-      // L1 0.57 vs 0.55 full-cell at the ≥ 0.8 stratum, nd30), and
-      // probing each vector's top-2 L1 cells recovers it — planted-truth
-      // recall 0.550 → 0.838 (nd30 ≥ 0.8; 0.663 → 0.922 at ≥ 0.9) for
-      // ~1.12× the pairs stage (16.1 → 18.1 s) once the assignment rides
-      // the graft_ivf_topp pruned kernel. A pair surfacing in both
-      // shared blocks dedups here (same (a, b, score_r) from identical
-      // vectors, so dropDuplicates is exact); the single-level branch
-      // emits each pair once and needs none of this.
-      return cosineNearDupPairs(
-        twoLevelClustered(emb, idCol, vecCol, l1, m2, iters, probeGroups,
-          l1Probes = 2),
-        idCol, vecCol, "__cell", minScore)
-        .dropDuplicates("a", "b")
-    }
-    val codebook = codebookOpt.getOrElse(
-      trainCodebook(emb, idCol, vecCol, centroids, iters))
-    // cosineNearDupPairs' groupBy on the cluster key is the ONE exchange
-    // of this operator — the argmax assignment evaluates once per row on
-    // the map side of that aggregate (no barrier repartition needed: the
-    // old self-join form required one to stop the planner duplicating
-    // the assignment subtree into both join sides). One wide exchange +
-    // in-cell generator pairing is the 100 TB shape.
-    cosineNearDupPairs(
-      semanticClustered(emb, idCol, vecCol, codebook, probeGroups),
-      idCol, vecCol, "__cell", minScore)
-  }
+      maxDriverCells: Int = MaxDriverCells): DataFrame =
+    cellBlocked(emb, idCol, vecCol, centroids,
+        trainCodebook(emb, idCol, vecCol, _, iters, probeGroups = probeGroups),
+        probeGroups, l1Probes = 2, iters, maxDriverCells)(
+      cosineNearDupPairs(_, idCol, vecCol, "__cell", minScore))
 
   /** Cluster-assignment half of [[semanticNearDupPairs]]: each vector
     * plus its nearest-centroid cell id `__cell` (narrow broadcast-literal
@@ -674,13 +630,64 @@ object Similarity {
   }
 
   /** Cells a single-level codebook may hold as a DRIVER artifact before
-    * the corpus-scaled law (k = n/128) must switch to the two-level
-    * form: 2^16 cells × 64 dims × 8 B = 32 MB of driver/plan state. At
-    * 100 TB (~2×10^11 vectors) single-level k would be ~1.5×10^9 cells —
-    * a corpus-sized "model" no driver or broadcast holds; two-level
-    * holds k1 = ⌈√k⌉ (~39k cells, 20 MB) on the driver and keeps the
+    * [[cellBlocked]] switches to the two-level form: 2^16 cells × 64 dims
+    * × 8 B = 32 MB of driver/plan state. At 100 TB (~2×10^11 vectors) the
+    * corpus law would ask for ~1.5×10^9 single-level cells — a
+    * corpus-sized "model" no driver or broadcast holds; two-level holds
+    * k1 = ⌈√k⌉ (~39k cells, 20 MB) on the driver and keeps the
     * k2-per-cell fine level DISTRIBUTED. */
   val MaxDriverCells: Int = 1 << 16
+
+  /** The corpus cell law of the in-cell cosine family: k = max(16,
+    * ⌈n/128⌉) cells for n vectors keeps cells near 128 members, so
+    * in-cell candidate pairs stay LINEAR in n (a fixed k makes them
+    * quadratic — measured at sf1: 12.5M candidates for 10x the sf0.1
+    * data). At every oracle scale n/128 < 16, so k = 16. */
+  def corpusCells(n: Long): Int = math.max(16, math.ceil(n / 128.0).toInt)
+
+  /** The one blocking step of the in-cell cosine family
+    * ([[semanticNearDupPairs]], [[knnGraph]] and `dd_semantic`): assigns
+    * every vector to one of `cells` blocks and hands the (idCol, vecCol,
+    * __cell) frame to `pairs`, the caller's in-cell pairing. Callers size
+    * `cells` by [[corpusCells]] (~128 members per cell); the pair
+    * generator ([[graft.expressions.CellPairs]]) materializes one cell
+    * per task.
+    *
+    * Up to [[MaxDriverCells]] cells the codebook is `train(cells)`, a
+    * driver artifact, and the assignment is [[semanticClustered]]'s
+    * narrow nearest-cell kernel. Above it, blocking is
+    * [[twoLevelClustered]]: L1 is `train(k1)` with k1 = ⌈√cells⌉, and
+    * m2 = ⌈cells/k1⌉ sub-cells per L1 cell refine distributively by
+    * `iters` Lloyd rounds — the same ~cells blocks, O(√cells) driver
+    * state. `train` gets the cell count it must produce, so a caller can
+    * memoize one artifact per count. `maxDriverCells` is a parameter only
+    * so specs can run the two-level branch on small frames. On the
+    * single-level branch the pairing's groupBy on `__cell` is the one
+    * exchange: the assignment runs once per row on the map side of that
+    * aggregate, so no barrier repartition is needed.
+    *
+    * `l1Probes` = P > 1 (two-level only) places each vector in its top-P
+    * L1 cells. Two-level recall loss against single-level is almost all
+    * L1 hard-assignment straddling, and P = 2 recovered it on the r17
+    * near-dup fixture (planted-truth recall 0.550 → 0.838 at the ≥ 0.8
+    * stratum, nd30) for ~1.12× the pairs stage. A pair that shares two
+    * blocks then surfaces twice, so `pairs` must emit (a, b, …) rows and
+    * this step drops the repeats by (a, b); the copies are identical
+    * (same vectors, same score), so the drop is exact. */
+  def cellBlocked(emb: DataFrame, idCol: String, vecCol: String,
+      cells: Int, train: Int => Codebook, probeGroups: Int = 0,
+      l1Probes: Int = 1, iters: Int = 2,
+      maxDriverCells: Int = MaxDriverCells)(
+      pairs: DataFrame => DataFrame): DataFrame =
+    if (cells <= maxDriverCells)
+      pairs(semanticClustered(emb, idCol, vecCol, train(cells), probeGroups))
+    else {
+      val k1 = math.ceil(math.sqrt(cells.toDouble)).toInt
+      val m2 = math.ceil(cells.toDouble / k1).toInt
+      val blocked = pairs(twoLevelClustered(emb, idCol, vecCol, train(k1), m2,
+        iters, probeGroups, l1Probes))
+      if (l1Probes > 1) blocked.dropDuplicates("a", "b") else blocked
+    }
 
   /** TWO-LEVEL blocking assignment — the 100 TB form of
     * [[semanticClustered]] (see [[MaxDriverCells]] for the law). Level 1
@@ -768,8 +775,8 @@ object Similarity {
         .withColumn("__cn", sqrt(dot(col("__cv"), col("__cv"))))
     }
     // l1Probes = P > 1 re-blocks each vector into its top-P L1 cells for
-    // the FINAL assignment only (default 1; semanticNearDupPairs' two-
-    // level branch and LlmOps.semanticPairs run P = 2 in production).
+    // the FINAL assignment only (default 1; cellBlocked's near-dup
+    // callers run P = 2 and own the (a, b) dedup it requires).
     // The nd-fixture recall probe attributed the two-level branch's
     // near-dup loss almost entirely to L1 hard assignment (truth pairs
     // co-block at L1 0.676 vs 0.664 at the full cell, ≥ 0.8 stratum,
@@ -816,7 +823,8 @@ object Similarity {
     * flops of actual scoring (124 s of the 191 s dd_semantic sample).
     * Blocks materialize per task, so the CALLER owns the block-size
     * bound — both call sites scale their key's cardinality with the
-    * corpus (cells via k = n/128, sign-bit blocks via signBlockBits). */
+    * corpus (cells via [[corpusCells]], sign-bit blocks via
+    * [[signBlockBits]]). */
   def cosineNearDupPairs(
       emb: DataFrame, idCol: String, vecCol: String,
       blockCol: String, minScore: Double): DataFrame = {

@@ -140,8 +140,9 @@ object Analytics {
       .filter(col("support") >= support)
   }
 
-  /** Shared co-purchase edge phase of the three graph queries
-    * (an_pagerank / an_bfs_hops / an_sssp): support≥2 part pairs over
+  /** Shared co-purchase edge phase of the graph queries (an_bfs_hops /
+    * an_sssp / an_triangles; an_pagerank runs the same pairs through the
+    * lazy [[basketPairsPlan]]): support≥2 part pairs over
     * orders, i.e. exactly [[basketPairs]] with the mega-basket guard
     * disabled (these queries' oracles replay UNguarded pair semantics —
     * Int.MaxValue keeps the contract byte-identical; at TPC-H shapes
@@ -362,40 +363,28 @@ object Analytics {
       // The edge list is referenced 3× by the wedge join and the wedge
       // join 3× by the node union — left lazy, Catalyst inlines the
       // whole pipeline NINE times (18 lineitem scans in the sf30 plan,
-      // with only runtime stage-reuse to deduplicate them), and every
-      // ENSURE_REQUIREMENTS shuffle (the distinct and the wedge
-      // aggregate — the spill sites at 300×, SCALE.md r12) stays at the
-      // session width no matter what the join inputs are repartitioned
-      // to. So the heavy phase materializes ONCE, inside a conf scope
-      // whose shuffle width tracks the scanned bytes (identical to the
-      // iterative operators' contract, Parallelism.materialize): the
-      // registered-scratch persist + count executes the distinct, the
-      // self-join, the support aggregate, and the wedge join at the
-      // derived width; the deferred tail (node union + count + top-20)
-      // reads the cached triangle table, which is triangle-sized, not
+      // with only runtime stage-reuse to deduplicate them). So the edges
+      // are the shared co-purchase pairs (coPurchaseEdges: materialized
+      // once at their own derived width, registered scratch), and the
+      // wedge join materializes ONCE inside a conf scope whose shuffle
+      // width tracks the scanned bytes (Parallelism.materialize): its
+      // ENSURE_REQUIREMENTS shuffles (the wedge aggregate — a spill
+      // site at 300×, SCALE.md r12) would otherwise stay at the session
+      // width. The deferred tail (node union + count + top-20) reads the
+      // cached triangle table, which is triangle-sized, not
       // fact-table-sized. Verify's releaseScratch and Bench's per-sample
-      // releaseAllCaches barrier drop it, so every sample still
+      // releaseAllCaches barrier drop both, so every sample still
       // re-executes the full pipeline.
       val nP = graft.operators.Parallelism.forInputBytes(
         s, Seq(s"$d/lineitem.parquet"))
-      val li = lineitem(s, d).select(col("l_orderkey"), col("l_partkey"))
-        .distinct()
-      val a = li.select(col("l_orderkey"), col("l_partkey").as("part_a"))
-      val b = li.select(col("l_orderkey"), col("l_partkey").as("part_b"))
-      val edges = a.join(b, "l_orderkey")
-        .filter(col("part_a") < col("part_b"))
-        .groupBy("part_a", "part_b")
-        .agg(count(lit(1)).as("support"))
-        .filter(col("support") >= 2)
+      val edges = coPurchaseEdges(s, d)
         .select(col("part_a").as("u"), col("part_b").as("v"))
       val tri = graft.operators.Parallelism.materialize(s, nP) {
-        edges.persist() // planned in the scope, dropped once tri is built
         edges.select(col("u").as("x"), col("v").as("y"))
           .join(edges.select(col("u").as("y"), col("v").as("z")), "y")
           .join(edges.select(col("u").as("x"), col("v").as("z")),
             Seq("x", "z"), "left_semi")
       }
-      edges.unpersist(blocking = false)
       tri.select(col("x").as("node"))
         .unionByName(tri.select(col("y").as("node")))
         .unionByName(tri.select(col("z").as("node")))

@@ -26,61 +26,28 @@ object LlmOps {
   // pay scan+score, not retraining. The oracle still replays the training
   // math on every Verify run, so a wrong cache cannot pass.
 
-  /** SemDeDup's blocking codebook, cells sized to the corpus: k =
-    * max(16, ⌈n/128⌉) bounds cells to ~128 vectors so within-cell
-    * candidate pairs stay LINEAR in n (fixed k makes them quadratic —
-    * measured at sf1: 12.5M candidates for 10x the sf0.1 data). At the
-    * oracle scales n/128 < 16, so k = 16 and the codebook — and every
-    * oracle-checked result — is bit-identical to the fixed cb16x2 one
-    * the sim_topk_*_trained queries share (same memo key then). The
-    * count is a parquet metadata read, not a scan. */
-  private def semanticCodebook(s: SparkSession, d: String) = {
-    val emb = embeddings(s, d)
-    val k = math.max(16, math.ceil(emb.count() / 128.0).toInt)
-    // probeGroups = 8 above the oracle envelope (k >= 32): Lloyd's own
-    // per-iteration assignment is the same n·k argmax the query pays, so
-    // training probes too — the corpus-scaled-k cost contract documented
-    // on Similarity.semanticNearDupPairs. Inert at every oracle scale
-    // (k = 16 there, one flat group), so the memoized codebook stays
-    // bit-identical to the oracle's replayed training.
-    // memo key carries EVERY training hyperparameter, probeGroups
-    // included: probing changes the trained artifact whenever k >= 32,
-    // so a probed codebook must never alias an exact-path one trained
-    // at the same k (inert at k = 16, but the key must not rely on that)
-    emb -> Artifacts.fixtureMemo(d, s"cb${k}x2p8") {
-      Similarity.trainCodebook(emb, "vec_id", "embedding", k, 2,
-        probeGroups = 8) }
-  }
-
-  /** The SemDeDup pair stream with the DRIVER-MEMORY LAW applied: below
-    * [[Similarity.MaxDriverCells]] (every current fixture, sf100's
-    * k = 15,625 included) the single-level memoized codebook; above it,
-    * the two-level form — L1 trained at ⌈√k⌉ (driver O(√k)), L2 refined
-    * distributively, blocking on the composite cell. Shared by
-    * dd_semantic and dd_semantic_keep so both switch together. */
+  /** The SemDeDup pair stream shared by dd_semantic and
+    * dd_semantic_keep: [[Similarity.cellBlocked]] at the corpus cell count
+    * ([[Similarity.corpusCells]]), with L1 multi-probe P = 2 should the
+    * count pass [[Similarity.MaxDriverCells]]. The trainer memoizes one
+    * codebook per cell count (the single-level codebook, or the two-level
+    * L1 one). The count is a parquet metadata read, not a scan.
+    *
+    * Training probes 8 groups: Lloyd's own per-iteration assignment is
+    * the same n·k argmax the query pays. The memo key carries every
+    * training hyperparameter, so a probed codebook never aliases an
+    * exact one trained at the same k. At every oracle scale k = 16 keeps
+    * one flat group, so probing is inert and the memoized codebook is
+    * the oracle's replayed training bit for bit. */
   private def semanticPairs(s: SparkSession, d: String): (DataFrame, DataFrame) = {
     val emb = embeddings(s, d)
-    val k = math.max(16, math.ceil(emb.count() / 128.0).toInt)
-    if (k > Similarity.MaxDriverCells) {
-      val k1 = math.ceil(math.sqrt(k.toDouble)).toInt
-      val m2 = math.ceil(k.toDouble / k1).toInt
-      val l1 = Artifacts.fixtureMemo(d, s"cb2l${k1}x2p8") {
-        Similarity.trainCodebook(emb, "vec_id", "embedding", k1, 2,
-          probeGroups = 8) }
-      // L1 multi-probe P=2 + (a, b) dedup — the r17 recall fix (planted-
-      // truth recall 0.550 → 0.838 at the ≥ 0.8 stratum for ~1.12× the
-      // pairs stage; see Similarity.semanticNearDupPairs' two-level
-      // branch, which this mirrors, and SCALE.md r17)
-      emb -> Similarity.cosineNearDupPairs(
-        Similarity.twoLevelClustered(emb, "vec_id", "embedding", l1, m2,
-          probeGroups = 8, l1Probes = 2),
-        "vec_id", "embedding", "__cell", 0.35)
-        .dropDuplicates("a", "b")
-    } else {
-      val (e, cb) = semanticCodebook(s, d)
-      e -> Similarity.semanticNearDupPairs(e, "vec_id", "embedding", 0.35,
-        codebookOpt = Some(cb), probeGroups = 8)
-    }
+    emb -> Similarity.cellBlocked(emb, "vec_id", "embedding",
+        Similarity.corpusCells(emb.count()),
+        k => Artifacts.fixtureMemo(d, s"cb${k}x2p8") {
+          Similarity.trainCodebook(emb, "vec_id", "embedding", k, 2,
+            probeGroups = 8) },
+        probeGroups = 8, l1Probes = 2)(
+      Similarity.cosineNearDupPairs(_, "vec_id", "embedding", "__cell", 0.35))
   }
 
   /** (doc_id, gram): every distinct 5-word shingle of every document,
@@ -273,7 +240,7 @@ object LlmOps {
     // replays BOTH training iterations, the argmax assignment, and the
     // pair scores.
     // codebook memoized per (k, iters, probeGroups, fixture) — see
-    // semanticCodebook; retraining it per invocation was the query's
+    // semanticPairs; retraining it per invocation was the query's
     // dominant cost. (No longer key-shared with the sim_topk_*_trained
     // cb16x2 entry: the probed artifact gets its own key even where the
     // two coincide bit-for-bit at k = 16.)
@@ -371,8 +338,8 @@ object LlmOps {
     // k-NN GRAPH over ALL items (not a probe set), IVF-cell-blocked —
     // the SemDeDup / graph-curation precursor. Never all-pairs: items
     // pair only within their cell. Cell count scales with the corpus
-    // (~128 items/cell, same law as semanticCodebook) so the within-cell
-    // self-join stays linear in n — a fixed 16 went quadratic at sf3
+    // (Similarity.corpusCells, as in semanticPairs) so the within-cell
+    // pairing stays linear in n — a fixed 16 went quadratic at sf3
     // (13.8 s → 104.5 s for 3× data). Equals the oracle's fixed 16 at
     // all oracle scales (n ≤ 2048); the count is a parquet metadata read.
     // probeGroups = 8: above the oracle envelope (cells >= 32) the cell
@@ -381,15 +348,14 @@ object LlmOps {
     // Similarity.semanticNearDupPairs; inert at every oracle scale.
     "sim_knn_graph" -> ((s, d) => {
       val emb = embeddings(s, d)
-      val cells = math.max(16, math.ceil(emb.count() / 128.0).toInt)
       Similarity.knnGraph(emb, "vec_id", "embedding", k = 3,
-          centroids = cells, probeGroups = 8)
+          centroids = Similarity.corpusCells(emb.count()), probeGroups = 8)
         .orderBy("vec_id", "rank")
     }),
 
     // The PROBED approximate cell assignment ON the hash gate — the
     // branch every at-scale assignment takes (corpus-scaled codebooks,
-    // see semanticCodebook) and the one the k = 16 gate queries never
+    // see semanticPairs) and the one the k = 16 gate queries never
     // execute (one flat group there). k = max(72, ceil(n/64)) forces
     // ceil(sqrt(k)) = 9 pruning groups > probeGroups = 8 at EVERY gate
     // scale (n = 500/500/2000 -> k = 72), so graft_ivf_topp runs the
@@ -413,11 +379,12 @@ object LlmOps {
     }),
 
     // The TWO-LEVEL assignment on the hash gate — the form the
-    // driver-memory law switches to above MaxDriverCells (k = n/128
-    // outgrows any driver artifact at 100 TB; see semanticPairs). L1 is
-    // a first-8 coarse codebook; L2 sub-centroids init to the first 8
-    // members per L1 cell and refine by 2 DISTRIBUTED fixed-point Lloyd
-    // rounds (the fine codebook never visits the driver); assignment is
+    // driver-memory law switches to above MaxDriverCells (the corpus
+    // cell count outgrows any driver artifact at 100 TB; see
+    // Similarity.cellBlocked). L1 is a first-8 coarse codebook; L2
+    // sub-centroids init to the first 8 members per L1 cell and refine
+    // by 2 DISTRIBUTED fixed-point Lloyd rounds (the fine codebook never
+    // visits the driver); assignment is
     // the co-partitioned join + min(struct) argmax. The oracle replays
     // every stage — L1 argmax, L2 init ranks, both Lloyd rounds
     // (fixed-point means, sub-cells dropping when emptied), the final

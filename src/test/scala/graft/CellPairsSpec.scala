@@ -54,24 +54,40 @@ class CellPairsSpec extends SparkSpec {
     }
   }
 
-  test("lazy branch above the eager pair bound matches the join " +
-    "formulation") {
-    // 513 members in ONE block: 513·512/2 = 131,328 worst-case pairs —
-    // just over EagerPairBound (2^17 = 131,072), so this is the streaming
-    // iterator's path; the small-fixture tests above all take the eager
-    // buffer. Unit vectors at golden-angle increments give a spread of
-    // scores so the threshold actually filters.
-    assert(513L * 512 / 2 > graft.expressions.CellPairs.EagerPairBound)
-    val big = (0 until 513).map { i =>
-      val th = i * 2.399963
-      (i.toLong, Array(math.cos(th).toFloat, math.sin(th).toFloat), "w")
-    }.toDF("vec_id", "embedding", "blk")
+  /** `n` unit vectors in ONE block, at golden-angle increments so the
+    * scores spread and a threshold actually filters. */
+  private def oneBlock(n: Int) = (0 until n).map { i =>
+    val th = i * 2.399963
+    (i.toLong, Array(math.cos(th).toFloat, math.sin(th).toFloat), "w")
+  }.toDF("vec_id", "embedding", "blk")
+
+  test("a block whose worst case exceeds the refill bound matches the " +
+    "join formulation") {
+    // 513 members: 513·512/2 = 131,328 candidate pairs, just over
+    // RefillRows (2^17 = 131,072); the threshold keeps far fewer, so one
+    // refill walks every candidate. The small fixtures above never come
+    // near the bound.
+    assert(513L * 512 / 2 > graft.expressions.CellPairs.RefillRows)
     val gen = Similarity.cosineNearDupPairs(
-      big, "vec_id", "embedding", "blk", 0.95)
+      oneBlock(513), "vec_id", "embedding", "blk", 0.95)
       .orderBy("a", "b").collect().toSeq
-    val join = joinFormPairs(big, 0.95)
+    val join = joinFormPairs(oneBlock(513), 0.95)
       .orderBy("a", "b").collect().toSeq
     assert(gen.nonEmpty && gen === join)
+  }
+
+  test("a block with more passing pairs than the refill bound streams " +
+    "them seamlessly across refills") {
+    // 600 members at minScore -1: all 179,700 pairs pass, so the emitter
+    // refills twice; the rows must equal the join form's, none lost or
+    // repeated at the refill boundary
+    val passing = 600L * 599 / 2
+    assert(passing > graft.expressions.CellPairs.RefillRows)
+    val gen = Similarity.cosineNearDupPairs(
+      oneBlock(600), "vec_id", "embedding", "blk", -1.0)
+    val join = joinFormPairs(oneBlock(600), -1.0)
+    assert(gen.count() === passing)
+    assert(gen.exceptAll(join).isEmpty && join.exceptAll(gen).isEmpty)
   }
 
   test("zero-norm member yields NaN score (join form raises under ANSI)") {
@@ -127,40 +143,5 @@ class CellPairsSpec extends SparkSpec {
     // and the identical pair ranks each other first at score 1.0
     val for0 = got.filter(_.getLong(0) == 0L).sortBy(_.getInt(2))
     assert(for0.head.getLong(1) === 2L && for0.head.getDouble(3) === 1.0)
-  }
-
-  test("EagerPairBound override resolution: malformed and non-positive " +
-    "values fall back, non-local masters ignore the knob (r15 ADVICE)") {
-    import graft.expressions.CellPairs.resolveEagerPairBound
-    val default = 1L << 17
-    // a malformed env value must NOT throw (it previously surfaced as an
-    // opaque ExceptionInInitializerError inside static init)
-    assert(resolveEagerPairBound(Some("not-a-number"), isLocal = true)
-      === default)
-    assert(resolveEagerPairBound(Some(""), isLocal = true) === default)
-    assert(resolveEagerPairBound(Some("-5"), isLocal = true) === default)
-    assert(resolveEagerPairBound(Some("0"), isLocal = true) === default)
-    // valid local override honored (the sensitivity-sweep knob)
-    assert(resolveEagerPairBound(Some("32768"), isLocal = true) === 32768L)
-    assert(resolveEagerPairBound(Some(" 1024 "), isLocal = true) === 1024L)
-    // the knob is local-only: on a cluster master the executors would
-    // read their OWN env and silently diverge from the driver, so the
-    // override is refused outright
-    assert(resolveEagerPairBound(Some("32768"), isLocal = false) === default)
-    assert(resolveEagerPairBound(None, isLocal = true) === default)
-  }
-
-  test("master classification is fail-closed: absent SparkEnv / unset " +
-    "master is NOT local, so the override can never leak onto a cluster " +
-    "driver that loaded the class before the session (r16 ADVICE)") {
-    import graft.expressions.CellPairs.masterIsLocal
-    assert(!masterIsLocal(None)) // no SparkEnv yet — the old bug honored it
-    assert(!masterIsLocal(Some(""))) // env up, master unset in its conf
-    assert(!masterIsLocal(Some("spark://host:7077")))
-    assert(!masterIsLocal(Some("yarn")))
-    assert(!masterIsLocal(Some("k8s://https://host")))
-    assert(masterIsLocal(Some("local")))
-    assert(masterIsLocal(Some("local[32]")))
-    assert(masterIsLocal(Some("local-cluster[2,1,1024]")))
   }
 }

@@ -96,4 +96,23 @@ class IterateSpec extends SparkSpec {
     assert(counts == Seq(1, 1))
     Dedup.releaseAllCaches(spark)
   }
+
+  test("Checkpointer applies a new checkpoint dir that is a prefix of the current one") {
+    import graft.operators.Checkpointer
+    val tmp = java.nio.file.Files.createTempDirectory("graft-ck-prefix")
+    val sc = spark.sparkContext
+    def truncateUnder(dir: java.nio.file.Path): String = {
+      spark.conf.set(Checkpointer.DirKey, dir.toString)
+      try Checkpointer.truncate(spark.range(3).toDF()).count()
+      finally spark.conf.unset(Checkpointer.DirKey)
+      sc.getCheckpointDir.get
+    }
+    val old = tmp.resolve("ck-old")
+    val now = tmp.resolve("ck")
+    assert(truncateUnder(old).contains(old.toString))
+    val second = truncateUnder(now)
+    assert(!second.contains(old.toString), s"still checkpointing under $second")
+    assert(new org.apache.hadoop.fs.Path(second).getParent.toUri.getPath == now.toString)
+    assert(java.nio.file.Files.isDirectory(now))
+  }
 }

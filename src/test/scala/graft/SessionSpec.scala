@@ -55,6 +55,22 @@ class SessionSpec extends SparkSpec {
       "awaitTermination must sit inside runStream")
   }
 
+  test("only the mains, Session and the etl config read the environment in src/main") {
+    assert(mainSourcesMatching("sys\\.env|System\\.getenv") == Seq("graft/Bench.scala",
+      "graft/Probe.scala", "graft/Session.scala", "graft/queries/EtlQueries.scala"))
+  }
+
+  test("MaxDriverCells is compared in exactly one method, the blocking step") {
+    val comparison = "(?i)[<>]=?\\s*(\\w+\\.)*maxDriverCells\\b|\\bmaxDriverCells\\s*[<>]".r
+    assert(mainSourcesMatching(comparison.regex) == Seq("graft/operators/Similarity.scala"))
+    val src = new String(Files.readAllBytes(
+      Paths.get("src/main/scala/graft/operators/Similarity.scala")), "UTF-8")
+    val hits = comparison.findAllMatchIn(src).map(_.start).toSeq
+    assert(hits.size == 1, s"${hits.size} MaxDriverCells comparisons")
+    val method = "\\n  def (\\w+)".r.findAllMatchIn(src.take(hits.head)).toSeq.last.group(1)
+    assert(method == "cellBlocked")
+  }
+
   test("only Session and Parallelism set spark.sql.shuffle.partitions in src/main") {
     assert(mainSourcesMatching(
       "\"spark\\.sql\\.shuffle\\.partitions\"|SQLConf\\.SHUFFLE_PARTITIONS") ==
@@ -95,6 +111,11 @@ class SessionSpec extends SparkSpec {
     assert(profile.linesIterator.toSeq.lastOption.exists(codegenLine.matches), profile)
     val plan = Probe.run(spark, "explain", "a1_group_count", 1, Sf)
     assert(plan.contains("== Physical Plan =="), plan)
+    // AQE map-stage jobs run on a pool thread; they are labeled by their
+    // SQL execution, not by that thread's call site
+    val iterative = Probe.run(spark, "profile", "an_bfs_hops", 1, Sf)
+    assert(iterative.contains("driver gap"), iterative)
+    assert(!iterative.contains("CompletableFuture"), iterative)
     assert(!spark.sparkContext.isStopped)
   }
 
